@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main: times every declared query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is fully materialized via a noop-format
@@ -11,60 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Parsed once with a clear error: "local[*]"-style values are not
-    // usable here because the AQE initialPartitionNum default below
-    // needs a concrete core count.
-    val nCpus = try cpus.toInt catch {
-      case _: NumberFormatException => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS must be an integer core count, got '$cpus'")
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE can only coalesce partitions DOWN: with initialPartitionNum
-      // unset every exchange is pinned to shuffle.partitions (=cores)
-      // partitions, so partition VOLUME grows linearly with the data.
-      // Over-partitioning 8x and letting AQE coalesce to its 64MB
-      // advisory size makes partition SIZE the bounded quantity at
-      // every scale. Measured (tools/PartsProbe, same-JVM interleaved
-      // A/B on the four heaviest sf10 queries): quiet-host min is
-      // NEUTRAL (0.94-1.04x — the r8 sf3->sf10 "knee" was mostly host
-      // load billed to the bench, q50's quiet min is ~43s under either
-      // setting, not the 77s bench row), but under concurrent load the
-      // medians drop hard (q22 69.9->44.1s, q50 50.8->45.9s): smaller
-      // partitions cut straggler exposure, which is also the
-      // multi-executor argument. SQLConf.numShufflePartitions returns
-      // this value whenever AQE+coalesce are on, so user
-      // repartition(col) exchanges get it too.
-      //
-      // Gated on input size since round 10: on small inputs the fan-out
-      // never materializes a size win (everything coalesces straight
-      // back down) but still pays per-exchange scheduling overhead —
-      // the shipped-ungated knob cost +2.7% on the 17 MB sf0.1 suite
-      // (r8→r9 A/B in SCALE.md). ≥1 GiB keeps it for the scale regime
-      // the knob was built for. SPARK_GRAFT_INIT_PARTS pins it either
-      // way for knob-identical cross-scale bench points.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS",
-          if (GraftSession.inputBytes(sfDir) >= GraftSession.overPartitionBytes)
-            (8 * nCpus).toString
-          else cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      // collect_list-family aggregations (ObjectHashAggregate) fall back
-      // to sort-based aggregation after 128 distinct keys per partition
-      // by default — measured 2.3x slowdown on the ingest regroup
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      // Static conf, default 100 entries: 75 queries x several codegen
-      // units each evict the generated-class cache within one sweep, so
-      // under sweep-interleaved reps EVERY rep would pay Janino
-      // recompilation (~0.1-0.3s/query — measured as a systematic
-      // +15% on the suite total). Sized so a full sweep stays resident
-      // and the min-of-N statistic measures steady-state execution.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val nCpus = GraftSession.envCores
+    val spark = GraftSession.batch(s"local[$nCpus]", nCpus)
     spark.sparkContext.setLogLevel("WARN")
 
     def exec(df: DataFrame): Unit =
@@ -76,10 +24,16 @@ object Bench {
       .map(_.split(",").map(_.trim).toSet)
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    val errors = scala.collection.mutable.LinkedHashSet.empty[String]
+    // Failing query -> its exception class, message and cause chain.
+    // Every Throwable is recorded, not rethrown: one query dying of a
+    // StackOverflowError in planning must not cost the whole artifact.
+    // Warm-up failures are keyed "warmup:<name>", so a query that fails
+    // once and then times cleanly is visible without counting as -1.
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // Warm-up pass (untimed): JIT, codegen caches, file listing.
-    qs.foreach { case (_, fn) =>
-      try exec(fn(spark, sfDir)) catch { case _: Throwable => () }
+    qs.foreach { case (name, fn) =>
+      try exec(fn(spark, sfDir))
+      catch { case e: Throwable => errors("warmup:" + name) = describe(e) }
     }
     // Timed passes, min per query: single-pass numbers swing ±40% from
     // GC/scheduler noise in local mode. Sub-second queries swing the
@@ -94,7 +48,7 @@ object Bench {
       try {
         exec(fn(spark, sfDir))
         (System.nanoTime() - t0) / 1e9
-      } catch { case _: Throwable => errors += name; -1.0 }
+      } catch { case e: Throwable => errors(name) = describe(e); -1.0 }
     }
     // Reps are spread across full SWEEPS (rep 1 of every query, then
     // rep 2 of every query, ...) instead of run consecutively: host-load
@@ -135,7 +89,8 @@ object Bench {
     val qjson = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    val errJson = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val errJson = errors.map { case (k, v) => jsonString(k) + ":" +
+      jsonString(v) }.mkString("{", ",", "}")
     // q58's side-effecting stream→lakehouse gate runs once (memoized in
     // the warm-up pass); its wall time is reported here separately so
     // the q58 entry above measures the declared stats QUERY only.
@@ -148,7 +103,7 @@ object Bench {
     val maintS = graft.testqueries.LayoutQueries
       .maintGateMillis.get() / 1000.0
     // Executed-scale evidence rides along: if a round produced an sf1
-    // bench artifact (tools/sf1_gate.sh -> bench_sf1.json), inline it
+    // bench artifact (tools/gate.sh sf1 10 -> bench_sf1.json), inline it
     // so the round's single BENCH json also carries the 10x section —
     // without making the per-round default run pay the sf1 wall time.
     // Resolved relative to the working directory (not a hardcoded
@@ -176,11 +131,12 @@ object Bench {
     // isolation would hide that its range queries ran parameterized.
     val knobs = {
       import graft.testqueries.GateKnobs
-      // init_parts rides along since the size gate (round 10): a
-      // cross-scale comparison is only knob-identical when this value
-      // matches, and the gated default now varies with input size.
-      val initParts = spark.conf.get(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+      // init_parts rides along: a comparison is only knob-identical
+      // when AQE's initial partition count matches (unset, AQE starts
+      // from spark.sql.shuffle.partitions).
+      val initParts = spark.conf
+        .getOption("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+        .getOrElse(spark.conf.get("spark.sql.shuffle.partitions"))
       s""""knobs":{"range_window_us":${GateKnobs.rangeWindowUs},""" +
         s""""emb_mod":${GateKnobs.embSampleMod},""" +
         s""""jaccard_t":${GateKnobs.jaccardThreshold},""" +
@@ -196,7 +152,7 @@ object Bench {
     // the RATIO still sits near 1 there — the sf1 matrix point is where
     // parallelism separates; see OPTIMIZATION_r13.md.)
     val par = spark.sparkContext.defaultParallelism
-    val cpuJson = s""""cpus":$nCpus,"default_parallelism":$par,"master":"local[$cpus]""""
+    val cpuJson = s""""cpus":$nCpus,"default_parallelism":$par,"master":"local[$nCpus]""""
     val core =
       s"""{"metric":"total","value":$total,"unit":"sec","run_at":"$runAt",$cpuJson,$knobs,"queries":$qjson,"q58_gate_s":$gateS,"maint_gate_s":$maintS,"errors":$errJson,"sf":"$sfDir""""
     // stdout gets a MINIMAL final line: totals + error count + the top-5
@@ -212,7 +168,7 @@ object Bench {
     // "all_queries" names the git-TRACKED file carrying the complete
     // per-query map from this same run (VERDICT r10 #8).
     val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","run_at":"$runAt",$cpuJson,"sf":"$sfDir","n_queries":${results.size},"n_errors":${errors.size},"queries":$top5,"all_queries":"bench_last.json","artifact":"bench_last.json"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","run_at":"$runAt",$cpuJson,"sf":"$sfDir","n_queries":${results.size},"n_errors":${results.count(_._2 < 0)},"queries":$top5,"all_queries":"bench_last.json","artifact":"bench_last.json"}"""
     val full = core + sf1Json + "}"
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_last.json").toAbsolutePath,
@@ -226,4 +182,25 @@ object Bench {
     println(compact)
     System.out.flush()
   }
+
+  /** One line per failure: exception class and message, then each cause
+    * — the driver-side wrapper (SparkException) rarely names the fault.
+    * At most 8 links, so a cyclic cause chain still terminates. */
+  private[graft] def describe(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8)
+      .map(t => s"${t.getClass.getName}: ${t.getMessage}")
+      .mkString(" <- caused by ")
+
+  /** JSON string literal: backslash, quote and ALL control chars (<0x20)
+    * escaped — a tab or CR in a message or in builder-authored SQL would
+    * otherwise make a reader's json.load fail. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -11,10 +11,15 @@ import org.apache.spark.sql.SparkSession
   * `batch`: full-parallelism analytics. Shuffle partitions sized to the
   * core count (not Spark's default 200 — measured pure overhead at
   * single-node scale; on a real cluster pass `shufflePartitions` ≈ 2-3×
-  * total cores). AQE on (skew splitting, partition coalescing). The
+  * total cores). AQE on (skew splitting, partition coalescing), starting
+  * from that count: an 8× initial fan-out measured ~9% slower on the
+  * sf0.1 suite, and its one measured win (sf10 under concurrent load)
+  * has no benchmark workload to hold it. The
   * ObjectHashAggregate fallback threshold is raised from its 128-key
   * default — the silent 2.3× cliff on every collect_list-family
-  * aggregation this engine's ordered traces rely on.
+  * aggregation this engine's ordered traces rely on. The generated-class
+  * cache holds a whole query suite, so repeated queries skip
+  * recompilation.
   *
   * `interactive`: the pruned per-problem latency profile. One shuffle
   * partition (a pruned problem partition is a few hundred rows) and AQE
@@ -29,12 +34,8 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Sum of regular-file sizes under `dir` — the input-size estimate that
-    * gates the AQE over-partitioning knob. Below [[overPartitionBytes]]
-    * the 8× fan-out buys nothing (everything coalesces back down) but
-    * still pays scheduler/fetch overhead per exchange — measured +2.7%
-    * on the 17 MB sf0.1 suite when the knob shipped ungated in round 9.
-    */
+  /** Sum of regular-file sizes under `dir` — the input-size estimate
+    * behind q09's [[fusedFingerprintBytes]] gate. */
   def inputBytes(dir: String): Long = {
     val root = java.nio.file.Paths.get(dir)
     if (!java.nio.file.Files.isDirectory(root)) 0L
@@ -46,14 +47,14 @@ object GraftSession {
     }
   }
 
-  /** Scan-size threshold above which over-partitioning pays for itself:
-    * at ≥1 GiB input a single exchange's partitions outgrow AQE's 64 MB
-    * advisory target at cores-count partitioning, which is exactly when
-    * size-bounded partitions start cutting straggler exposure (the
-    * PartsProbe A/B evidence in Bench.scala). Below it the knob is pure
-    * fan-out overhead on data that fits one advisory partition per core.
-    */
-  val overPartitionBytes: Long = 1L << 30
+  /** Core count for the project's mains: `SPARK_GRAFT_CPUS`, else every
+    * available processor. A concrete count, not "local[*]": `batch`
+    * sizes shuffle partitions from it. */
+  private[graft] def envCores: Int = sys.env.get("SPARK_GRAFT_CPUS") match {
+    case None => Runtime.getRuntime.availableProcessors
+    case Some(c) => c.toIntOption.getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be an integer core count, got '$c'"))
+  }
 
   /** Input-size threshold above which q09's fingerprint pipeline takes
     * the fused single-aggregation form (graft.plans.SigListAgg) instead
@@ -73,6 +74,11 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "1000000")
+      // Static conf, default 100 entries: a pass over the declared
+      // queries compiles more whole-stage classes than that, so every
+      // repeat of a query would pay Janino recompilation again
+      // (~0.1-0.3 s/query). Sized so a full pass stays resident.
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
 
   def batch(master: String = "local[*]",
       shufflePartitions: Int = Runtime.getRuntime.availableProcessors)
@@ -80,17 +86,6 @@ object GraftSession {
     base(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.adaptive.enabled", "true")
-      // Over-partition 8x and let AQE coalesce to its advisory size:
-      // without this, AQE can only merge partitions DOWN from
-      // shufflePartitions, so partition VOLUME grows linearly with the
-      // data. A/B'd in tools/PartsProbe (sf10, four heaviest queries):
-      // quiet-host min neutral (0.94-1.04x), but medians under
-      // concurrent load drop hard (q22 69.9->44.1s) — size-bounded
-      // partitions cut straggler exposure, the property that matters
-      // on a shared cluster. Small inputs coalesce back to few
-      // partitions, so the fan-out costs nothing at interactive sizes.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        8 * shufflePartitions)
       .getOrCreate()
 
   def interactive(master: String = "local[*]"): SparkSession =

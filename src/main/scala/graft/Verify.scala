@@ -1,40 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Concrete core count required (the initialPartitionNum default
-    // multiplies it); fail fast on "local[*]"-style values.
-    val nCpus = try cpus.toInt catch {
-      case _: NumberFormatException => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS must be an integer core count, got '$cpus'")
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Same AQE over-partitioning as Bench/GraftSession.batch: bound
-      // partition SIZE, not count — the gate host runs compare/replay
-      // children concurrently, exactly the load regime where the A/B
-      // showed the win (see Bench.scala for the measured numbers).
-      // Size-gated since round 10 (see Bench.scala): over-partitioning
-      // only pays once partitions would outgrow AQE's advisory size.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS",
-          if (GraftSession.inputBytes(sfDir) >= GraftSession.overPartitionBytes)
-            (8 * nCpus).toString
-          else cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      // collect_list-family aggregations (ObjectHashAggregate) fall back
-      // to sort-based aggregation after 128 distinct keys per partition
-      // by default — measured 2.3x slowdown on the ingest regroup
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val nCpus = GraftSession.envCores
+    val spark = GraftSession.batch(s"local[$nCpus]", nCpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // local iteration aid (same idea as Bench's SPARK_GRAFT_BENCH_ONLY):
@@ -47,23 +19,12 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: ${Bench.describe(e)}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql.filter(q => selected(q._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => Bench.jsonString(k) + ": " + Bench.jsonString(v) }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

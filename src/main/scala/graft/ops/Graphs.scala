@@ -49,7 +49,7 @@ object Graphs {
     * Shape (round 12, guide §2.4/§3.1 — a measured rework): the old
     * form attached `deg` to every EDGE row with a 2|E|-row self-derived
     * join before checkpointing, and that build — not the iterations —
-    * was ~85% of q89's wall time (Q89Probe: eWithDeg 4.2 s of the 4.4 s
+    * was ~85% of q89's wall time (eWithDeg 4.2 s of the 4.4 s
     * query; iterations added <0.2 s each). Degrees are a NODE property,
     * so they now ride with the |V|-row rank table instead: the edge
     * list checkpoints straight after the symmetrize+distinct, and each

@@ -524,7 +524,7 @@ object Similarity {
     * assignment; no FP tie can flip it.
     *
     * The default threshold 1.5 is MEASURED, not guessed
-    * (`tools/AnnSkewProbe`, nCells=16, Lloyd×2): isotropic corpora sit
+    * (nCells=16, Lloyd×2): isotropic corpora sit
     * tightly at 1.0 (testdata embeddings 1.011; uniform 8-d 1.029;
     * uniform 64-d 1.005 — multinomial noise keeps them ≈ 1 + nCells/T),
     * while clustered ones land at 1.80 (4 equal tight clusters — Lloyd

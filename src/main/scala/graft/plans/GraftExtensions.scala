@@ -5,9 +5,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 /** SparkSessionExtensions installer for the engine's native functions.
   * Usage:
   * {{{
-  *   SparkSession.builder()
-  *     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-  *     ...
+  *   val spark = graft.GraftSession.batch()
   *   spark.sql("SELECT graft_git_blob_hash(source_code) FROM code")
   *   spark.sql("""SELECT implementation_id,
   *     graft_trace_fingerprint(test_id, run_id, step_id, output) AS fp

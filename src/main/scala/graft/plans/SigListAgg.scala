@@ -32,7 +32,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * rows and dominates the query: measured at sf3 the composed chain's
   * aggregation slice is ~12–19 s of a 16–23 s query while a
   * single-aggregation shape of the same buffer/eval cost runs in
-  * 5.3 s (tools/Probe round-13 decomposition; the fused shape has
+  * 5.3 s (per-stage decomposition at sf3; the fused shape has
   * #impls buffers — 3k at sf3 — instead of 17.4M). The shuffle itself
   * was never the cost: buffers of raw (seg, ord, v) rows carry the
   * same bytes the raw-row exchange did (§2.3 — the BYTES are equal,

@@ -268,7 +268,7 @@ object CoreQueries {
         // buffer per (supp, order) group — ~0.97 groups PER ROW, so
         // per-group machinery (ArrayBuffer, partial→final serialize
         // round, array_sort + interpreted to_json) runs once per input
-        // row and was ~85% of the query (tools/Probe sf3
+        // row and was ~85% of the query (sf3
         // decomposition: count-only agg 2.3 s vs collect chain
         // 12-19 s; bench A/B sf3 16.3 → 9.1 s). Buffers now number
         // #suppliers, not #(supp, order) pairs; shuffle bytes are

@@ -361,7 +361,7 @@ object FunctionQueries {
         // branches now share the identical (doc_id, w) aggregation
         // subtree, so Catalyst's ReuseExchange collapses them to ONE
         // scan + explode + shuffle (the old form's distinct-then-agg
-        // branch differed and re-ran the corpus scan; Q56Probe
+        // branch differed and re-ran the corpus scan; same-JVM
         // interleaved A/B at sf1: 4.04 s -> 1.43 s median). The count
         // deliberately references tf (always >= 1, so it IS the row
         // count): a bare count(1) lets column pruning drop the tf

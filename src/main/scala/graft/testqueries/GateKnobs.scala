@@ -2,7 +2,7 @@ package graft.testqueries
 
 /** Scale knobs for the handful of declared queries whose DuckDB ORACLE
   * cost grows super-linearly with the corpus even though the Spark side
-  * stays cheap. The two-scale gate (tools/sf1_gate.sh) is only useful
+  * stays cheap. The scale gate (tools/gate.sh) is only useful
   * if it runs routinely; at sf1 the un-knobbed q39/q76 oracle is a
   * ~10-minute DuckDB inequality join EACH (~100M qualifying pairs) and
   * q74's recursive-CTE clustering replay exceeds DuckDB's memory —
@@ -19,7 +19,7 @@ package graft.testqueries
   * are unaffected unless a gate script opts in explicitly.
   *
   * Timing comparisons only hold between runs with equal knob values
-  * (sf1_gate.sh records them in its artifacts).
+  * (gate.sh records them in its artifacts).
   */
 object GateKnobs {
 

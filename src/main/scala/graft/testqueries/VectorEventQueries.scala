@@ -27,7 +27,7 @@ object VectorEventQueries {
       d: String): graft.lake.Lakehouse = {
     val tmp = java.nio.file.Files.createTempDirectory("q58").toString
     val cellsDir = s"$tmp/cells"
-    // same cell synthesis as tools/ProblemBench.buildLakehouse:
+    // same cell synthesis as tools/IngestBench:
     // 3 cells (op / input_value / value) per lineitem row
     Tables.lineitem(s, d).filter(pmod(col("l_orderkey"), lit(7)) === 0)
       .select(
@@ -360,8 +360,8 @@ object VectorEventQueries {
     // oracle-replayed: the DuckDB mirror rebuilds the same assignment
     // (q116's seed → Lloyd×2 → exact micro-unit means), computes the
     // same masses, evaluates the same EXACT-INTEGER threshold
-    // (10·nCells·Σm² ≥ 15·T², all BIGINT — threshold 1.5 measured in
-    // tools/AnnSkewProbe), and emits whichever branch the statistic
+    // (10·nCells·Σm² ≥ 15·T², all BIGINT — threshold 1.5 measured, see
+    // Similarity.annSelect), and emits whichever branch the statistic
     // selects — so engine and oracle cannot disagree on the path, let
     // alone the rows. On the isotropic testdata embeddings the skew is
     // ~1.01 ⇒ both take the int8 branch; the clustered⇒IVF side is

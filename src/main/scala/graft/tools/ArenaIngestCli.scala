@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.ingest.ArenaIngest
 import graft.lake.Lakehouse
 import graft.schema.Schemas
@@ -24,8 +23,8 @@ object ArenaIngestCli {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: ArenaIngestCli <warehouse> <id>=<export.parquet>[,<solr.json>] ...")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.batch(s"local[$cpus]", cpus.toInt)
+    val cpus = graft.GraftSession.envCores
+    val spark = graft.GraftSession.batch(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
     val lake = new Lakehouse(spark, args(0))
     val sha1 = sys.env.get("SPARK_GRAFT_SHA1").exists(_.toBoolean)

@@ -16,7 +16,7 @@ object Demo {
   def main(args: Array[String]): Unit = {
     // the library session factory: extensions registered, measured
     // defaults applied (see GraftSession)
-    val spark = graft.GraftSession.batch("local[4]", shufflePartitions = 4)
+    val spark = graft.GraftSession.batch()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

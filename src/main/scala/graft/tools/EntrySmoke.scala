@@ -1,11 +1,7 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.batch()
     spark.sparkContext.setLogLevel("ERROR")
     val df = graft.SparkEntry.entry(spark)
     df.show(10, false)

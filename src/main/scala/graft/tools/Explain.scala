@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for selected catalog queries —
   * the SURVEY-mandated plan review (pushdown, broadcast, shuffle count).
   * Usage: runMain graft.tools.Explain [queryName ...]
@@ -13,10 +11,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.batch()
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSet else Set.empty[String]
     val executed = sys.env.get("GRAFT_EXPLAIN_EXECUTED").contains("1")

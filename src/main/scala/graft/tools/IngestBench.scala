@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ingest.ArenaIngest
 import graft.lake.Lakehouse
@@ -17,16 +16,8 @@ import graft.schema.Schemas
   */
 object IngestBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // collect_list-family aggregations (ObjectHashAggregate) fall back
-      // to sort-based aggregation after 128 distinct keys per partition
-      // by default — measured 2.3x slowdown on the ingest regroup
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val cpus = graft.GraftSession.envCores
+    val spark = graft.GraftSession.batch(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     val li = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-factor multiplier for the driver's synthetic testdata: writes an
@@ -25,11 +25,8 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, dstDir, copiesS) = args
     val copies = copiesS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val cpus = graft.GraftSession.envCores
+    val spark = graft.GraftSession.batch(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // key-space stride per table: dense 0-based keys in the source, so

@@ -5,8 +5,8 @@ import graft.queries.CanonicalQueries
 
 /** End-to-end: synthesized arena export → EP2 ingest → partitioned
   * lakehouse (all three tables) → every canonical query, with invariants
-  * checked (the automated version of tools/Demo + ProblemBench at test
-  * scale).
+  * checked (the automated version of tools/Demo and perfbench's
+  * interactive workload at test scale).
   */
 class IntegrationSpec extends SparkSpec {
 

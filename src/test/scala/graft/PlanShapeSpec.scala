@@ -185,8 +185,8 @@ class PlanShapeSpec extends SparkSpec {
     // file order wrong). A shuffle boundary both re-establishes
     // ordered ranges and cuts the location walk, so: every declared
     // query's final stage must NOT reach a materialized RDD without
-    // crossing a shuffle. graft.tools.LocProbe measures the mechanism;
-    // SCALE.md "sf10 executed-correctness gate" has the post-mortem.
+    // crossing a shuffle. SCALE.md "sf10 executed-correctness gate" has
+    // the post-mortem.
     import org.apache.spark.rdd.RDD
     import org.apache.spark.storage.StorageLevel
     def materializedInFinalStage(r: RDD[_]): Boolean =

@@ -1,7 +1,7 @@
 #!/bin/bash
 # Executed-scale gate at an arbitrary scale factor: generate data (if
 # missing), run the full oracle gate (graft.Verify + DuckDB compare)
-# and the bench suite. Generalizes tools/sf1_gate.sh to any SF.
+# and the bench suite.
 #
 # Usage: tools/gate.sh <sfLabel> <copies>     e.g. tools/gate.sh sf1 10
 # Artifacts: data/<sfLabel>/ (generated, gitignored),
@@ -27,7 +27,7 @@ if [ ! -d "$DIR/lineitem.parquet" ]; then
 fi
 
 rm -rf /tmp/verify_$LABEL
-SPARK_GRAFT_CPUS=32 tools/run.sh graft.Verify "$DIR" /tmp/verify_$LABEL
+tools/run.sh graft.Verify "$DIR" /tmp/verify_$LABEL
 { echo "# gate $LABEL copies=$COPIES range_window_us=$GRAFT_GATE_RANGE_WINDOW_US emb_mod=$GRAFT_GATE_EMB_MOD $(date -u +%FT%TZ)";
   python3 tools/compare.py "$DIR" /tmp/verify_$LABEL; } \
   | tee correctness_$LABEL.txt

@@ -10,10 +10,10 @@ cd /root/repo
 # rsync'd snapshot so a concurrent sbt compile can't swap class files
 # under a running JVM's lazy classloading.
 CP="${GRAFT_CP:-target/scala-2.13/classes}:/opt/spark/jars/*"
-# GRAFT_RUN_XMX shrinks the heap for adversarial memory tests
-# (StopwordStress): unbounded aggregation state must FAIL, not hide
-# inside 96g of headroom.
-exec java -Xmx"${GRAFT_RUN_XMX:-96g}" -XX:+UseG1GC \
+# Heap and UI setting as build.sbt's forked runs: SPARK_DRIVER_MEM sizes
+# the heap.
+exec java -Xmx"${SPARK_DRIVER_MEM:-24g}" -XX:+UseG1GC \
+  -Dspark.ui.enabled=false \
   --add-exports=java.base/sun.nio.ch=ALL-UNNAMED \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
