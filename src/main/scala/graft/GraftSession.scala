@@ -34,19 +34,6 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Sum of regular-file sizes under `dir` — the input-size estimate
-    * behind q09's [[fusedFingerprintBytes]] gate. */
-  def inputBytes(dir: String): Long = {
-    val root = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.isDirectory(root)) 0L
-    else {
-      val s = java.nio.file.Files.walk(root)
-      try s.filter(p => java.nio.file.Files.isRegularFile(p))
-        .mapToLong(p => java.nio.file.Files.size(p)).sum()
-      finally s.close()
-    }
-  }
-
   /** Core count for the project's mains: `SPARK_GRAFT_CPUS`, else every
     * available processor. A concrete count, not "local[*]": `batch`
     * sizes shuffle partitions from it. */
@@ -55,17 +42,6 @@ object GraftSession {
     case Some(c) => c.toIntOption.getOrElse(throw new IllegalArgumentException(
       s"SPARK_GRAFT_CPUS must be an integer core count, got '$c'"))
   }
-
-  /** Input-size threshold above which q09's fingerprint pipeline takes
-    * the fused single-aggregation form (graft.plans.SigListAgg) instead
-    * of the composed two-groupBy chain. The fused form wins when the
-    * first grouping's per-(impl, test) buffer machinery dominates —
-    * group count tracks input size: measured bench A/B (min-of-7,
-    * round 13) composed/fused = 1.56/2.32 s at sf0.1 (17 MB) but
-    * 16.3/9.1 s at sf3 (558 MB). 100 MB sits between the sf0.3 and sf1
-    * points with the flip verified on both sides (OPTIMIZATION_r13.md);
-    * derived from input size, never from local core count. */
-  val fusedFingerprintBytes: Long = 100L << 20
 
   private def base(master: String): SparkSession.Builder =
     SparkSession.builder()

@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
@@ -126,24 +126,34 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
   private def isHidden(rel: String): Boolean =
     rel.split("/").exists(s => s.startsWith("_") || s.startsWith("."))
 
+  /** Every file under `dir` at any depth, paired with its path
+    * relative to `dir`, in depth-first listing order; empty if `dir`
+    * does not exist. Walks with `listStatus`, not `listFiles`: the
+    * latter wraps each entry in a `LocatedFileStatus`, whose
+    * constructor reads the file's permission, and on the local FS
+    * without native Hadoop that forks an `ls -ld` per file (Spark's own
+    * file listing avoids it for the same reason). */
+  private def filesUnder(fs: FileSystem,
+      dir: HPath): Seq[(String, FileStatus)] = {
+    // qualify BEFORE relativizing: listed paths are fully qualified
+    // (scheme + authority); an unqualified root URI would fail to
+    // relativize them and hand back absolute URIs as "rel" paths
+    val root = fs.makeQualified(dir)
+    val out = scala.collection.mutable.ArrayBuffer
+      .empty[(String, FileStatus)]
+    def walk(d: HPath): Unit = fs.listStatus(d).foreach { f =>
+      if (f.isDirectory) walk(f.getPath)
+      else if (f.isFile)
+        out += ((root.toUri.relativize(f.getPath.toUri).toString, f))
+    }
+    if (fs.exists(root)) walk(root)
+    out.toSeq
+  }
+
   /** Relative paths of the table's current (live) data files. */
   private def liveFiles(table: String): Seq[String] = {
-    val fs = hadoopFs(new HPath(dir(table)))
-    // qualify BEFORE relativizing: listFiles returns fully-qualified
-    // paths (scheme + authority); an unqualified root URI would fail
-    // to relativize them and hand back absolute URIs as "rel" paths
-    val root = fs.makeQualified(new HPath(dir(table)))
-    if (!fs.exists(root)) return Nil
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile) {
-        val rel = root.toUri.relativize(f.getPath.toUri).toString
-        if (!isHidden(rel)) out += rel
-      }
-    }
-    out.toSeq
+    val root = new HPath(dir(table))
+    filesUnder(hadoopFs(root), root).map(_._1).filterNot(isHidden)
   }
 
   /** Latest committed snapshot version; 0 = never committed. */
@@ -478,16 +488,8 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     if (expire.isEmpty) return
     val kept: Set[String] =
       keep.flatMap(v => readManifest(table, v)).toSet
-    val arch = fs.makeQualified(new HPath(root, "_archive"))
-    if (fs.exists(arch)) {
-      val it = fs.listFiles(arch, true)
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.isFile) {
-          val rel = arch.toUri.relativize(f.getPath.toUri).toString
-          if (!kept.contains(rel)) fs.delete(f.getPath, false)
-        }
-      }
+    filesUnder(fs, new HPath(root, "_archive")).foreach { case (rel, f) =>
+      if (!kept.contains(rel)) fs.delete(f.getPath, false)
     }
     expire.foreach(v => fs.delete(manifestPath(table, v), false))
   }
@@ -600,23 +602,16 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * small-file maintenance: decide WHAT to compact before rewriting
     * anything. Returns (partition dir relative path, files, bytes). */
   def tableStats(table: String): DataFrame = {
-    val fs = hadoopFs(new HPath(dir(table)))
-    // qualified root: see liveFiles — relativize needs matching schemes
-    val root = fs.makeQualified(new HPath(dir(table)))
-    val it = fs.listFiles(root, true)
-    val rows = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Long, Long)]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && !f.getPath.getName.startsWith("_")) {
-        val rel = root.toUri.relativize(f.getPath.getParent.toUri).toString
-        // skip snapshot bookkeeping (_manifests, _archive): stats
-        // describe the LIVE table, same visibility rule as a scan
-        if (!isHidden(rel)) rows += ((rel, 1L, f.getLen))
-      }
+    val root = new HPath(dir(table))
+    // skip snapshot bookkeeping (_manifests, _archive) and markers
+    // (_SUCCESS): stats describe the LIVE table, same visibility rule
+    // as a scan
+    val rows = filesUnder(hadoopFs(root), root).collect {
+      case (rel, f) if !isHidden(rel) =>
+        (rel.substring(0, math.max(0, rel.lastIndexOf('/'))), 1L, f.getLen)
     }
     import spark.implicits._
-    rows.toSeq.toDF("partition", "files", "bytes")
+    rows.toDF("partition", "files", "bytes")
       .groupBy("partition")
       .agg(org.apache.spark.sql.functions.sum("files").as("files"),
         org.apache.spark.sql.functions.sum("bytes").as("bytes"))
@@ -778,18 +773,12 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
       if (fs.exists(src)) require(fs.rename(src, new HPath(target, d)),
         s"compact: cannot carry $d across the swap")
     }
-    val qBackup = fs.makeQualified(backup)
-    val it = fs.listFiles(qBackup, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile) {
-        val rel = qBackup.toUri.relativize(f.getPath.toUri).toString
-        if (!isHidden(rel)) {
-          val dst = new HPath(s"${dir(table)}/_archive/$rel")
-          fs.mkdirs(dst.getParent)
-          require(fs.rename(f.getPath, dst),
-            s"compact: cannot archive ${f.getPath}")
-        }
+    filesUnder(fs, backup).foreach { case (rel, f) =>
+      if (!isHidden(rel)) {
+        val dst = new HPath(s"${dir(table)}/_archive/$rel")
+        fs.mkdirs(dst.getParent)
+        require(fs.rename(f.getPath, dst),
+          s"compact: cannot archive ${f.getPath}")
       }
     }
     fs.delete(backup, true)

@@ -169,8 +169,8 @@ object Similarity {
     * column form (spec-pinned). */
   private def planeComponentValue(plane: Int, dim: Int): Double = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(s"plane$plane:$dim".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.substring(0, 15)
+    val hex = graft.plans.Hex.lower(
+      md.digest(s"plane$plane:$dim".getBytes("UTF-8"))).substring(0, 15)
     java.lang.Long.parseLong(hex, 16).toDouble / (1L << 59).toDouble - 1.0
   }
 

@@ -2,6 +2,7 @@ package graft.plans
 
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
+import java.util.regex.Pattern
 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, UnaryExpression}
@@ -51,21 +52,28 @@ case class GitBlobHashExpr(child: Expression, sha1: Boolean = false)
 
 object GitBlobHashExpr {
 
-  /** JVM-side hash; the regexes mirror Fns.normalizeSource exactly
-    * (CRLF/CR to LF, per-line rstrip of the full Python whitespace
-    * class, trailing blank lines dropped; `(?d)` keeps `$` LF-anchored
-    * like Python split('\n') / RE2). */
+  // The normalization regexes mirror Fns.normalizeSource exactly
+  // (CRLF/CR to LF, per-line rstrip of the full Python whitespace
+  // class, trailing blank lines dropped; `(?d)` keeps `$` LF-anchored
+  // like Python split('\n') / RE2). Compiled once: String.replaceAll
+  // would recompile each pattern on every row.
+  private val lineEnd = Pattern.compile("\\r\\n?")
+  private val trailingSpace =
+    Pattern.compile(s"(?md)${graft.functions.Fns.rstripClass}+$$")
+  private val trailingNewlines = Pattern.compile("(?d)\\n+$")
+
+  /** JVM-side hash of the normalized source. */
   def hash(s: String, sha1: Boolean): String = {
-    val norm = s.replaceAll("\\r\\n?", "\n")
-      .replaceAll(s"(?md)${graft.functions.Fns.rstripClass}+$$", "")
-      .replaceAll("(?d)\\n+$", "")
+    val crlf = lineEnd.matcher(s).replaceAll("\n")
+    val rstripped = trailingSpace.matcher(crlf).replaceAll("")
+    val norm = trailingNewlines.matcher(rstripped).replaceAll("")
     val body = norm.getBytes(StandardCharsets.UTF_8)
     val header = s"blob ${body.length}\u0000"
       .getBytes(StandardCharsets.UTF_8)
     val md = MessageDigest.getInstance(if (sha1) "SHA-1" else "SHA-256")
     md.update(header)
     md.update(body)
-    md.digest().map("%02x".format(_)).mkString
+    Hex.lower(md.digest())
   }
 
   /** Binary-compat overload (pre-SHA-1 signature). */

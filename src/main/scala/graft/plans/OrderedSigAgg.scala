@@ -130,55 +130,48 @@ object OrderedSigAgg {
     * sort comparator is UTF8String's binary order for free. */
   case class Row(ordNull: Boolean, ord: Int, value: Array[Byte])
 
-  private val rowOrdering: Ordering[Row] = new Ordering[Row] {
-    override def compare(x: Row, y: Row): Int = {
-      // NULL ord first — Spark's interpreted struct ordering
-      var c = java.lang.Boolean.compare(y.ordNull, x.ordNull)
-      if (c != 0) return c
-      if (!x.ordNull) { c = Integer.compare(x.ord, y.ord); if (c != 0) return c }
-      if (x.value == null && y.value == null) 0
-      else if (x.value == null) -1
-      else if (y.value == null) 1
-      else java.util.Arrays.compareUnsigned(x.value, y.value)
-    }
+  /** Spark's interpreted struct ordering on (ord, value): NULL ord
+    * first, then ord; NULL value first, then UTF8String binary order.
+    * Also [[SigListAgg]]'s order within a segment. */
+  private[plans] def compareEntry(
+      xOrdNull: Boolean, xOrd: Int, xValue: Array[Byte],
+      yOrdNull: Boolean, yOrd: Int, yValue: Array[Byte]): Int = {
+    var c = java.lang.Boolean.compare(yOrdNull, xOrdNull)
+    if (c != 0) return c
+    if (!xOrdNull) { c = Integer.compare(xOrd, yOrd); if (c != 0) return c }
+    if (xValue == null && yValue == null) 0
+    else if (xValue == null) -1
+    else if (yValue == null) 1
+    else java.util.Arrays.compareUnsigned(xValue, yValue)
   }
 
-  /** Sort once, render the Jackson-compatible JSON array, md5 it. */
+  private val rowOrdering: Ordering[Row] = (x: Row, y: Row) =>
+    compareEntry(x.ordNull, x.ord, x.value, y.ordNull, y.ord, y.value)
+
+  /** Sort once, then [[sigOfSorted]]. */
   def sigOf(buf: ArrayBuffer[Row]): String = {
     val rows = buf.sorted(rowOrdering)
-    val sb = new java.lang.StringBuilder(rows.length * 8 + 2)
-    sb.append('[')
-    var i = 0
-    while (i < rows.length) {
-      if (i > 0) sb.append(',')
-      val v = rows(i).value
-      if (v == null) sb.append("null")
-      else appendJsonString(sb,
-        new String(v, StandardCharsets.UTF_8))
-      i += 1
-    }
-    sb.append(']')
-    val md = MessageDigest.getInstance("MD5")
-    md.update(sb.toString.getBytes(StandardCharsets.UTF_8))
-    md.digest().map("%02x".format(_)).mkString
+    sigOfSorted(rows.length, rows(_).value, MessageDigest.getInstance("MD5"))
   }
 
-  /** Render a JSON array of (possibly null) strings exactly as Spark's
-    * `to_json` over `array<string>` does — shared with [[SigListAgg]],
-    * whose outer fingerprint is `to_json` over the per-segment sig
-    * list. */
-  private[plans] def jsonArrayOf(values: Seq[String]): String = {
-    val sb = new java.lang.StringBuilder(values.length * 36 + 2)
+  /** Render the `n` values `value(0 until n)`, already in (ord, value)
+    * order, as the Jackson-compatible JSON array and md5 it with `md`
+    * (an MD5 digest; `digest()` leaves it reset for the next call, so a
+    * caller digesting many segments passes one instance). */
+  private[plans] def sigOfSorted(n: Int, value: Int => Array[Byte],
+      md: MessageDigest): String = {
+    val sb = new java.lang.StringBuilder(n * 8 + 2)
     sb.append('[')
     var i = 0
-    while (i < values.length) {
+    while (i < n) {
       if (i > 0) sb.append(',')
-      if (values(i) == null) sb.append("null")
-      else appendJsonString(sb, values(i))
+      val v = value(i)
+      if (v == null) sb.append("null")
+      else appendJsonString(sb, new String(v, StandardCharsets.UTF_8))
       i += 1
     }
     sb.append(']')
-    sb.toString
+    Hex.lower(md.digest(sb.toString.getBytes(StandardCharsets.UTF_8)))
   }
 
   /** Jackson default string escaping: `"` and `\` backslashed, control

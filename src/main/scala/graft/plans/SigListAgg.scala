@@ -1,7 +1,7 @@
 package graft.plans
 
-import java.io.{ByteArrayOutputStream, DataOutputStream}
-import java.nio.charset.StandardCharsets
+import java.nio.ByteBuffer
+import java.security.MessageDigest
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -39,16 +39,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * the per-group overheads are not).
   *
   * Bit-parity (spec-asserted, NativeAggCheckSpec property-tested): the
-  * eval segments the buffered rows by `seg` (SQL grouping: NULL seg is
-  * one segment, sorted first), computes each segment's
-  * `md5(to_json(list(v ORDER BY ord, v)))` via [[OrderedSigAgg.sigOf]]
-  * — the aggregate already spec-pinned bit-compatible with the
-  * composed expression chain AND its DuckDB mirror — and renders the
-  * outer `to_json(list(md5sig ORDER BY seg, md5sig))` with the same
-  * Jackson-escaping JSON writer. Segment keys are distinct by
-  * construction, so the (seg, md5sig) sort never reaches the md5sig
-  * tie-break the composed struct sort would apply; ordering by seg
-  * alone is identical.
+  * eval sorts the buffered rows once by (seg, ord, value) (SQL
+  * grouping: NULL seg is one segment, sorted first), computes each
+  * segment's `md5(to_json(list(v ORDER BY ord, v)))` with
+  * [[OrderedSigAgg]]'s renderer — the aggregate already spec-pinned
+  * bit-compatible with the composed expression chain AND its DuckDB
+  * mirror — and renders the outer
+  * `to_json(list(md5sig ORDER BY seg, md5sig))`. Segment keys are
+  * distinct by construction, so the (seg, md5sig) sort never reaches
+  * the md5sig tie-break the composed struct sort would apply; ordering
+  * by seg alone is identical.
   *
   * Serialize/deserialize round-trips for partial-merge (spec-exercised
   * via repartition) — cluster-correct, not local-mode-only. Buffer
@@ -112,34 +112,44 @@ case class SigListAgg(
   override def eval(buf: ArrayBuffer[Row]): Any =
     UTF8String.fromString(SigListAgg.fpOf(buf))
 
+  // Partial→final buffer wire form, written into one exactly-sized
+  // array: per row a null-flags byte (1 = NULL seg, 2 = NULL ord), seg,
+  // ord, value length (-1 = NULL) and the value bytes.
   override def serialize(buf: ArrayBuffer[Row]): Array[Byte] = {
-    val bytes = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bytes)
-    out.writeInt(buf.size)
-    buf.foreach { r =>
-      out.writeBoolean(r.segNull); out.writeLong(r.seg)
-      out.writeBoolean(r.ordNull); out.writeInt(r.ord)
-      if (r.value == null) out.writeInt(-1)
-      else { out.writeInt(r.value.length); out.write(r.value) }
+    var size = 4
+    var i = 0
+    while (i < buf.length) {
+      val v = buf(i).value
+      size += 17 + (if (v == null) 0 else v.length)
+      i += 1
     }
-    out.flush()
-    bytes.toByteArray
+    val out = ByteBuffer.allocate(size)
+    out.putInt(buf.length)
+    i = 0
+    while (i < buf.length) {
+      val r = buf(i)
+      out.put(((if (r.segNull) 1 else 0) | (if (r.ordNull) 2 else 0)).toByte)
+      out.putLong(r.seg).putInt(r.ord)
+      if (r.value == null) out.putInt(-1)
+      else out.putInt(r.value.length).put(r.value)
+      i += 1
+    }
+    out.array
   }
 
   override def deserialize(bytes: Array[Byte]): ArrayBuffer[Row] = {
-    val in = new java.io.DataInputStream(
-      new java.io.ByteArrayInputStream(bytes))
-    val n = in.readInt()
+    val in = ByteBuffer.wrap(bytes)
+    val n = in.getInt()
     val buf = new ArrayBuffer[Row](n)
     var i = 0
     while (i < n) {
-      val segNull = in.readBoolean(); val s = in.readLong()
-      val ordNull = in.readBoolean(); val o = in.readInt()
-      val len = in.readInt()
+      val flags = in.get()
+      val s = in.getLong(); val o = in.getInt()
+      val len = in.getInt()
       val v = if (len < 0) null else {
-        val b = new Array[Byte](len); in.readFully(b); b
+        val b = new Array[Byte](len); in.get(b); b
       }
-      buf += Row(segNull, s, ordNull, o, v)
+      buf += Row((flags & 1) != 0, s, (flags & 2) != 0, o, v)
       i += 1
     }
     buf
@@ -164,39 +174,43 @@ object SigListAgg {
   case class Row(segNull: Boolean, seg: Long, ordNull: Boolean,
       ord: Int, value: Array[Byte])
 
-  // (segNull first — SQL sorts the NULL segment key first — then seg;
-  // within a segment the per-sig OrderedSigAgg ordering applies at
-  // sigOf time, so this comparator only needs the segment prefix)
-  private val segOrdering: Ordering[Row] = new Ordering[Row] {
+  // NULL segment first (SQL sorts the NULL grouping key first), then
+  // seg; within a segment OrderedSigAgg's (ord, value) order
+  private val rowOrdering: Ordering[Row] = new Ordering[Row] {
     override def compare(x: Row, y: Row): Int = {
-      val c = java.lang.Boolean.compare(y.segNull, x.segNull)
+      var c = java.lang.Boolean.compare(y.segNull, x.segNull)
+      if (c == 0 && !x.segNull) c = java.lang.Long.compare(x.seg, y.seg)
       if (c != 0) c
-      else if (x.segNull) 0
-      else java.lang.Long.compare(x.seg, y.seg)
+      else OrderedSigAgg.compareEntry(x.ordNull, x.ord, x.value,
+        y.ordNull, y.ord, y.value)
     }
   }
 
-  /** Segment by `seg`, digest each segment with [[OrderedSigAgg.sigOf]]
-    * (the bit-compatible per-trace md5), render the seg-ordered sig
-    * list as Spark's to_json would. */
+  /** Sort once, digest each segment's run with
+    * [[OrderedSigAgg.sigOfSorted]] (the bit-compatible per-trace md5),
+    * and render the seg-ordered digests as Spark's `to_json` over
+    * `array<string>` would: an md5 hex string is never NULL and needs no
+    * escaping, so each renders as `"<hex>"`. Linear after the sort. */
   def fpOf(buf: ArrayBuffer[Row]): String = {
-    val rows = buf.sorted(segOrdering)
-    val sigs = ArrayBuffer.empty[String]
+    val rows = buf.sorted(rowOrdering)
+    val md = MessageDigest.getInstance("MD5")
+    val sb = new java.lang.StringBuilder()
+    sb.append('[')
     var i = 0
     val n = rows.length
     while (i < n) {
+      val start = i
       val segNull = rows(i).segNull
       val segKey = rows(i).seg
-      val segRows = ArrayBuffer.empty[OrderedSigAgg.Row]
       while (i < n && rows(i).segNull == segNull &&
-          (segNull || rows(i).seg == segKey)) {
-        segRows += OrderedSigAgg.Row(rows(i).ordNull, rows(i).ord,
-          rows(i).value)
-        i += 1
-      }
-      sigs += OrderedSigAgg.sigOf(segRows)
+          (segNull || rows(i).seg == segKey)) i += 1
+      if (start > 0) sb.append(',')
+      sb.append('"')
+        .append(OrderedSigAgg.sigOfSorted(i - start,
+          k => rows(start + k).value, md))
+        .append('"')
     }
-    OrderedSigAgg.jsonArrayOf(sigs.toSeq)
+    sb.append(']').toString
   }
 
   /** Column-level entry: the composed

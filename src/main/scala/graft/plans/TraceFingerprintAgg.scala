@@ -206,7 +206,7 @@ object TraceFingerprintAgg {
       // it, exactly as the composed chain computes (generator-found)
       outer.update(inner.digest())
     }
-    outer.digest().map("%02x".format(_)).mkString
+    Hex.lower(outer.digest())
   }
 
   private def intBytes(v: Int): Array[Byte] =

@@ -258,55 +258,25 @@ object CoreQueries {
     // md5-hashed before the final shuffle (SURVEY §7: fixed-width keys).
     QueryDef("q09_behavioral_clustering",
       (s, d) => {
-        // Round 13 (VERDICT r12 #4): at scale, the two collect layers
-        // (per-(supp, order) sig, then per-supp fingerprint) fuse into
-        // ONE aggregation keyed by l_suppkey — graft.plans.SigListAgg,
-        // BIT-compatible with the composed
+        // The two collect layers (per-(supp, order) sig, then per-supp
+        // fingerprint) run as ONE aggregation keyed by l_suppkey:
+        // graft.plans.SigListAgg, BIT-compatible with the composed
         // to_json(orderedCollect(order, md5(to_json(orderedCollect(
-        // ln, rf)))))) chain (NativeAggCheckSpec property + oracle).
-        // The composed form materializes one ObjectHashAggregate
-        // buffer per (supp, order) group — ~0.97 groups PER ROW, so
-        // per-group machinery (ArrayBuffer, partial→final serialize
-        // round, array_sort + interpreted to_json) runs once per input
-        // row and was ~85% of the query (sf3
-        // decomposition: count-only agg 2.3 s vs collect chain
-        // 12-19 s; bench A/B sf3 16.3 → 9.1 s). Buffers now number
-        // #suppliers, not #(supp, order) pairs; shuffle bytes are
-        // unchanged (buffers of raw (order, ln, rf) rows = the raw-row
-        // exchange, §2.3).
-        //
-        // SIZE-GATED (the q89-broadcast/init_parts discipline): below
-        // [[graft.GraftSession.fusedFingerprintBytes]] the composed
-        // codegen'd chain stays — at sf0.1 the 580k groups' machinery
-        // costs ~0.5 s while the fused form's per-row interpreted
-        // update costs more than it saves (bench A/B sf0.1: composed
-        // 1.56 s, fused 2.32 s) — the win flips with group count,
-        // which tracks input size, not core count. Both forms are
-        // bit-identical (property-tested), so the gate moves only the
-        // plan.
-        val s2 =
-          if (graft.GraftSession.inputBytes(d) >=
-              graft.GraftSession.fusedFingerprintBytes)
-            lineitem(s, d)
-              .groupBy("l_suppkey")
-              .agg(graft.plans.SigListAgg.fp(col("l_orderkey"),
-                col("l_linenumber"), col("l_returnflag")).as("fp"))
-          else {
-            // hash-partition once on l_suppkey: a subset of the first
-            // grouping key and the whole second grouping key, so both
-            // signature aggregations run exchange-free after one
-            // shuffle of raw rows
-            val s1 = lineitem(s, d)
-              .repartition(col("l_suppkey"))
-              .groupBy("l_suppkey", "l_orderkey")
-              .agg(to_json(Fns.orderedCollect(col("l_linenumber"),
-                col("l_returnflag"))).as("sig"))
-            // Collect md5(sig), not the raw trace strings: fixed-width
-            // values keep the per-impl fingerprint rows small
-            s1.groupBy("l_suppkey")
-              .agg(to_json(Fns.orderedCollect(col("l_orderkey"),
-                md5(col("sig")))).as("fp"))
-          }
+        // ln, rf))))) chain the oracle SQL below spells out
+        // (NativeAggCheckSpec property + large-segment case). The
+        // composed form materializes one ObjectHashAggregate buffer per
+        // (supp, order) group, ~0.97 groups PER ROW, so its per-group
+        // machinery (ArrayBuffer, partial→final serialize round,
+        // array_sort + interpreted to_json) runs once per input row;
+        // the fused form has one buffer per supplier and shuffles the
+        // same raw (order, ln, rf) bytes (§2.3). With its eval linear
+        // in the segment count it is the faster form at every measured
+        // size (same-host bench, 4 cores: sf0.1 3.2-3.6 s composed vs
+        // 1.0-1.2 s fused; round 13, sf3: 16.3 vs 9.1 s).
+        val s2 = lineitem(s, d)
+          .groupBy("l_suppkey")
+          .agg(graft.plans.SigListAgg.fp(col("l_orderkey"),
+            col("l_linenumber"), col("l_returnflag")).as("fp"))
         s2.groupBy(md5(col("fp")).as("fp_hash"))
           .agg(count(lit(1)).as("cluster_size"),
             to_json(Fns.orderedCollect(col("l_suppkey"),

@@ -79,6 +79,23 @@ class NativeAggCheckSpec extends SparkSpec {
     })
   }
 
+  /** (fused, composed) per-group fingerprints of `df(g, seg, o, v)`:
+    * SigListAgg against the two-stage chain it replaces. */
+  private def sigListForms(df: DataFrame)
+      : (Map[String, String], Map[String, String]) = {
+    val fused = df.groupBy("g")
+      .agg(graft.plans.SigListAgg.fp(col("seg"), col("o"), col("v"))
+        .as("fp"))
+      .collect().map(r => (r.getString(0), r.getString(1))).toMap
+    val s1 = df.groupBy("g", "seg")
+      .agg(to_json(Fns.orderedCollect(col("o"), col("v"))).as("sig"))
+    val composed = s1.groupBy("g")
+      .agg(to_json(Fns.orderedCollect(col("seg"), md5(col("sig"))))
+        .as("fp"))
+      .collect().map(r => (r.getString(0), r.getString(1))).toMap
+    (fused, composed)
+  }
+
   test("SigListAgg == composed two-stage fingerprint chain for all " +
       "partitionings (scalacheck)") {
     val row = for {
@@ -90,19 +107,33 @@ class NativeAggCheckSpec extends SparkSpec {
       v <- valueGen
     } yield (g, seg, o, v)
     check(Prop.forAll(shapedGen(row)) { s =>
-      val df = shape(s.rows.toDF("g", "seg", "o", "v"), s)
-      val fused = df.groupBy("g")
-        .agg(graft.plans.SigListAgg.fp(col("seg"), col("o"), col("v"))
-          .as("fp"))
-        .collect().map(r => (r.getString(0), r.getString(1))).toMap
-      val s1 = df.groupBy("g", "seg")
-        .agg(to_json(Fns.orderedCollect(col("o"), col("v"))).as("sig"))
-      val composed = s1.groupBy("g")
-        .agg(to_json(Fns.orderedCollect(col("seg"), md5(col("sig"))))
-          .as("fp"))
-        .collect().map(r => (r.getString(0), r.getString(1))).toMap
+      val (fused, composed) =
+        sigListForms(shape(s.rows.toDF("g", "seg", "o", "v"), s))
       fused == composed
     })
+  }
+
+  test("SigListAgg == composed chain on one group of 2,049 segments") {
+    // The property draws at most 5 segments per group; q09 has ~600 per
+    // supplier. One deterministic group of 2,048 keyed segments plus the
+    // NULL segment, 1-3 rows each, ~10% NULL ords, split over 4
+    // partitions so partial buffers merge.
+    val rng = new scala.util.Random(20260)
+    val rows = for {
+      seg <- (0L until 2048L).map(Option(_)) :+ None
+      _ <- 0 until 1 + rng.nextInt(3)
+    } yield ("big", seg,
+      if (rng.nextInt(10) == 0) None else Some(rng.nextInt(4)),
+      torture(rng.nextInt(torture.size)))
+    val small = Seq(("small", Some(1L), Some(0), "a"),
+      ("small", None, None, null))
+    val df = (rows ++ small).toDF("g", "seg", "o", "v")
+      .orderBy(rand(3)).repartition(4)
+    val (fused, composed) = sigListForms(df)
+    assert(fused.keySet == Set("big", "small"))
+    assert(fused("big").count(_ == ',') + 1 == 2049,
+      "one md5 per segment, NULL segment included")
+    assert(fused == composed)
   }
 
   test("KeyedMinAgg == groupBy+min ground truth for all partitionings " +

@@ -58,11 +58,13 @@ class PlanShapeSpec extends SparkSpec {
         planOf(obs))
   }
 
-  test("q09 clustering: one upfront partition feeds both signature aggs") {
+  test("q09 clustering: one fused SigListAgg fingerprint per supplier") {
     val df = byName("q09_behavioral_clustering")
     val plan = planOf(df)
     val (sh, _) = exchanges(df)
-    // exchanges: l_suppkey upfront, fp_hash regroup, final 1-part sort
+    assert(plan.contains("graft_sig_list"),
+      s"q09 must fingerprint through SigListAgg:\n$plan")
+    // exchanges: l_suppkey grouping, fp_hash regroup, final 1-part sort
     assert(sh == 3, s"expected 3 exchanges (got $sh):\n$plan")
   }
 
