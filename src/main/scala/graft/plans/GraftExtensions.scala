@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSessionExtensions
   *   val spark = graft.GraftSession.batch()
   *   spark.sql("SELECT graft_git_blob_hash(source_code) FROM code")
   *   spark.sql("""SELECT implementation_id,
-  *     graft_trace_fingerprint(test_id, run_id, step_id, output) AS fp
+  *     md5(to_json(graft_sig_list(named_struct('t', test_id, 'r', run_id),
+  *       step_id, output))) AS fp
   *     FROM observations GROUP BY implementation_id""")
   * }}}
   * Scalar expressions AND the native aggregates are injected — the
@@ -33,12 +34,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       VecDotExpr.builder))
     ext.injectFunction((CountInSetExpr.identifier, CountInSetExpr.info,
       CountInSetExpr.builder))
-    ext.injectFunction((TraceFingerprintAgg.identifier,
-      TraceFingerprintAgg.info, TraceFingerprintAgg.builder))
     ext.injectFunction((KeyedMinAgg.identifier, KeyedMinAgg.info,
       KeyedMinAgg.builder))
-    ext.injectFunction((OrderedSigAgg.identifier, OrderedSigAgg.info,
-      OrderedSigAgg.builder))
     ext.injectFunction((SigListAgg.identifier, SigListAgg.info,
       SigListAgg.builder))
     ext.injectFunction((ZOrderExpr.identifier, ZOrderExpr.info,

@@ -24,7 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * column) plus three scalar MAXes, five aggregation buffers total.
   * This operator keeps ONE JVM buffer per group: two append-only
   * (x, value) lists sorted once at eval (the
-  * [[OrderedStringAggregator]] / [[TraceFingerprintAgg]] discipline)
+  * [[OrderedStringAggregator]] / [[SigListAgg]] discipline)
   * and three running scalars. Semantics match the composed chain
   * bit-for-bit (spec-asserted): cells sort by (X, VALUE), NULL VALUEs
   * are skipped, an empty concat yields NULL (the `nullif(.., '')`

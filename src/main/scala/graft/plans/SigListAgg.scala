@@ -1,155 +1,154 @@
 package graft.plans
 
 import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, RowOrdering,
+  UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType,
-  StringType}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused per-implementation fingerprint, BIT-COMPATIBLE with the
-  * composed two-stage chain (round 13, VERDICT r12 #4):
+/** The engine's one ordered-signature aggregate: per group, the
+  * seg-ordered `array<string>` of per-segment trace signatures, each
+  * BIT-COMPATIBLE with the built-in chain
   *
   * {{{
-  *   s1 = groupBy(impl, seg).agg(
-  *          to_json(orderedCollect(ord, v)).as("sig"))       // trace
-  *   s2 = s1.groupBy(impl).agg(
-  *          to_json(orderedCollect(seg, md5(sig))).as("fp")) // fingerprint
+  *   md5(to_json(list(v ORDER BY ord, v)))      -- one per segment
   * }}}
   *
-  * computed as ONE aggregation keyed by `impl` alone. Why: the composed
-  * form's first groupBy materializes one collect_list buffer PER
-  * (impl, seg) group — on q09's lineitem analog that is ~0.97 groups
-  * per input row, so the ObjectHashAggregate machinery (per-group
-  * ArrayBuffer, a partial→final serialize/deserialize round per group,
-  * array_sort + interpreted to_json per group) runs ~N times for N
-  * rows and dominates the query: measured at sf3 the composed chain's
-  * aggregation slice is ~12–19 s of a 16–23 s query while a
-  * single-aggregation shape of the same buffer/eval cost runs in
-  * 5.3 s (per-stage decomposition at sf3; the fused shape has
-  * #impls buffers — 3k at sf3 — instead of 17.4M). The shuffle itself
-  * was never the cost: buffers of raw (seg, ord, v) rows carry the
-  * same bytes the raw-row exchange did (§2.3 — the BYTES are equal,
-  * the per-group overheads are not).
+  * i.e. with the composed two-stage chain it fuses (reference
+  * `benchmark_behavioral_clustering.py:49-96`: per-trace signature,
+  * then `array_agg(signature ORDER BY test_id)` per implementation):
   *
-  * Bit-parity (spec-asserted, NativeAggCheckSpec property-tested): the
-  * eval sorts the buffered rows once by (seg, ord, value) (SQL
-  * grouping: NULL seg is one segment, sorted first), computes each
-  * segment's `md5(to_json(list(v ORDER BY ord, v)))` with
-  * [[OrderedSigAgg]]'s renderer — the aggregate already spec-pinned
-  * bit-compatible with the composed expression chain AND its DuckDB
-  * mirror — and renders the outer
-  * `to_json(list(md5sig ORDER BY seg, md5sig))`. Segment keys are
-  * distinct by construction, so the (seg, md5sig) sort never reaches
-  * the md5sig tie-break the composed struct sort would apply; ordering
-  * by seg alone is identical.
+  * {{{
+  *   s1 = groupBy(g, seg).agg(
+  *          to_json(orderedCollect(ord, v)).as("sig"))   // trace
+  *   s2 = s1.groupBy(g).agg(
+  *          orderedCollect(seg, md5(sig)).as("sigs"))    // fingerprint
+  * }}}
   *
-  * Serialize/deserialize round-trips for partial-merge (spec-exercised
-  * via repartition) — cluster-correct, not local-mode-only. Buffer
-  * growth is the per-impl trace volume, the same array the composed
-  * s2 materializes per group; the fused form holds the (ord, v) detail
-  * instead of the segment digests, a constant-factor trade bounded by
-  * the declared semantics themselves.
+  * computed as ONE aggregation keyed by `g` alone. Callers render the
+  * array with the built-ins: q09 `to_json(sigs)`, clustering
+  * `md5(to_json(sigs))`, a single trace signature is the one-segment
+  * case (constant `seg`, element 0). Every result is therefore
+  * reproducible in a SQL-only engine (q09's DuckDB oracle spells it
+  * out).
+  *
+  * Why fused: the composed form's first groupBy materializes one
+  * collect_list buffer PER (g, seg) group — on q09's lineitem analog
+  * ~0.97 groups per input row — so the ObjectHashAggregate machinery
+  * (per-group ArrayBuffer, a partial→final serialize round, array_sort
+  * + interpreted to_json) runs ~N times for N rows. This aggregate has
+  * one buffer per `g` and shuffles the same raw (seg, ord, v) bytes.
+  *
+  * Buffer: the projected (seg, ord, v) row per input, copied as an
+  * `UnsafeRow`; partial→final it travels as the length-prefixed row
+  * bytes and is read back without copying. Eval sorts the rows once with
+  * Spark's own ordering for their types and digests each segment's run.
+  * Parity rules, each spec-asserted (NativeAggCheckSpec properties,
+  * PlansSpec adversarial cases):
+  *
+  *  - sort order = Spark's struct ordering on (seg, ord, v), ascending,
+  *    NULL first in every field (SQL grouping: a NULL seg is one
+  *    segment); strings in UTF8String BINARY order (unsigned UTF-8
+  *    bytes), NOT java.lang.String order — they differ on
+  *    supplementary-plane code points; struct segs field by field.
+  *    Segment keys are distinct per group, so the composed chain's
+  *    (seg, md5sig) sort never reaches its md5sig tie-break;
+  *  - JSON rendering = Spark's JacksonGenerator: `["a","b"]`, NULL
+  *    elements as `null`, escaping `"` `\` and control chars < 0x20
+  *    (named escapes for \b \t \n \f \r, uppercase `\u00XX` otherwise),
+  *    everything else raw;
+  *  - md5 hex lowercase over the JSON string's UTF-8 bytes.
   */
 case class SigListAgg(
     seg: Expression, ord: Expression, value: Expression,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[ArrayBuffer[SigListAgg.Row]] {
-
-  import SigListAgg.Row
+    extends TypedImperativeAggregate[ArrayBuffer[UnsafeRow]] {
 
   override def children: Seq[Expression] = Seq(seg, ord, value)
-  override def dataType: DataType = StringType
+  override def dataType: DataType = ArrayType(StringType, false)
   override def nullable: Boolean = false
   override def prettyName: String = "graft_sig_list"
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val segOk = seg.dataType == LongType || seg.dataType == IntegerType
-    val ok = segOk && ord.dataType == IntegerType &&
-      value.dataType == StringType
-    if (ok)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (RowOrdering.isOrderable(seg.dataType) &&
+        RowOrdering.isOrderable(ord.dataType) && value.dataType == StringType)
+      TypeCheckResult.TypeCheckSuccess
     else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "graft_sig_list needs (bigint/int seg, int ord, string value), " +
-          s"got (${seg.dataType.simpleString}, " +
+      TypeCheckResult.TypeCheckFailure(
+        "graft_sig_list needs (orderable seg, orderable ord, string " +
+          s"value), got (${seg.dataType.simpleString}, " +
           s"${ord.dataType.simpleString}, ${value.dataType.simpleString})")
-  }
 
-  @transient private lazy val segIsLong: Boolean =
-    seg.dataType == LongType
+  @transient private lazy val project = UnsafeProjection.create(children)
+  @transient private lazy val rowOrdering =
+    RowOrdering.createNaturalAscendingOrdering(children.map(_.dataType))
+  // field 0 only: equal under it = same segment
+  @transient private lazy val segOrdering =
+    RowOrdering.createNaturalAscendingOrdering(Seq(seg.dataType))
 
-  override def createAggregationBuffer(): ArrayBuffer[Row] =
+  override def createAggregationBuffer(): ArrayBuffer[UnsafeRow] =
     ArrayBuffer.empty
 
-  override def update(buf: ArrayBuffer[Row],
-      input: InternalRow): ArrayBuffer[Row] = {
-    val s = seg.eval(input)
-    val o = ord.eval(input)
-    val v = value.eval(input)
-    buf += Row(
-      s == null,
-      if (s == null) 0L
-      else if (segIsLong) s.asInstanceOf[Long]
-      else s.asInstanceOf[Int].toLong,
-      o == null,
-      if (o == null) 0 else o.asInstanceOf[Int],
-      if (v == null) null
-      else v.asInstanceOf[UTF8String].getBytes.clone())
+  override def update(buf: ArrayBuffer[UnsafeRow],
+      input: InternalRow): ArrayBuffer[UnsafeRow] = {
+    buf += project(input).copy()
     buf
   }
 
-  override def merge(a: ArrayBuffer[Row],
-      b: ArrayBuffer[Row]): ArrayBuffer[Row] = { a ++= b; a }
+  override def merge(a: ArrayBuffer[UnsafeRow],
+      b: ArrayBuffer[UnsafeRow]): ArrayBuffer[UnsafeRow] = { a ++= b; a }
 
-  override def eval(buf: ArrayBuffer[Row]): Any =
-    UTF8String.fromString(SigListAgg.fpOf(buf))
-
-  // Partial→final buffer wire form, written into one exactly-sized
-  // array: per row a null-flags byte (1 = NULL seg, 2 = NULL ord), seg,
-  // ord, value length (-1 = NULL) and the value bytes.
-  override def serialize(buf: ArrayBuffer[Row]): Array[Byte] = {
-    var size = 4
+  /** Sort once, then one signature per run of equal segs. Linear after
+    * the sort. */
+  override def eval(buf: ArrayBuffer[UnsafeRow]): Any = {
+    val rows = buf.toArray
+    java.util.Arrays.sort(rows, rowOrdering)
+    val md = MessageDigest.getInstance("MD5")
+    val sigs = ArrayBuffer.empty[Any]
     var i = 0
-    while (i < buf.length) {
-      val v = buf(i).value
-      size += 17 + (if (v == null) 0 else v.length)
+    while (i < rows.length) {
+      val start = i
       i += 1
+      while (i < rows.length && segOrdering.compare(rows(start), rows(i)) == 0)
+        i += 1
+      sigs += UTF8String.fromString(SigListAgg.sigOfSorted(rows, start, i, md))
     }
+    new GenericArrayData(sigs.toArray)
+  }
+
+  // Partial→final wire form: the row count, then per row its size and
+  // its UnsafeRow bytes.
+  override def serialize(buf: ArrayBuffer[UnsafeRow]): Array[Byte] = {
+    var size = 4
+    buf.foreach(r => size += 4 + r.getSizeInBytes)
     val out = ByteBuffer.allocate(size)
     out.putInt(buf.length)
-    i = 0
-    while (i < buf.length) {
-      val r = buf(i)
-      out.put(((if (r.segNull) 1 else 0) | (if (r.ordNull) 2 else 0)).toByte)
-      out.putLong(r.seg).putInt(r.ord)
-      if (r.value == null) out.putInt(-1)
-      else out.putInt(r.value.length).put(r.value)
-      i += 1
-    }
+    buf.foreach { r => out.putInt(r.getSizeInBytes); r.writeTo(out) }
     out.array
   }
 
-  override def deserialize(bytes: Array[Byte]): ArrayBuffer[Row] = {
+  override def deserialize(bytes: Array[Byte]): ArrayBuffer[UnsafeRow] = {
     val in = ByteBuffer.wrap(bytes)
     val n = in.getInt()
-    val buf = new ArrayBuffer[Row](n)
+    val buf = new ArrayBuffer[UnsafeRow](n)
     var i = 0
     while (i < n) {
-      val flags = in.get()
-      val s = in.getLong(); val o = in.getInt()
       val len = in.getInt()
-      val v = if (len < 0) null else {
-        val b = new Array[Byte](len); in.get(b); b
-      }
-      buf += Row((flags & 1) != 0, s, (flags & 2) != 0, o, v)
+      val r = new UnsafeRow(3)
+      r.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + in.position(), len)
+      in.position(in.position() + len)
+      buf += r
       i += 1
     }
     buf
@@ -169,54 +168,56 @@ case class SigListAgg(
 
 object SigListAgg {
 
-  /** One buffered (seg, ord, value) observation; value kept as UTF-8
-    * bytes so segment sigs sort/render in UTF8String binary order. */
-  case class Row(segNull: Boolean, seg: Long, ordNull: Boolean,
-      ord: Int, value: Array[Byte])
-
-  // NULL segment first (SQL sorts the NULL grouping key first), then
-  // seg; within a segment OrderedSigAgg's (ord, value) order
-  private val rowOrdering: Ordering[Row] = new Ordering[Row] {
-    override def compare(x: Row, y: Row): Int = {
-      var c = java.lang.Boolean.compare(y.segNull, x.segNull)
-      if (c == 0 && !x.segNull) c = java.lang.Long.compare(x.seg, y.seg)
-      if (c != 0) c
-      else OrderedSigAgg.compareEntry(x.ordNull, x.ord, x.value,
-        y.ordNull, y.ord, y.value)
-    }
-  }
-
-  /** Sort once, digest each segment's run with
-    * [[OrderedSigAgg.sigOfSorted]] (the bit-compatible per-trace md5),
-    * and render the seg-ordered digests as Spark's `to_json` over
-    * `array<string>` would: an md5 hex string is never NULL and needs no
-    * escaping, so each renders as `"<hex>"`. Linear after the sort. */
-  def fpOf(buf: ArrayBuffer[Row]): String = {
-    val rows = buf.sorted(rowOrdering)
-    val md = MessageDigest.getInstance("MD5")
-    val sb = new java.lang.StringBuilder()
+  /** Render the values (field 2) of `rows(from until until)`, already in
+    * (ord, value) order, as the Jackson-compatible JSON array and md5 it
+    * with `md` (an MD5 digest; `digest()` leaves it reset for the next
+    * segment). */
+  private def sigOfSorted(rows: Array[UnsafeRow], from: Int, until: Int,
+      md: MessageDigest): String = {
+    val sb = new java.lang.StringBuilder((until - from) * 8 + 2)
     sb.append('[')
-    var i = 0
-    val n = rows.length
-    while (i < n) {
-      val start = i
-      val segNull = rows(i).segNull
-      val segKey = rows(i).seg
-      while (i < n && rows(i).segNull == segNull &&
-          (segNull || rows(i).seg == segKey)) i += 1
-      if (start > 0) sb.append(',')
-      sb.append('"')
-        .append(OrderedSigAgg.sigOfSorted(i - start,
-          k => rows(start + k).value, md))
-        .append('"')
+    var i = from
+    while (i < until) {
+      if (i > from) sb.append(',')
+      if (rows(i).isNullAt(2)) sb.append("null")
+      else appendJsonString(sb, rows(i).getUTF8String(2).toString)
+      i += 1
     }
-    sb.append(']').toString
+    sb.append(']')
+    Hex.lower(md.digest(sb.toString.getBytes(StandardCharsets.UTF_8)))
   }
 
-  /** Column-level entry: the composed
-    * `to_json(orderedCollect(seg, md5(to_json(orderedCollect(ord, v)))))`
-    * two-stage fingerprint as one native aggregation. */
-  def fp(seg: Column, ord: Column, value: Column): Column = {
+  /** Jackson default string escaping: `"` and `\` backslashed, control
+    * chars < 0x20 as \b \t \n \f \r or uppercase \u00XX, the rest raw. */
+  private def appendJsonString(sb: java.lang.StringBuilder,
+      s: String): Unit = {
+    sb.append('"')
+    var i = 0
+    while (i < s.length) {
+      val ch = s.charAt(i)
+      ch match {
+        case '"' => sb.append("\\\"")
+        case '\\' => sb.append("\\\\")
+        case '\b' => sb.append("\\b")
+        case '\t' => sb.append("\\t")
+        case '\n' => sb.append("\\n")
+        case '\f' => sb.append("\\f")
+        case '\r' => sb.append("\\r")
+        case c if c < 0x20 =>
+          sb.append("\\u00")
+          sb.append("0123456789ABCDEF".charAt((c >> 4) & 0xf))
+          sb.append("0123456789ABCDEF".charAt(c & 0xf))
+        case c => sb.append(c)
+      }
+      i += 1
+    }
+    sb.append('"')
+  }
+
+  /** Column-level entry: the seg-ordered per-segment signatures
+    * `orderedCollect(seg, md5(to_json(orderedCollect(ord, value))))` as
+    * one native aggregation. */
+  def sigs(seg: Column, ord: Column, value: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(SigListAgg(
       ColumnBridge.expression(seg), ColumnBridge.expression(ord),
@@ -233,7 +234,7 @@ object SigListAgg {
 
   val builder: Seq[Expression] => Expression = { children =>
     require(children.size == 3,
-      "graft_sig_list takes (seg bigint/int, ord int, value string)")
+      "graft_sig_list takes (seg, ord, value string)")
     SigListAgg(children(0), children(1), children(2))
   }
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Fns
+import graft.plans.SigListAgg
 
 /** The reference's four canonical analytical queries as reusable
   * DataFrame→DataFrame builders (SURVEY §2.3-§2.6, §7 item 4). Each takes
@@ -121,55 +122,49 @@ object CanonicalQueries {
   }
 
   /** Per-(impl, test, run) output-trace signature — the inner stage of
-    * clustering (`benchmark_behavioral_clustering.py:53-62`). The fused
-    * native form (`plans/OrderedSigAgg`): one aggregation operator
-    * emitting `md5(to_json(list(output ORDER BY step_id, output)))`
-    * bit-for-bit — same grouping semantics as the composed chain
-    * [[traceSigComposed]] (spec-asserted), no per-group interpreted
-    * to_json. Fixed-width 128-bit sigs also shrink the downstream
-    * vote shuffle vs raw JSON traces. */
-  private def traceSig: Column =
-    graft.plans.OrderedSigAgg.sig(col("step_id"), col("output"))
-
-  /** The pure-built-in signature chain — bit-parity reference for
-    * [[traceSig]] (md5 added on top so the two forms are comparable). */
-  private[graft] def traceSigComposed: Column =
-    md5(to_json(Fns.orderedCollect(col("step_id"), col("output"))))
+    * clustering (`benchmark_behavioral_clustering.py:53-62`):
+    * `md5(to_json(list(value ORDER BY ord, value)))` bit-for-bit, as the
+    * one-segment case of `plans/SigListAgg` (constant segment key,
+    * element 0) — one aggregation operator, no per-group interpreted
+    * to_json. Fixed-width 128-bit sigs also shrink the downstream vote
+    * shuffle vs raw JSON traces. */
+  private[graft] def traceSig(ord: Column, value: Column): Column =
+    SigListAgg.sigs(lit(0), ord, value).getItem(0)
 
   /** Q2 — behavioral clustering (`benchmark_behavioral_clustering.py:
     * 49-96`): per-test trace signatures → per-impl fingerprint → group by
     * fingerprint → clusters ranked by size. Returns
     * (cluster_size, implementations, fingerprint_hash).
     *
+    * Stages 1+2 (per-(test, run) signature → per-impl fingerprint) run
+    * as ONE `plans/SigListAgg` aggregation — one operator pair instead
+    * of two ObjectHashAggregate pairs with interpreted to_json per
+    * group — and its rows equal [[behavioralClusteringComposed]]'s,
+    * `fingerprint_hash` included (spec-asserted).
+    *
     * Batch-scale note: on LARGE inputs, pre-partition the observations
     * with `.repartition(col("implementation_id"))` before calling — the
-    * single upfront exchange satisfies both signature aggregations
-    * (subset-key reuse, measured 1.6× on the sf0.1 analog). Do NOT
-    * pre-partition on the [[interactive]] path: the extra exchange
-    * defeats its single-stage execution. */
+    * single upfront exchange satisfies the aggregation (subset-key
+    * reuse, measured 1.6× on the sf0.1 analog). Do NOT pre-partition on
+    * the [[interactive]] path: the extra exchange defeats its
+    * single-stage execution. */
   def behavioralClustering(observations: DataFrame): DataFrame = {
-    // Fused fingerprint: stages 1+2 (per-(test,run) signature →
-    // per-impl fingerprint) as ONE native TypedImperativeAggregate —
-    // one operator pair instead of two ObjectHashAggregate pairs with
-    // interpreted to_json per group (graft.plans.TraceFingerprintAgg;
-    // cluster membership spec-asserted equal to the composed form).
     val fps = observations
       .groupBy(col("implementation_id"))
-      .agg(graft.plans.TraceFingerprintAgg.fingerprint(
-        col("test_id"), col("run_id"), col("step_id"), col("output"))
-        .as("fp"))
+      .agg(md5(to_json(SigListAgg.sigs(
+        struct(col("test_id"), col("run_id")), col("step_id"),
+        col("output")))).as("fp"))
     clusterByFingerprint(fps)
   }
 
-  /** The composed (pure-built-in) clustering pipeline: three groupBy
-    * stages with md5/to_json fingerprints — bit-reproducible in any
-    * SQL engine (the q09 DuckDB-mirrored analog uses this shape). Same
-    * cluster membership as [[behavioralClustering]]; prefer the fused
-    * form on latency paths. */
+  /** The pure-built-in clustering pipeline: three groupBy stages with
+    * md5/to_json fingerprints, bit-reproducible in any SQL engine — the
+    * parity reference for [[behavioralClustering]]. */
   def behavioralClusteringComposed(observations: DataFrame): DataFrame = {
     val sigs = observations
       .groupBy(col("implementation_id"), col("test_id"), col("run_id"))
-      .agg(traceSig.as("sig"))
+      .agg(to_json(Fns.orderedCollect(col("step_id"), col("output")))
+        .as("sig"))
     val fps = sigs
       .groupBy(col("implementation_id"))
       // md5(sig): fixed-width keys through the shuffle (SURVEY §7)
@@ -210,7 +205,7 @@ object CanonicalQueries {
     // materialized or exploded (measured ~2x on the q50 analog).
     observations
       .groupBy(col("implementation_id"), col("test_id"), col("run_id"))
-      .agg(traceSig.as("sig"))
+      .agg(traceSig(col("step_id"), col("output")).as("sig"))
       // an implementation votes once per (test, sig) even when several
       // of its runs produce that sig — count distinct impls per group
       .withColumn("votes", size(collect_set(col("implementation_id"))

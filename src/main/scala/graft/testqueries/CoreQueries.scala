@@ -260,7 +260,8 @@ object CoreQueries {
       (s, d) => {
         // The two collect layers (per-(supp, order) sig, then per-supp
         // fingerprint) run as ONE aggregation keyed by l_suppkey:
-        // graft.plans.SigListAgg, BIT-compatible with the composed
+        // to_json over graft.plans.SigListAgg's seg-ordered signature
+        // array is BIT-compatible with the composed
         // to_json(orderedCollect(order, md5(to_json(orderedCollect(
         // ln, rf))))) chain the oracle SQL below spells out
         // (NativeAggCheckSpec property + large-segment case). The
@@ -275,8 +276,8 @@ object CoreQueries {
         // 1.0-1.2 s fused; round 13, sf3: 16.3 vs 9.1 s).
         val s2 = lineitem(s, d)
           .groupBy("l_suppkey")
-          .agg(graft.plans.SigListAgg.fp(col("l_orderkey"),
-            col("l_linenumber"), col("l_returnflag")).as("fp"))
+          .agg(to_json(graft.plans.SigListAgg.sigs(col("l_orderkey"),
+            col("l_linenumber"), col("l_returnflag"))).as("fp"))
         s2.groupBy(md5(col("fp")).as("fp_hash"))
           .agg(count(lit(1)).as("cluster_size"),
             to_json(Fns.orderedCollect(col("l_suppkey"),

@@ -234,7 +234,7 @@ object FunctionQueries {
         // unhex is order-preserving (hex is monotone in the bytes) and
         // halves the key the two window sorts carry. The groups here
         // average ~1 row, so the composed expression chain beats a
-        // typed-buffer aggregate (measured; plans/OrderedSigAgg is the
+        // typed-buffer aggregate (measured; plans/SigListAgg is the
         // right tool only for multi-row traces — see consensusVerdicts).
         val sigs = lineitem(s, d)
           .repartition(col("l_orderkey"))

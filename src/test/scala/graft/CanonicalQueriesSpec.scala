@@ -17,17 +17,15 @@ class CanonicalQueriesSpec extends SparkSpec {
   }
 
   test("fused fingerprint clustering equals the composed pipeline") {
-    // the native TraceFingerprintAgg and the md5/to_json chain use
-    // different injective encodings — hash VALUES differ, cluster
-    // MEMBERSHIP must not
-    def membership(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[Long]("cluster_size"),
-        r.getAs[scala.collection.Seq[String]]("implementations").toSeq))
-        .toSeq
-    assert(membership(
-        CanonicalQueries.behavioralClustering(Fixtures.observations)) ==
-      membership(CanonicalQueries.behavioralClusteringComposed(
-        Fixtures.observations)))
+    // whole rows in order: cluster membership, fingerprint_hash VALUES
+    // and the equal-size tie order they break
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq
+    Seq(Fixtures.observations, Fixtures.observations.repartition(5))
+      .foreach { obs =>
+        assert(rows(CanonicalQueries.behavioralClustering(obs)) ==
+          rows(CanonicalQueries.behavioralClusteringComposed(obs)))
+      }
   }
 
   test("fused fingerprint merges partial buffers across partitions") {

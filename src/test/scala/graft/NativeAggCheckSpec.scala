@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.functions.Fns
-import graft.plans.{KeyedMinAgg, ObservationStepAgg, OrderedSigAgg,
-  TraceFingerprintAgg}
+import graft.plans.{KeyedMinAgg, ObservationStepAgg, SigListAgg}
+import graft.queries.CanonicalQueries
 
 /** Scalacheck properties for the native TypedImperativeAggregates:
   * generated inputs (Unicode collation edges, NULL ords/values, empty
@@ -61,8 +61,8 @@ class NativeAggCheckSpec extends SparkSpec {
     assert(res.passed, res.status.toString)
   }
 
-  test("OrderedSigAgg == md5(to_json(orderedCollect)) for all " +
-      "partitionings (scalacheck)") {
+  test("traceSig (one-segment SigListAgg) == md5(to_json(orderedCollect)) " +
+      "for all partitionings (scalacheck)") {
     val row = for {
       g <- Gen.choose(0, 7).map(i => s"g$i")
       o <- Gen.frequency(9 -> Gen.choose(0, 5).map(Option(_)),
@@ -72,7 +72,7 @@ class NativeAggCheckSpec extends SparkSpec {
     check(Prop.forAll(shapedGen(row)) { s =>
       val df = shape(s.rows.toDF("g", "o", "v"), s)
       df.groupBy("g").agg(
-          OrderedSigAgg.sig(col("o"), col("v")).as("native"),
+          CanonicalQueries.traceSig(col("o"), col("v")).as("native"),
           md5(to_json(Fns.orderedCollect(col("o"), col("v"))))
             .as("composed"))
         .collect().forall(r => r.getString(1) == r.getString(2))
@@ -84,7 +84,7 @@ class NativeAggCheckSpec extends SparkSpec {
   private def sigListForms(df: DataFrame)
       : (Map[String, String], Map[String, String]) = {
     val fused = df.groupBy("g")
-      .agg(graft.plans.SigListAgg.fp(col("seg"), col("o"), col("v"))
+      .agg(to_json(SigListAgg.sigs(col("seg"), col("o"), col("v")))
         .as("fp"))
       .collect().map(r => (r.getString(0), r.getString(1))).toMap
     val s1 = df.groupBy("g", "seg")
@@ -98,19 +98,28 @@ class NativeAggCheckSpec extends SparkSpec {
 
   test("SigListAgg == composed two-stage fingerprint chain for all " +
       "partitionings (scalacheck)") {
+    // the segment key is drawn both ways: q09's bigint, and clustering's
+    // struct(test, run) with NULL fields (struct order, field by field)
+    val name = Gen.frequency(9 -> Gen.choose(0, 2).map(i => s"t$i"),
+      1 -> Gen.const(null: String))
     val row = for {
       g <- Gen.choose(0, 5).map(i => s"impl$i")
       seg <- Gen.frequency(9 -> Gen.choose(0L, 4L).map(Option(_)),
         1 -> Gen.const(Option.empty[Long]))
+      test <- name
+      run <- name
       o <- Gen.frequency(9 -> Gen.choose(0, 5).map(Option(_)),
         1 -> Gen.const(Option.empty[Int]))
       v <- valueGen
-    } yield (g, seg, o, v)
-    check(Prop.forAll(shapedGen(row)) { s =>
-      val (fused, composed) =
-        sigListForms(shape(s.rows.toDF("g", "seg", "o", "v"), s))
-      fused == composed
-    })
+    } yield (g, seg, test, run, o, v)
+    Seq(col("seg"), struct(col("test"), col("run"))).foreach { seg =>
+      check(Prop.forAll(shapedGen(row)) { s =>
+        val df = s.rows.toDF("g", "seg", "test", "run", "o", "v")
+          .select(col("g"), seg.as("seg"), col("o"), col("v"))
+        val (fused, composed) = sigListForms(shape(df, s))
+        fused == composed
+      })
+    }
   }
 
   test("SigListAgg == composed chain on one group of 2,049 segments") {
@@ -156,38 +165,6 @@ class NativeAggCheckSpec extends SparkSpec {
         .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
       got == truth
     })
-  }
-
-  test("TraceFingerprintAgg: values partition-independent, membership " +
-      "== composed two-stage chain (scalacheck)") {
-    val row = for {
-      impl <- Gen.choose(0, 7).map(i => s"impl$i")
-      t <- Gen.choose(0, 3).map(i => s"t$i")
-      r <- Gen.choose(0, 1).map(i => s"r$i")
-      step <- Gen.frequency(11 -> Gen.choose(0, 5).map(Option(_)),
-        1 -> Gen.const(Option.empty[Int]))
-      out <- valueGen
-    } yield (impl, t, r, step, out)
-    def membership(fps: Seq[(String, String)]): Set[Set[String]] =
-      fps.groupBy(_._2).values.map(_.map(_._1).toSet).toSet
-    check(Prop.forAll(shapedGen(row)) { s =>
-      val base = s.rows.toDF("impl", "test", "run", "step", "out")
-      def fps(df: DataFrame): Seq[(String, String)] =
-        df.groupBy("impl")
-          .agg(TraceFingerprintAgg.fingerprint(col("test"), col("run"),
-            col("step"), col("out")).as("fp"))
-          .collect().map(r => r.getString(0) -> r.getString(1)).toSeq
-      val atK = fps(shape(base, s))
-      val atOne = fps(base.repartition(1))
-      val composed = base.groupBy("impl", "test", "run")
-        .agg(md5(to_json(Fns.orderedCollect(col("step"), col("out"))))
-          .as("sig"))
-        .groupBy("impl")
-        .agg(md5(to_json(Fns.orderedCollect(
-          struct(col("test"), col("run")), md5(col("sig"))))).as("fp"))
-        .collect().map(r => r.getString(0) -> r.getString(1)).toSeq
-      atK.toMap == atOne.toMap && membership(atK) == membership(composed)
-    }, trials = 10)
   }
 
   test("ObservationStepAgg == composed five-aggregate regroup for all " +

@@ -357,6 +357,10 @@ class PlanShapeSpec extends SparkSpec {
       assert(sh == 0, s"interactive path must not exchange:\n${planOf(q)}")
       assert(q.rdd.getNumPartitions == 1)
     }
+    val cluster = planOf(graft.queries.CanonicalQueries
+      .behavioralClustering(one))
+    assert(cluster.contains("graft_sig_list"),
+      s"interactive clustering must fingerprint through SigListAgg:\n$cluster")
   }
 
   test("packTokens offsets apply as a broadcast join, not a P-branch " +

@@ -178,22 +178,23 @@ class PlansSpec extends SparkSpec {
   }
 
   test("native aggregates work from plain SQL (GROUP BY context)") {
-    import graft.plans.{KeyedMinAgg, TraceFingerprintAgg}
+    import graft.plans.{KeyedMinAgg, SigListAgg}
     spark.sessionState.functionRegistry.registerFunction(
-      TraceFingerprintAgg.identifier, TraceFingerprintAgg.info,
-      TraceFingerprintAgg.builder)
+      SigListAgg.identifier, SigListAgg.info, SigListAgg.builder)
     spark.sessionState.functionRegistry.registerFunction(
       KeyedMinAgg.identifier, KeyedMinAgg.info, KeyedMinAgg.builder)
     Fixtures.observations.createOrReplaceTempView("obs_sql")
-    // fingerprint: same values as the Column-level entry
+    // fingerprint over a named_struct segment: same values as the
+    // Column-level entry
     val viaSql = spark.sql("""SELECT implementation_id,
-        graft_trace_fingerprint(test_id, run_id, step_id, output) AS fp
+        md5(to_json(graft_sig_list(named_struct('t', test_id, 'r', run_id),
+          step_id, output))) AS fp
       FROM obs_sql GROUP BY implementation_id ORDER BY implementation_id""")
       .collect().map(r => r.getString(0) -> r.getString(1)).toSeq
     val viaCol = Fixtures.observations
       .groupBy(col("implementation_id"))
-      .agg(TraceFingerprintAgg.fingerprint(col("test_id"), col("run_id"),
-        col("step_id"), col("output")).as("fp"))
+      .agg(md5(to_json(SigListAgg.sigs(struct(col("test_id"),
+        col("run_id")), col("step_id"), col("output")))).as("fp"))
       .orderBy("implementation_id")
       .collect().map(r => r.getString(0) -> r.getString(1)).toSeq
     assert(viaSql == viaCol && viaSql.nonEmpty)
@@ -243,30 +244,24 @@ class PlansSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1),
         r.getString(2))).toSet
     assert(viaAgg == truth)
-    // trace fingerprint: equal traces ⇒ equal fingerprints, differing
-    // traces ⇒ differing fingerprints (injectivity over this sample)
-    import graft.plans.TraceFingerprintAgg
+    // trace fingerprint: bit-equal to the composed chain, differing
+    // traces ⇒ differing fingerprints (over this sample)
     val obs = (0 until 200).map { i =>
       (s"impl${i % 10}", s"t${i % 5}", s"r${i % 2}", i % 7,
         vocab(i % (vocab.size - 1))) // exclude null runs of vocab tail
     }.toDF("impl", "test", "run", "step", "out")
-    val fps = obs.groupBy("impl")
-      .agg(TraceFingerprintAgg.fingerprint(col("test"), col("run"),
-        col("step"), col("out")).as("fp"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val fps = fusedFps(obs)
     // impl0 and impl5 (etc.) see different (step, out) sequences here;
     // shuffled input row order must not change any fingerprint
-    val fps2 = obs.orderBy(rand(42)).groupBy("impl")
-      .agg(TraceFingerprintAgg.fingerprint(col("test"), col("run"),
-        col("step"), col("out")).as("fp"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(fps == fps2)
+    assert(fps == fusedFps(obs.orderBy(rand(42))))
+    assert(fps == composedFps(obs))
     assert(fps.values.toSet.size > 1)
   }
 
-  test("OrderedSigAgg: bit parity with md5(to_json(orderedCollect)) " +
-      "under adversarial merges") {
-    import graft.plans.OrderedSigAgg
+  test("one-segment SigListAgg: bit parity with " +
+      "md5(to_json(orderedCollect)) under adversarial merges") {
+    import graft.plans.SigListAgg
+    import graft.queries.CanonicalQueries.traceSig
     // JSON-escaping + collation torture: quotes, backslashes, named and
     // \u00XX control escapes, U+FFFF vs supplementary plane (UTF-16
     // order diverges from UTF-8 binary order there), empties, NULL
@@ -287,7 +282,7 @@ class PlansSpec extends SparkSpec {
     Seq(1, 3, 7, 32).foreach { k =>
       val df = base.orderBy(rand(k)).repartition(k)
       val out = df.groupBy("g").agg(
-        OrderedSigAgg.sig(col("o"), col("v")).as("native"),
+        traceSig(col("o"), col("v")).as("native"),
         md5(to_json(Fns.orderedCollect(col("o"), col("v"))))
           .as("composed"))
         .collect()
@@ -297,18 +292,22 @@ class PlansSpec extends SparkSpec {
           s"k=$k g=${r.getString(0)}")
       }
     }
-    // SQL surface via the extensions-injected function
+    // SQL surface via the extensions-injected function: the constant
+    // segment's element 0, equal to the Column-level entry
     spark.sessionState.functionRegistry.registerFunction(
-      OrderedSigAgg.identifier, OrderedSigAgg.info, OrderedSigAgg.builder)
+      SigListAgg.identifier, SigListAgg.info, SigListAgg.builder)
     base.createOrReplaceTempView("sig_rows")
-    assert(spark.sql(
-      "SELECT g, graft_ordered_sig(o, v) AS s FROM sig_rows GROUP BY g")
-      .count() == 8)
+    val viaSql = spark.sql(
+      "SELECT g, graft_sig_list(0, o, v)[0] AS s FROM sig_rows GROUP BY g")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val viaCol = base.groupBy("g").agg(traceSig(col("o"), col("v")))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(viaSql.size == 8 && viaSql == viaCol)
   }
 
   test("native aggregates: randomized partition counts and merge order " +
       "(property)") {
-    import graft.plans.{KeyedMinAgg, TraceFingerprintAgg}
+    import graft.plans.KeyedMinAgg
     val vocab = Seq("a", "", "￿", "𐀀", "中", "z~", null)
     val rnd = new scala.util.Random(29)
     val obs = (0 until 300).map { _ =>
@@ -319,35 +318,19 @@ class PlansSpec extends SparkSpec {
         vocab(rnd.nextInt(vocab.size)))
     }
     val base = obs.toDF("impl", "test", "run", "step", "out")
-    def membership(fps: Seq[(String, String)]): Set[Set[String]] =
-      fps.groupBy(_._2).values.map(_.map(_._1).toSet).toSet
     // composed two-stage chain (behavioralClusteringComposed shape) =
-    // the partitioning-independent membership reference
-    val composedRef = membership {
-      base.groupBy("impl", "test", "run")
-        .agg(md5(to_json(Fns.orderedCollect(col("step"), col("out"))))
-          .as("sig"))
-        .groupBy("impl")
-        .agg(md5(to_json(Fns.orderedCollect(
-          struct(col("test"), col("run")), md5(col("sig"))))).as("fp"))
-        .collect().map(r => r.getString(0) -> r.getString(1)).toSeq
-    }
+    // the partitioning-independent reference
+    val composedRef = composedFps(base)
     val kmTruth = base
       .filter(col("test").isNotNull && col("out").isNotNull)
       .groupBy("impl", "test").agg(min(col("out")).as("minv"))
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-    var fpAtK: Map[Int, Map[String, String]] = Map.empty
     Seq(1, 2, 5, 13, 32).foreach { k =>
       val df = base.orderBy(rand(k + 100)).repartition(k)
-      // trace fingerprint: same clusters as the composed chain at every
-      // partition count, and the fp VALUES identical across counts
-      val fps = df.groupBy("impl")
-        .agg(TraceFingerprintAgg.fingerprint(col("test"), col("run"),
-          col("step"), col("out")).as("fp"))
-        .collect().map(r => r.getString(0) -> r.getString(1)).toSeq
-      assert(membership(fps) == composedRef, s"k=$k")
-      fpAtK += k -> fps.toMap
+      // trace fingerprint: the composed chain's VALUES at every
+      // partition count
+      assert(fusedFps(df) == composedRef, s"k=$k")
       // keyed min: ground truth at every partition count
       val km = df.groupBy("impl")
         .agg(KeyedMinAgg.keyedMin(col("test"), col("out")).as("m"))
@@ -356,9 +339,26 @@ class PlansSpec extends SparkSpec {
         .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
       assert(km == kmTruth, s"k=$k")
     }
-    assert(fpAtK.values.toSet.size == 1,
-      "fingerprints must not depend on partitioning")
   }
+
+  /** Per-impl clustering fingerprints of `obs(impl, test, run, step,
+    * out)` through SigListAgg, and through the composed built-in chain
+    * (the behavioralClusteringComposed shape). */
+  private def fusedFps(obs: org.apache.spark.sql.DataFrame)
+      : Map[String, String] =
+    obs.groupBy("impl")
+      .agg(md5(to_json(graft.plans.SigListAgg.sigs(
+        struct(col("test"), col("run")), col("step"), col("out")))))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+
+  private def composedFps(obs: org.apache.spark.sql.DataFrame)
+      : Map[String, String] =
+    obs.groupBy("impl", "test", "run")
+      .agg(to_json(Fns.orderedCollect(col("step"), col("out"))).as("sig"))
+      .groupBy("impl")
+      .agg(md5(to_json(Fns.orderedCollect(
+        struct(col("test"), col("run")), md5(col("sig"))))))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
 
   test("ObservationStepAgg: fused = composed at every partition count") {
     val cells = (1 to 400).flatMap { i =>
