@@ -5,8 +5,10 @@ import org.apache.spark.sql.DataFrame
   * prints one JSON line. Each query is fully materialized via a noop-format
   * write (a bare count() would let Catalyst elide sorts and column
   * evaluation). One untimed warm-up pass absorbs JIT/classloading and
-  * parquet footer reads so the timed pass measures query execution, which
-  * is what BASELINE.md's numbers are.
+  * codegen, so the timed passes measure building and executing each
+  * query. Building includes reading the tables' Parquet footers again,
+  * on the driver and without a Spark job (`graft.lake.ParquetRead`);
+  * the jobs a build does run are counted per query as `build_jobs`.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -42,11 +44,16 @@ object Bench {
     // min-of-3 keeps round-over-round regression detection meaningful
     // at ~1s extra total cost. A throwing query reports -1, never the
     // (small, healthy-looking) time-to-exception.
-    def timed(name: String, fn: (org.apache.spark.sql.SparkSession, String)
-        => DataFrame): Double = {
+    // Jobs started while a query's DataFrame is built (decision
+    // statistics, checkpoints, collects), tagged "<name>#<rep>" so the
+    // artifact can report each query's last sweep.
+    val jobs = new graft.metrics.JobCounter(spark.sparkContext)
+    def timed(name: String, tag: String,
+        fn: (org.apache.spark.sql.SparkSession, String) => DataFrame)
+        : Double = {
       val t0 = System.nanoTime()
       try {
-        exec(fn(spark, sfDir))
+        exec(jobs.tagged(tag)(fn(spark, sfDir)))
         (System.nanoTime() - t0) / 1e9
       } catch { case e: Throwable => errors(name) = describe(e); -1.0 }
     }
@@ -69,7 +76,8 @@ object Bench {
           // neighbor's ObjectHashAggregate maps otherwise lands GC
           // pauses in whichever query runs next (observed 4x swings).
           System.gc()
-          reps(name) = timed(name, fn) :: reps.getOrElse(name, Nil)
+          val done = reps.getOrElse(name, Nil)
+          reps(name) = timed(name, s"$name#${done.size}", fn) :: done
         }
       }
     val allNames = qs.map(_._1).toSet
@@ -88,6 +96,14 @@ object Bench {
     }
     val qjson = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val built =
+      try jobs.counts()
+      catch { case e: Throwable =>
+        errors("build_jobs") = describe(e); Map.empty[String, Int] }
+    val buildJson = qs.map { case (name, _) =>
+      val n = built.getOrElse(s"$name#${reps(name).size - 1}", 0)
+      "\"" + name + "\":" + n
+    }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val errJson = errors.map { case (k, v) => jsonString(k) + ":" +
       jsonString(v) }.mkString("{", ",", "}")
@@ -154,7 +170,7 @@ object Bench {
     val par = spark.sparkContext.defaultParallelism
     val cpuJson = s""""cpus":$nCpus,"default_parallelism":$par,"master":"local[$nCpus]""""
     val core =
-      s"""{"metric":"total","value":$total,"unit":"sec","run_at":"$runAt",$cpuJson,$knobs,"queries":$qjson,"q58_gate_s":$gateS,"maint_gate_s":$maintS,"errors":$errJson,"sf":"$sfDir""""
+      s"""{"metric":"total","value":$total,"unit":"sec","run_at":"$runAt",$cpuJson,$knobs,"queries":$qjson,"build_jobs":$buildJson,"q58_gate_s":$gateS,"maint_gate_s":$maintS,"errors":$errJson,"sf":"$sfDir""""
     // stdout gets a MINIMAL final line: totals + error count + the top-5
     // slowest queries + the artifact path. The driver captures a bounded
     // stdout tail, and even the "compact" form with all 110 per-query

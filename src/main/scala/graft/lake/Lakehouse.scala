@@ -63,13 +63,16 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
   }
 
   /** Lazy partitioned-table load; partition-key filters prune at the file
-    * index, predicates/projections push into the parquet scan. A known
-    * table whose directory holds no data files (e.g. every append so far
-    * produced zero rows — an export with no metadata rows) reads as an
-    * EMPTY, correctly-typed frame, the table-format behavior — not an
-    * UNABLE_TO_INFER_SCHEMA crash. */
+    * index, predicates/projections push into the parquet scan. The
+    * schema comes from one footer read on the driver
+    * ([[ParquetRead.table]]), so opening a table launches no Spark job.
+    * A known table whose directory holds no data files (e.g. every
+    * append so far produced zero rows — an export with no metadata rows)
+    * falls back to Spark's inference, whose UNABLE_TO_INFER_SCHEMA error
+    * becomes an EMPTY, correctly-typed frame, the table-format
+    * behavior. */
   def load(table: String): DataFrame =
-    try spark.read.parquet(dir(table))
+    try ParquetRead.table(spark, dir(table))
     catch {
       case e: org.apache.spark.sql.AnalysisException
           if e.getMessage != null &&
@@ -467,7 +470,7 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
   def readStats(name: String): DataFrame = {
     val v = statsVersion(name)
     require(v > 0, s"materialized view '$name' was never refreshed")
-    spark.read.parquet(s"${mvRoot(name)}/state-v$v.parquet")
+    ParquetRead.table(spark, s"${mvRoot(name)}/state-v$v.parquet")
   }
 
   /** Vacuum: keep the latest `keepLast` snapshots, drop older

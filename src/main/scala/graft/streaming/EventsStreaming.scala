@@ -151,8 +151,9 @@ object EventsStreaming {
           // pruning on the read AND scopes the dynamic overwrite
           val touched = delta.select("__bucket").distinct()
             .collect().map(_.getInt(0))
-          val prevTouched = batch.sparkSession.read.parquet(statsDir)
-            .filter(col("__bucket").isin(touched.map(Integer.valueOf): _*))
+          val prevTouched =
+            graft.lake.ParquetRead.table(batch.sparkSession, statsDir)
+              .filter(col("__bucket").isin(touched.map(Integer.valueOf): _*))
           val merged = bucketed(graft.ops.IncrementalAgg.merge(
             prevTouched.drop("__bucket"), delta.drop("__bucket"), keys))
           // materialize before overwriting partitions the plan reads

@@ -377,7 +377,8 @@ object StatQueries {
             val out = s"$tmp/out"
             val ev = events(s, d)
             ev.union(ev).write.mode("overwrite").parquet(src)
-            s.readStream.schema(s.read.parquet(src).schema).parquet(src)
+            s.readStream.schema(graft.lake.ParquetRead.table(s, src).schema)
+              .parquet(src)
               .dropDuplicates("event_id")
               .writeStream
               .outputMode("append")

@@ -6,10 +6,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * parquet file per table under the per-scale-factor dir passed by the
   * driver. Column pruning / filter pushdown reach the parquet scan because
   * every query builds directly on these lazy readers.
+  *
+  * Each read takes its schema from the file's footer on the driver
+  * (`graft.lake.ParquetRead`), so building a query's DataFrame launches
+  * no schema-inference job; a path with no Parquet file falls back to
+  * `spark.read.parquet` and its error.
   */
 object Tables {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    graft.lake.ParquetRead.table(s, s"$dir/$name.parquet")
 
   def region(s: SparkSession, dir: String): DataFrame = t(s, dir, "region")
   def nation(s: SparkSession, dir: String): DataFrame = t(s, dir, "nation")

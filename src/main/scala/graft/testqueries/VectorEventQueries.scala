@@ -55,7 +55,8 @@ object VectorEventQueries {
       .write.mode("overwrite").parquet(cellsDir)
     val lake = new graft.lake.Lakehouse(s, s"$tmp/wh")
     graft.streaming.EventsStreaming.streamArenaIngest(s, cellsDir,
-        s.read.parquet(cellsDir).schema, lake, "stream1", s"$tmp/ck")
+        graft.lake.ParquetRead.table(s, cellsDir).schema, lake, "stream1",
+        s"$tmp/ck")
       .awaitTermination()
     lake
   }

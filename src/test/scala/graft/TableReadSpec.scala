@@ -1,0 +1,94 @@
+package graft
+
+import java.io.File
+import org.apache.spark.sql.functions._
+import graft.lake.{Lakehouse, ParquetRead}
+import graft.metrics.JobCounter
+import graft.schema.Schemas
+import graft.testqueries.Tables
+
+/** Table reads take their schema from one Parquet footer on the driver
+  * (`ParquetRead`): the same schema Spark's inference gives, without
+  * the inference job. */
+class TableReadSpec extends SparkSpec {
+  private val sf = "/root/testdata/sf0.001"
+
+  private def inferred(p: String) = spark.read.parquet(p).schema
+
+  test("footer schema equals Spark's inference on every testdata table") {
+    // events stores TIMESTAMP(NANOS): readable only once Tables.events
+    // has set nanosAsLong, which both reads below then honour
+    Tables.events(spark, sf)
+    val tables = new File(sf).listFiles().map(_.getPath).sorted
+    assert(tables.length == 10)
+    tables.foreach { p =>
+      assert(ParquetRead.schemaOf(spark, p) == Some(inferred(p)), p)
+      assert(ParquetRead.table(spark, p).schema == inferred(p), p)
+    }
+  }
+
+  test("multi-file directory: _SUCCESS skipped, first file in path order") {
+    val dir = tmpDir("multi") + "/t"
+    spark.range(0, 100, 1, 3).selectExpr("id", "cast(id as string) AS s")
+      .write.parquet(dir)
+    // a second, wider append: the files no longer agree on a schema, so
+    // which file is read decides the result
+    spark.range(0, 10, 1, 2)
+      .selectExpr("id", "cast(id as string) AS s", "id * 2.0 AS d")
+      .write.mode("append").parquet(dir)
+    val names = new File(dir).list().sorted
+    assert(names.contains("_SUCCESS"))
+    val data = names.filter(_.startsWith("part-"))
+    assert(data.length >= 5)
+    assert(ParquetRead.schemaOf(spark, dir) == Some(inferred(dir)))
+    assert(ParquetRead.schemaOf(spark, dir) ==
+      Some(inferred(s"$dir/${data.head}")))
+    assert(ParquetRead.table(spark, dir).schema == inferred(dir))
+    assert(ParquetRead.table(spark, dir).count() == 110)
+  }
+
+  test("partitioned lake table: partition columns last, inferred types") {
+    val wh = tmpDir("wh-read")
+    val lake = new Lakehouse(spark, wh)
+    lake.append("observations", Fixtures.observations, Schemas.observations)
+    lake.append("observations",
+      Fixtures.observations.withColumn("problem_id", lit("p2")),
+      Schemas.observations)
+    val p = s"$wh/observations"
+    val got = lake.observations.schema
+    assert(got == inferred(p))
+    assert(got.fieldNames.takeRight(Schemas.partitionCols.size).toSeq ==
+      Schemas.partitionCols)
+    assert(lake.observations.filter(col("problem_id") === "p2").count() ==
+      12)
+  }
+
+  test("a table with no data file still loads as the typed empty frame") {
+    val wh = tmpDir("wh-none")
+    val lake = new Lakehouse(spark, wh)
+    lake.append("tests", spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.tests),
+      Schemas.tests)
+    assert(ParquetRead.schemaOf(spark, s"$wh/tests").isEmpty)
+    val t = lake.load("tests")
+    assert(t.schema == Schemas.tests)
+    assert(t.count() == 0)
+  }
+
+  test("building a declared query or opening a lake table runs no job") {
+    val wh = tmpDir("wh-jobs")
+    val lake = new Lakehouse(spark, wh)
+    lake.append("observations", Fixtures.observations, Schemas.observations)
+    val jobs = new JobCounter(spark.sparkContext)
+    try {
+      jobs.tagged("q04")(SparkEntry.queries("q04_pricing_summary")(spark, sf))
+      jobs.tagged("open")(lake.observations)
+      // control: the tag does see a job that runs
+      jobs.tagged("count")(lake.observations.count())
+      val n = jobs.counts()
+      assert(n.getOrElse("q04", 0) == 0, n)
+      assert(n.getOrElse("open", 0) == 0, n)
+      assert(n.getOrElse("count", 0) > 0, n)
+    } finally jobs.close()
+  }
+}

@@ -18,6 +18,10 @@ diff cleanly over the 100+ queries the knobs don't touch. An
 warns. Artifacts without a knobs field (the driver's compact stdout
 line) are treated as unknown and diffed as-is, with a warning.
 
+Build jobs: when both artifacts carry Bench's "build_jobs" map (Spark
+jobs started while each query's DataFrame was built, last sweep), the
+per-query delta is printed for every query whose count moved.
+
 --norm (VERDICT r11 #2): divide each per-query ratio by the MEDIAN
 ratio over all compared queries — the host factor. The shared host's
 speed swings between sessions move ALL queries by a common factor,
@@ -127,7 +131,23 @@ def main():
         print("improvements:")
         for ratio, name, a, b, _ in improved:
             print(f"  {name:32s} {a:7.2f}s -> {b:7.2f}s  {ratio:.2f}x")
+    build_jobs_delta(old, new)
     sys.exit(1 if regressions else 0)
+
+
+def build_jobs_delta(old, new):
+    """Per-query change in build-time jobs; silent unless both have them."""
+    ob, nb = old.get("build_jobs"), new.get("build_jobs")
+    if ob is None or nb is None:
+        return
+    common = sorted(set(ob) & set(nb))
+    moved = [(n, ob[n], nb[n]) for n in common if ob[n] != nb[n]]
+    print(f"build_jobs: {sum(ob[n] for n in common)} -> "
+          f"{sum(nb[n] for n in common)} over {len(common)} queries; "
+          f"zero-job builds {sum(ob[n] == 0 for n in common)} -> "
+          f"{sum(nb[n] == 0 for n in common)}")
+    for name, a, b in moved:
+        print(f"  {name:32s} {a:4d} -> {b:4d}  ({b - a:+d})")
 
 
 if __name__ == "__main__":
