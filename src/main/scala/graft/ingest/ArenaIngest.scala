@@ -49,7 +49,7 @@ object ArenaIngest {
     * grouping key (see [[regroupKeys]]) leaves the groups unchanged
     * while letting the SAME single exchange fan out #problems×shards
     * ways. Cost: up to `shards` files per partition dir instead of one
-    * (the small-file tradeoff — [[graft.lake.Lakehouse.compactWhere]]
+    * (the small-file tradeoff — [[graft.lake.Lakehouse.compact]]
     * is the repair); keep shards=1 for exports with many problems. */
   def clusterByProblem(raw: DataFrame, shards: Int): DataFrame =
     if (shards <= 1) clusterByProblem(raw)

@@ -1,7 +1,7 @@
 package graft.lake
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 import graft.schema.Schemas
@@ -99,24 +99,29 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
   // immutable and uniquely named (Spark part-file UUIDs), so:
   //   - every mutating op commits a manifest under `_manifests/`: the
   //     COMPLETE live-file list + a monotonic version (full snapshot
-  //     listing, not a delta — replay reads ONE manifest);
-  //   - destructive rewrites MOVE replaced files into the hidden
-  //     `_archive/` at the same relative path instead of deleting, so
-  //     every committed version stays READABLE after later rewrites
-  //     (spec'd in LakehouseSpec). Concurrent-reader contract: a
-  //     version is re-resolvable at any time via load(table, asOf) —
-  //     but a DataFrame PLANNED before a concurrent rewrite holds the
-  //     pre-move paths and must be re-planned (unlike a table format,
-  //     which leaves files in place until vacuum; the same
-  //     single-writer caveat as the rest of this layer);
+  //     listing, not a delta — replay reads ONE manifest). Three sites
+  //     commit: [[append]], [[rollbackTo]] and the one rewrite path
+  //     behind every other mutation ([[rewritePartitions]]);
+  //   - a rewrite stages the new files of the touched partitions under
+  //     the hidden `_staging/<uuid>/` and only then swaps them in,
+  //     partition by partition, MOVING the replaced files into the
+  //     hidden `_archive/` at the same relative path instead of
+  //     deleting them, so every committed version stays READABLE after
+  //     later rewrites (spec'd in LakehouseSpec, RewritePathSpec). A
+  //     rewrite whose rows fail to evaluate leaves the table as it was.
+  //     Concurrent-reader contract: a version is re-resolvable at any
+  //     time via load(table, asOf) — but a DataFrame PLANNED before a
+  //     concurrent rewrite holds the pre-move paths and must be
+  //     re-planned (unlike a table format, which leaves files in place
+  //     until vacuum; the same single-writer caveat as the rest of this
+  //     layer);
   //   - [[expireSnapshots]] is the vacuum that actually reclaims
   //     space, dropping old manifests and the archived files only they
   //     reference.
   // Underscore-prefixed names are invisible to Spark directory scans,
   // so [[load]] (latest live state) is byte-identical with or without
   // snapshots present. Version assignment is last-writer-wins, not a
-  // transaction log: RACING writers still need the external catalog —
-  // the same caveat as [[upsert]].
+  // transaction log: RACING writers still need the external catalog.
   // -----------------------------------------------------------------
 
   private val ManifestName = "v(\\d+)\\.txt".r
@@ -130,26 +135,24 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     rel.split("/").exists(s => s.startsWith("_") || s.startsWith("."))
 
   /** Every file under `dir` at any depth, paired with its path
-    * relative to `dir`, in depth-first listing order; empty if `dir`
-    * does not exist. Walks with `listStatus`, not `listFiles`: the
-    * latter wraps each entry in a `LocatedFileStatus`, whose
-    * constructor reads the file's permission, and on the local FS
-    * without native Hadoop that forks an `ls -ld` per file (Spark's own
-    * file listing avoids it for the same reason). */
+    * relative to `dir` (the names as they are on disk, so a partition
+    * dir Spark escape-encoded stays encoded exactly once), in
+    * depth-first listing order; empty if `dir` does not exist. Walks
+    * with `listStatus`, not `listFiles`: the latter wraps each entry in
+    * a `LocatedFileStatus`, whose constructor reads the file's
+    * permission, and on the local FS without native Hadoop that forks
+    * an `ls -ld` per file (Spark's own file listing avoids it for the
+    * same reason). */
   private def filesUnder(fs: FileSystem,
       dir: HPath): Seq[(String, FileStatus)] = {
-    // qualify BEFORE relativizing: listed paths are fully qualified
-    // (scheme + authority); an unqualified root URI would fail to
-    // relativize them and hand back absolute URIs as "rel" paths
-    val root = fs.makeQualified(dir)
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(String, FileStatus)]
-    def walk(d: HPath): Unit = fs.listStatus(d).foreach { f =>
-      if (f.isDirectory) walk(f.getPath)
-      else if (f.isFile)
-        out += ((root.toUri.relativize(f.getPath.toUri).toString, f))
+    def walk(d: HPath, rel: String): Unit = fs.listStatus(d).foreach { f =>
+      val r = rel + f.getPath.getName
+      if (f.isDirectory) walk(f.getPath, r + "/")
+      else if (f.isFile) out += ((r, f))
     }
-    if (fs.exists(root)) walk(root)
+    if (fs.exists(dir)) walk(dir, "")
     out.toSeq
   }
 
@@ -498,11 +501,11 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
   }
 
   /** Render touched-partition rows as relative directory paths with
-    * Spark's own partition-path escaping (the [[deleteWhere]]
-    * discipline — a raw "$c=$v" string misses escaped values). */
-  private def partitionRelDirs(
-      rows: Array[org.apache.spark.sql.Row]): Seq[String] =
-    rows.toSeq.map { r =>
+    * Spark's own partition-path escaping, the names the partitioned
+    * writer gives the directories (a raw "$c=$v" string misses escaped
+    * values). */
+  private def partitionRelDirs(rows: Seq[Row]): Seq[String] =
+    rows.map { r =>
       Schemas.partitionCols.zipWithIndex.map { case (c, i) =>
         val v = if (r.isNullAt(i)) null else String.valueOf(r.get(i))
         org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -510,28 +513,76 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
       }.mkString("/")
     }
 
-  /** Move the data files of the given partition dirs into the hidden
-    * archive at the SAME relative path, so snapshots committed before
-    * a destructive rewrite keep resolving. Renames, not copies —
-    * O(touched files) metadata ops, no data movement on HDFS/local. */
-  private def archivePartitions(table: String,
-      relDirs: Seq[String]): Unit = {
+  /** The distinct partition-key rows of `df` (a bounded collect: the
+    * partitions of one mutation's scope), with a local frame of them to
+    * semi-join against, whose broadcast runs no job. */
+  private def partitionsOf(df: DataFrame): (Seq[Row], DataFrame) = {
+    val parts = df.select(Schemas.partitionCols.map(col): _*).distinct()
+    val rows = parts.collect().toSeq
+    (rows, spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      parts.schema))
+  }
+
+  /** The one rewrite path behind every mutation that replaces files
+    * ([[upsert]], [[deleteWhere]], [[compact]], [[compactZOrder]]):
+    * stage, then swap.
+    *
+    * `rows` are the complete new contents of the partitions they fall
+    * in. They are written, one file per partition (`order` sorts
+    * within it), to `<table>/_staging/<uuid>/`. The touched partitions
+    * are those the staging write produced plus `scope` (the partitions
+    * a caller rewrites even if no row of them survives); `scope = None`
+    * means the staged partitions alone. Only once every staged file
+    * exists does anything live move: per touched partition, the live
+    * files move into `_archive/` (snapshot readers keep resolving
+    * them), the staged files move into place, and a partition left with
+    * no staged file is removed. Then one version is committed. Renames
+    * are O(touched files) metadata ops; Hadoop's checksummed local FS
+    * carries the `.crc` sidecars along. A write that fails leaves the
+    * live table as it was, and the staging dir is removed either way.
+    * A rewrite that touches no partition commits nothing. */
+  private def rewritePartitions(table: String, rows: DataFrame, op: String,
+      scope: Option[Seq[Row]] = None, order: Seq[Column] = Nil): Unit = {
+    if (scope.exists(_.isEmpty)) return
     val root = new HPath(dir(table))
     val fs = hadoopFs(root)
-    relDirs.foreach { rd =>
-      val src = new HPath(root, rd)
-      if (fs.exists(src)) {
-        fs.listStatus(src).filter(_.isFile)
-          .filterNot(s => s.getPath.getName.startsWith("_") ||
-            s.getPath.getName.startsWith("."))
-          .foreach { s =>
-            val dst =
-              new HPath(s"${dir(table)}/_archive/$rd/${s.getPath.getName}")
+    val stagingRoot = new HPath(root, "_staging")
+    val staging = new HPath(stagingRoot, java.util.UUID.randomUUID.toString)
+    val parts = Schemas.partitionCols.map(col)
+    try {
+      rows.repartition(parts: _*).sortWithinPartitions(parts ++ order: _*)
+        .write.partitionBy(Schemas.partitionCols: _*)
+        .parquet(staging.toString)
+      val staged = filesUnder(fs, staging).filterNot(f => isHidden(f._1))
+        .groupBy { case (rel, _) => rel.substring(0, rel.lastIndexOf('/')) }
+      val touched =
+        (scope.fold(Seq.empty[String])(partitionRelDirs) ++ staged.keys)
+          .distinct
+      touched.foreach { rd =>
+        val live = new HPath(root, rd)
+        filesUnder(fs, live).filterNot(f => isHidden(f._1)).foreach {
+          case (name, f) =>
+            val dst = new HPath(root, s"_archive/$rd/$name")
             fs.mkdirs(dst.getParent)
-            require(fs.rename(s.getPath, dst),
-              s"archivePartitions: cannot move ${s.getPath} to $dst")
-          }
+            require(fs.rename(f.getPath, dst),
+              s"$op: cannot archive ${f.getPath} to $dst")
+        }
+        staged.get(rd) match {
+          case Some(files) =>
+            fs.mkdirs(live)
+            files.foreach { case (_, f) =>
+              val dst = new HPath(live, f.getPath.getName)
+              require(fs.rename(f.getPath, dst),
+                s"$op: cannot move ${f.getPath} to $dst")
+            }
+          case None => fs.delete(live, true)
+        }
       }
+      if (touched.nonEmpty) commitVersion(table, op)
+    } finally {
+      fs.delete(staging, true)
+      if (fs.exists(stagingRoot) && fs.listStatus(stagingRoot).isEmpty)
+        fs.delete(stagingRoot, true)
     }
   }
 
@@ -563,42 +614,24 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
 
   /** Keyed upsert — MERGE semantics without a table format's ACID log:
     * rows of `updates` replace existing rows with the same `keys`, new
-    * keys are inserted. Implemented as dynamic partition overwrite: only
-    * the partitions PRESENT IN `updates` are rewritten (existing rows of
-    * those partitions are anti-joined against the update keys and
-    * retained); untouched partitions' files are never opened. At 100 TB
-    * the cost is proportional to the touched partitions, not the table.
-    * Not transactional across partitions — pair with an external catalog
+    * keys are inserted. Only the partitions PRESENT IN `updates` are
+    * rewritten (their existing rows, read through [[loadEvolved]] so
+    * files from before an additive evolution still align, are
+    * anti-joined against the update keys and retained); untouched
+    * partitions' files are never opened. At 100 TB the cost is
+    * proportional to the touched partitions, not the table. Swapped in
+    * partition by partition ([[rewritePartitions]]), so not
+    * transactional across partitions — pair with an external catalog
     * (Iceberg/Delta per BASELINE.json) when writers race. */
   def upsert(table: String, updates: DataFrame, schema: StructType,
       keys: Seq[String]): Unit = {
     val up = align(updates, schema)
-    // bounded collect: the partitions of one update's scope (the
-    // deleteWhere discipline) — needed both for the pruning semi-join
-    // and to archive the replaced files for snapshot readers
-    val touchedRows = up.select(Schemas.partitionCols.map(col): _*)
-      .distinct().collect()
-    val touched = spark.createDataFrame(
-      spark.sparkContext.parallelize(touchedRows.toSeq),
-      StructType(Schemas.partitionCols.map(c => up.schema(c)).toArray))
-    val existing = load(table)
-      // partition pruning: only read the partitions being rewritten
-      .join(broadcast(touched), Schemas.partitionCols, "left_semi")
+    val (touched, touchedDf) = partitionsOf(up)
+    val kept = loadEvolved(table)
+      .join(broadcast(touchedDf), Schemas.partitionCols, "left_semi")
       .join(up.select(keys.map(col): _*).distinct(), keys, "left_anti")
-    val merged = align(existing, schema).union(up)
-      .repartition(Schemas.partitionCols.map(col): _*)
-      // materialize before writing: Spark refuses to overwrite a path
-      // its own plan reads, and rightly so — the checkpoint holds the
-      // touched partitions' merged rows (bounded by the update scope)
-      .localCheckpoint(true)
-    // snapshot safety: replaced files move to the archive (the merged
-    // rows are already materialized above, so nothing reads them live)
-    archivePartitions(table, partitionRelDirs(touchedRows))
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(Schemas.partitionCols: _*)
-      .parquet(dir(table))
-    commitVersion(table, "upsert")
+    rewritePartitions(table, align(kept, schema).union(up), "upsert",
+      Some(touched))
   }
 
   /** Per-partition file/byte statistics — the observability half of
@@ -621,79 +654,38 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
       .orderBy("partition")
   }
 
-  /** Targeted compaction: rewrite ONLY the partitions matching
-    * `partitionPredicate` (e.g. the fragmented ones per [[tableStats]]),
-    * via dynamic partition overwrite — the per-partition-batch mode
-    * SCALE.md prescribes for 100 TB tables, where whole-table [[compact]]
-    * is a maintenance-window operation. */
-  def compactWhere(table: String, schema: StructType,
-      partitionPredicate: org.apache.spark.sql.Column): Unit = {
-    val rewritten =
-      align(loadEvolved(table).filter(partitionPredicate), schema)
-        .repartition(Schemas.partitionCols.map(col): _*)
-        // see upsert: break the read-path/overwrite-path cycle; holds
-        // only the partitions being rewritten
-        .localCheckpoint(true)
-    val touched = rewritten
-      .select(Schemas.partitionCols.map(col): _*).distinct().collect()
-    archivePartitions(table, partitionRelDirs(touched))
-    rewritten.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(Schemas.partitionCols: _*)
-      .parquet(dir(table))
-    commitVersion(table, "compactWhere")
-  }
+  /** Small-file compaction (SURVEY §7 "small-file / tiny-partition
+    * layout" hazard: many appends × many problems → file explosion):
+    * rewrites each partition matching `partitionPredicate` into one
+    * file, preserving layout and data — Iceberg's rewrite-data-files
+    * maintenance. The default rewrites the whole table (manifest op
+    * `compact`); a predicate (e.g. the fragmented partitions per
+    * [[tableStats]]) rewrites only those (op `compactWhere`), the
+    * per-partition-batch mode SCALE.md prescribes for 100 TB tables. */
+  def compact(table: String, schema: StructType,
+      partitionPredicate: Column = lit(true)): Unit =
+    rewritePartitions(table,
+      align(loadEvolved(table).filter(partitionPredicate), schema),
+      if (partitionPredicate == lit(true)) "compact" else "compactWhere")
 
   /** Row-level delete: rewrite ONLY the partitions containing matching
     * rows (touched set via broadcast semi-join, like [[upsert]]),
-    * keeping the survivors. Dynamic partition overwrite alone cannot
-    * express a FULLY-deleted partition — a partition whose every row
-    * matches produces zero output rows, so the overwrite never rewrites
-    * its directory and stale files would survive; those directories are
-    * removed explicitly through the warehouse `FileSystem` afterwards.
-    * Cost ∝ touched partitions, the upsert discipline. */
+    * keeping the survivors; a partition none of whose rows survive is
+    * removed. Cost ∝ touched partitions, the upsert discipline. */
   def deleteWhere(table: String, schema: StructType,
-      predicate: org.apache.spark.sql.Column): Unit = {
+      predicate: Column): Unit = {
     val cur = loadEvolved(table)
-    val touched = cur.filter(predicate)
-      .select(Schemas.partitionCols.map(col): _*).distinct()
-      .collect() // bounded: the partitions of one delete's scope
-    if (touched.isEmpty) return
-    val touchedDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(touched.toSeq),
-      StructType(Schemas.partitionCols.map(c =>
-        cur.schema(c)).toArray))
-    val survivors = align(
-      cur.join(broadcast(touchedDf), Schemas.partitionCols, "left_semi")
-        // SQL DELETE semantics: only predicate-TRUE rows go; a NULL
-        // predicate keeps the row (bare !predicate would drop it)
-        .filter(!coalesce(predicate, lit(false))), schema)
-      .repartition(Schemas.partitionCols.map(col): _*)
-      .localCheckpoint(true)
-    val stillThere = survivors
-      .select(Schemas.partitionCols.map(col): _*).distinct()
-      .collect().map(_.toSeq).toSet
-    // snapshot safety: the touched partitions' current files move to
-    // the archive (survivors are already materialized above), so reads
-    // pinned to earlier versions keep resolving
-    archivePartitions(table, partitionRelDirs(touched))
-    survivors.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(Schemas.partitionCols: _*)
-      .parquet(dir(table))
-    // drop directories of fully-deleted partitions (their data files
-    // are archived; what remains is the empty directory chain, which a
-    // directory listing would otherwise keep presenting — the rel path
-    // uses Spark's OWN partition escaping, see partitionRelDirs)
-    val root = new HPath(dir(table))
-    val fs = hadoopFs(root)
-    partitionRelDirs(
-        touched.filterNot(r => stillThere.contains(r.toSeq)))
-      .foreach(rel => fs.delete(new HPath(root, rel), true))
-    commitVersion(table, "deleteWhere")
+    val (touched, touchedDf) = partitionsOf(cur.filter(predicate))
+    // SQL DELETE semantics: only predicate-TRUE rows go; a NULL
+    // predicate keeps the row (bare !predicate would drop it)
+    val survivors = cur
+      .join(broadcast(touchedDf), Schemas.partitionCols, "left_semi")
+      .filter(!coalesce(predicate, lit(false)))
+    rewritePartitions(table, align(survivors, schema), "deleteWhere",
+      Some(touched))
   }
 
-  /** Z-order compaction — [[compactWhere]] with a multi-dimensional
+  /** Z-order compaction — [[compact]] with a multi-dimensional
     * rewrite order: within each touched table partition, rows are laid
     * out along the Morton curve over `dims`
     * ([[graft.plans.ZOrderExpr]]), so parquet row-group min/max stats
@@ -703,7 +695,7 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * partition-dir layout and the data are unchanged — only the order
     * inside each partition's files differs. */
   def compactZOrder(table: String, schema: StructType, dims: Seq[String],
-      partitionPredicate: org.apache.spark.sql.Column = lit(true)): Unit = {
+      partitionPredicate: Column = lit(true)): Unit = {
     val base = align(loadEvolved(table).filter(partitionPredicate), schema)
     // Order-PRESERVING 20-bit encoding per numeric dimension (hashing
     // would scramble the value space and void min/max skipping): scale
@@ -723,69 +715,8 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
       ((col(d).cast("double") - lo) / span * ((1L << bitsPerDim) - 1))
         .cast("long")
     }
-    val rewritten = base
-      .withColumn("__zorder", graft.plans.ZOrderExpr.zorder(enc: _*))
-      .repartition(Schemas.partitionCols.map(col): _*)
-      .sortWithinPartitions(
-        (Schemas.partitionCols.map(col) :+ col("__zorder")): _*)
-      .drop("__zorder")
-      // see upsert: break the read-path/overwrite-path cycle
-      .localCheckpoint(true)
-    val touched = rewritten
-      .select(Schemas.partitionCols.map(col): _*).distinct().collect()
-    archivePartitions(table, partitionRelDirs(touched))
-    rewritten.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(Schemas.partitionCols: _*)
-      .parquet(dir(table))
-    commitVersion(table, "compactZOrder")
-  }
-
-  /** Small-file compaction (SURVEY §7 "small-file / tiny-partition
-    * layout" hazard: many appends × many problems → file explosion):
-    * rewrites each partition's files into one, preserving layout and
-    * data. Run periodically, like Iceberg's rewrite-data-files
-    * maintenance.
-    *
-    * Promotion uses the Hadoop `FileSystem` of the warehouse path, so it
-    * works wherever a 100 TB lakehouse actually lives (HDFS, S3A, local)
-    * — not just `java.io.File`. The two renames are NOT atomic as a pair
-    * (HDFS renames are individually atomic; S3A renames are copies):
-    * run compaction in a maintenance window, or front the table with a
-    * catalog that swaps locations atomically. */
-  def compact(table: String, schema: StructType): Unit = {
-    val tmp = s"${dir(table)}__compacting"
-    // hash-repartition on the partition columns: all rows of one
-    // partition dir land in one task → one output file per dir
-    align(loadEvolved(table), schema)
-      .repartition(Schemas.partitionCols.map(col): _*)
-      .write.mode("overwrite")
-      .partitionBy(Schemas.partitionCols: _*)
-      .parquet(tmp)
-    val target = new HPath(dir(table))
-    val fs = hadoopFs(target)
-    val backup = new HPath(s"${dir(table)}__old")
-    require(fs.rename(target, backup), s"compact: cannot move $target")
-    require(fs.rename(new HPath(tmp), target),
-      s"compact: cannot promote $tmp")
-    // snapshot safety across the whole-dir swap: carry the version
-    // state over, then archive every replaced data file at its old
-    // relative path so pinned snapshots keep resolving
-    Seq("_manifests", "_archive").foreach { d =>
-      val src = new HPath(backup, d)
-      if (fs.exists(src)) require(fs.rename(src, new HPath(target, d)),
-        s"compact: cannot carry $d across the swap")
-    }
-    filesUnder(fs, backup).foreach { case (rel, f) =>
-      if (!isHidden(rel)) {
-        val dst = new HPath(s"${dir(table)}/_archive/$rel")
-        fs.mkdirs(dst.getParent)
-        require(fs.rename(f.getPath, dst),
-          s"compact: cannot archive ${f.getPath}")
-      }
-    }
-    fs.delete(backup, true)
-    commitVersion(table, "compact")
+    rewritePartitions(table, base, "compactZOrder",
+      order = Seq(graft.plans.ZOrderExpr.zorder(enc: _*)))
   }
 
   /** SQL DDL registration (SURVEY S6): declares the partitioned layout as

@@ -185,8 +185,8 @@ object LayoutQueries {
     // Snapshot-lite time travel under the oracle gate (the Iceberg
     // `VERSION AS OF` analog, olake/lakehouse.py:28-35): three commits
     // — append the even-doc half (v1), append the odd half (v2), then
-    // a destructive deleteWhere(lang='en') (v3) whose dynamic overwrite
-    // MOVES every pre-delete file into the archive. The declared query
+    // a destructive deleteWhere(lang='en') (v3) whose stage-then-swap
+    // rewrite MOVES every pre-delete file into the archive. The declared query
     // reads all three versions back — v1/v2 resolve entirely through
     // archived files, v3 through the live tree — so manifest replay,
     // archive resolution and delete semantics are all hash-verified

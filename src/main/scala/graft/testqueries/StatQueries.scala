@@ -20,9 +20,10 @@ object StatQueries {
   import Tables._
 
   /** q108's side-effecting stream-dedup gate runs once per
-    * (session, sf dir) — the q58 memoization pattern. */
-  private val streamDedupCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * (session, sf dir) — the q58 memoization pattern. Holds the sink
+    * dir and its schema. */
+  private val streamDedupCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, org.apache.spark.sql.types.StructType)]()
 
   /** q103 containment threshold (percent). 25 on the synthetic corpus
     * exercises both verdicts: exact duplicates of benchmark docs sit
@@ -369,7 +370,7 @@ object StatQueries {
     // duplicate → stream → dedup → sink loop is what's verified.
     QueryDef("q108_stream_dedup", {
       (s, d) =>
-        val sink = streamDedupCache.computeIfAbsent(
+        val (sink, schema) = streamDedupCache.computeIfAbsent(
           s"${System.identityHashCode(s)}:$d", _ => {
             val tmp = java.nio.file.Files
               .createTempDirectory("q108").toString
@@ -377,8 +378,7 @@ object StatQueries {
             val out = s"$tmp/out"
             val ev = events(s, d)
             ev.union(ev).write.mode("overwrite").parquet(src)
-            s.readStream.schema(graft.lake.ParquetRead.table(s, src).schema)
-              .parquet(src)
+            s.readStream.schema(ev.schema).parquet(src)
               .dropDuplicates("event_id")
               .writeStream
               .outputMode("append")
@@ -387,9 +387,11 @@ object StatQueries {
                 .AvailableNow())
               .start(out)
               .awaitTermination()
-            out
+            (out, ev.schema)
           })
-        s.read.parquet(sink).groupBy("event_type")
+        // a user schema skips inference; Spark still resolves the sink
+        // dir through its `_spark_metadata` log
+        s.read.schema(schema).parquet(sink).groupBy("event_type")
           .agg(count(lit(1)).as("n"),
             graft.functions.Fns.sumDec(col("value")).as("total"))
           .orderBy("event_type")

@@ -55,7 +55,7 @@ object VectorEventQueries {
       .write.mode("overwrite").parquet(cellsDir)
     val lake = new graft.lake.Lakehouse(s, s"$tmp/wh")
     graft.streaming.EventsStreaming.streamArenaIngest(s, cellsDir,
-        graft.lake.ParquetRead.table(s, cellsDir).schema, lake, "stream1",
+        graft.lake.ParquetRead.schemaOf(s, cellsDir).get, lake, "stream1",
         s"$tmp/ck")
       .awaitTermination()
     lake

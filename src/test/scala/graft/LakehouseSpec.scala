@@ -110,7 +110,7 @@ class LakehouseSpec extends SparkSpec {
     assert(stats.nonEmpty && stats.forall(_.getAs[Long]("files") >= 1))
     val rowsBefore = after.orderBy("step_id", "implementation_id",
       "test_id").collect().toSeq
-    lake.compactWhere("observations", Schemas.observations,
+    lake.compact("observations", Schemas.observations,
       col("problem_id") === "p1")
     val rowsAfter = lake.observations.orderBy("step_id",
       "implementation_id", "test_id").collect().toSeq
@@ -364,9 +364,9 @@ class LakehouseSpec extends SparkSpec {
 
   test("upsert interleaved with a reader: old-or-new per partition, never partial") {
     // pins the documented non-transactional semantics (Lakehouse.upsert
-    // doc): dynamic partition overwrite rewrites ONLY touched partition
-    // dirs, so a concurrent reader sees each partition either fully-old
-    // or fully-new — or fails cleanly on a vanished file — never a
+    // doc): the rewrite swaps ONLY touched partition dirs, so a
+    // concurrent reader sees each partition either fully-old or
+    // fully-new — or fails cleanly on a vanished file — never a
     // partial/mixed partition. Untouched partitions are never affected.
     val wh = tmpDir("wh-rd")
     val lake = new Lakehouse(spark, wh)

@@ -91,4 +91,16 @@ class TableReadSpec extends SparkSpec {
       assert(n.getOrElse("count", 0) > 0, n)
     } finally jobs.close()
   }
+
+  test("q108 builds with no job once its stream sink exists") {
+    val q108 = SparkEntry.queries("q108_stream_dedup")
+    q108(spark, sf) // runs the stream into the sink once per session
+    val jobs = new JobCounter(spark.sparkContext)
+    try {
+      val df = jobs.tagged("q108")(q108(spark, sf))
+      val n = jobs.counts()
+      assert(n.getOrElse("q108", 0) == 0, n)
+      assert(df.count() > 0)
+    } finally jobs.close()
+  }
 }
