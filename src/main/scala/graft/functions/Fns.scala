@@ -128,10 +128,6 @@ object Fns {
   def sumDec(c: Column, scale: Int = 2): Column =
     sum(c.cast(s"decimal(28,$scale)")).cast("double")
 
-  /** Exact mean as double: decimal sum then one double division. */
-  def avgDec(c: Column, scale: Int = 2): Column =
-    sum(c.cast(s"decimal(28,$scale)")).cast("double") / count(c)
-
   /** Exact fixed-point sum in integer MICRO-UNITS — the fast exact path.
     * [[sumDec]]'s correctness is unconditional but its DECIMAL(28,_) sum
     * buffer exceeds 18 digits, so Spark leaves the compact-long Decimal

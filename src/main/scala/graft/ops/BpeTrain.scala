@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.Fns
 
 /** Corpus-scale BPE merge learning (Sennrich, Haddow & Birch 2016,
@@ -12,15 +13,19 @@ import graft.functions.Fns
   * classic reduction), and every merge round then works on that small
   * weighted table.
   *
-  * Per round: one pair-count aggregation (adjacent symbol pairs
-  * weighted by word frequency), one driver-side argmax of a SINGLE row
-  * (deterministic tie-break: highest count, then lexicographically
-  * smallest pair), and one codegen'd fold that applies the merge
-  * leftmost-non-overlapping inside every word — the fold's
+  * The weighted table is driver-sized (one row per distinct word), so
+  * it is collected ONCE and every merge round runs as a plain loop on
+  * the driver — the state a BPE trainer holds in one process, and the
+  * precedent of [[Similarity.ivfCentroids]] keeping its centroids on
+  * the driver between Lloyd rounds. Per round: adjacent symbol pairs
+  * weighted by word frequency, the argmax (deterministic tie-break:
+  * highest count, then the smallest (left, right) in UTF-8 byte order,
+  * Spark's string order), and the merge applied
+  * leftmost-non-overlapping inside every word — the left fold's
   * last-element test reproduces BPE's left-to-right merge order
   * exactly ('l l l' under merge (l,l) becomes '(ll) l', because the
-  * just-merged symbol no longer equals the left constituent). Lineage
-  * is checkpointed per round so plan analysis stays flat in k.
+  * just-merged symbol no longer equals the left constituent; the same
+  * fold as [[applyMerge]]).
   *
   * Learning is iterative (merge k depends on merges 1..k-1), but for a
   * FIXED k it still has a single-statement SQL form: k chained CTE
@@ -60,8 +65,9 @@ object BpeTrain {
 
   /** Learn `k` merges from the corpus. Returns one row per merge:
     * (rank, left, right, merged, pair_cnt), rank = 1-based learning
-    * order. Deterministic: ties on pair count break to the
-    * lexicographically smallest (left, right). */
+    * order; fewer than `k` rows when no adjacent pair is left.
+    * Deterministic: ties on pair count break to the smallest
+    * (left, right) in UTF-8 byte order. */
   def learnMerges(docs: DataFrame, textCol: Column, k: Int): DataFrame = {
     require(k >= 1, "learnMerges needs k >= 1")
     val spark = docs.sparkSession
@@ -73,34 +79,31 @@ object BpeTrain {
       .select(regexp_replace(col("word"), "\\|", "").as("w"), col("cnt"))
       .filter(length(col("w")) > 0)
       .select(split(col("w"), "").as("syms"), col("cnt"))
-      .localCheckpoint(true)
+      .as[(Seq[String], Long)]
+      .collect().toSeq
+    // every adjacent pair, overlapping ones included, weighted by cnt
+    def pairCounts(ws: Seq[(Seq[String], Long)]) = ws
+      .flatMap { case (syms, cnt) => syms.zip(syms.drop(1)).map(_ -> cnt) }
+      .groupMapReduce(_._1)(_._2)(_ + _)
+    // argmax order: highest count, then (left, right) in Spark's string
+    // order — unsigned UTF-8 bytes, not String.compareTo's UTF-16 units,
+    // which misorder supplementary characters
+    implicit val sparkStringOrder: Ordering[UTF8String] = _ compareTo _
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, String, Long)]
-    var round = 1
-    while (round <= k) {
-      // adjacent pairs weighted by word count; i ranges over 0-based
-      // positions 0..size-2 (words of one symbol contribute none)
-      val top = words
-        .filter(size(col("syms")) >= 2)
-        .select(col("cnt"), explode(
-          transform(sequence(lit(1), size(col("syms")) - 1),
-            i => struct(element_at(col("syms"), i).as("l"),
-              element_at(col("syms"), i + 1).as("r")))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("cnt")).as("pc"))
-        .orderBy(col("pc").desc, col("l"), col("r"))
-        .limit(1)
-        .as[(String, String, Long)]
-        .collect()
-      if (top.isEmpty) round = k + 1 // no pairs left anywhere
-      else {
-        val (l, r, pc) = top.head
-        merges += ((merges.size + 1, l, r, l + r, pc))
-        words = words
-          .select(applyMerge(col("syms"), l, r).as("syms"), col("cnt"))
-          .localCheckpoint(true)
-        round += 1
+    var pairs = pairCounts(words)
+    while (merges.size < k && pairs.nonEmpty) {
+      val ((l, r), pc) = pairs.minBy { case ((l, r), c) =>
+        (-c, UTF8String.fromString(l), UTF8String.fromString(r)) }
+      val lr = l + r
+      merges += ((merges.size + 1, l, r, lr, pc))
+      words = words.map { case (syms, cnt) =>
+        (syms.foldLeft(Vector.empty[String]) { (acc, s) =>
+          if (acc.nonEmpty && acc.last == l && s == r) acc.init :+ lr
+          else acc :+ s
+        }, cnt)
       }
+      pairs = pairCounts(words)
     }
     merges.toSeq.toDF("rank", "left", "right", "merged", "pair_cnt")
   }

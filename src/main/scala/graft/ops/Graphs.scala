@@ -13,10 +13,11 @@ import org.apache.spark.sql.functions._
   * Scale shape per iteration: one shuffle join of the (cached) edge
   * list with the current rank vector on `src`, one hash aggregation on
   * `dst` — the standard distributed PageRank step, O(|E|) work and
-  * O(|V|) state per round, no driver-side structures beyond two scalar
-  * counts. Ranks are `localCheckpoint`ed each round so the lineage (and
-  * therefore task binary size / replay cost) stays flat in the
-  * iteration count.
+  * O(|V|) state per round, no driver-side structures beyond the node
+  * count its broadcast gate reads. Ranks are `localCheckpoint`ed every
+  * `checkpointEvery` rounds so the lineage (and therefore task binary
+  * size / replay cost) stays flat in the iteration count. Triangle
+  * counting ([[triangleCount]]) is one lazy plan.
   *
   * Determinism discipline — STRONGER than the q84/q85 round-to-6dp
   * rule: rank is carried in integer MICRO-units and damping as the
@@ -162,8 +163,10 @@ object Graphs {
     * a third edge `a-c`. The ordering makes every triangle count
     * exactly once and keeps both joins equi-joins on edge endpoints —
     * shuffle work is edges ⋈ edges on a shared endpoint (Σ deg², the
-    * wedge count), never an n² node product. Returns one row:
-    * (n_nodes, n_edges, n_triangles).
+    * wedge count), never an n² node product. Returns one lazy row:
+    * (n_nodes, n_edges, n_triangles), three 1-row aggregates
+    * cross-joined; the canonical edge set's distinct is planned once
+    * per consumer and shared at run time by AQE's exchange reuse.
     */
   def triangleCount(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
@@ -172,18 +175,14 @@ object Graphs {
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") < col("b")) // drop self-loops
       .distinct()
-      .localCheckpoint(true) // three consumers below, one materialize
     val wedges = e.select(col("a"), col("b"))
       .join(e.select(col("a").as("b"), col("b").as("c")), "b")
     val triangles = wedges.join(e.select(col("a"), col("b").as("c")),
       Seq("a", "c"), "left_semi")
-    val nNodes = e.select(col("a").as("n")).union(e.select(col("b")
-      .as("n"))).distinct().count()
-    val nEdges = e.count()
-    val nTri = triangles.count()
-    val spark = edges.sparkSession
-    import spark.implicits._
-    Seq((nNodes, nEdges, nTri))
-      .toDF("n_nodes", "n_edges", "n_triangles")
+    def n(df: DataFrame, name: String) = df.agg(count(lit(1)).as(name))
+    n(e.select(col("a").as("n")).union(e.select(col("b").as("n")))
+        .distinct(), "n_nodes")
+      .crossJoin(n(e, "n_edges"))
+      .crossJoin(n(triangles, "n_triangles"))
   }
 }

@@ -210,6 +210,10 @@ class IndexOpsSpec extends SparkSpec {
       .toDF("s", "t")
     val r = Graphs.triangleCount(edges, "s", "t").collect().head
     assert((r.getLong(0), r.getLong(1), r.getLong(2)) == (5L, 6L, 2L))
+    // no edges: still exactly one all-zero row
+    val none = Graphs.triangleCount(edges.limit(0), "s", "t").collect()
+    assert(none.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .toSeq == Seq((0L, 0L, 0L)))
   }
 
   test("graft_topk works from plain SQL") {

@@ -169,6 +169,19 @@ class PipelineOpsSpec extends SparkSpec {
     assert(m.toSeq == Seq(("l", "l", 3L), ("ll", "ll", 1L)))
   }
 
+  test("bpe: ties break in UTF-8 byte order; learning stops when no " +
+      "pair is left") {
+    // (U+FF41, b) and (U+1D41A, b) both count 1. UTF-8 orders U+FF41
+    // (EF BD 81) first; String.compareTo would order U+1D41A first (its
+    // high surrogate D835 < FF41)
+    val docs = Seq((1L, "\uFF41b \uD835\uDC1Ab")).toDF("doc_id", "text")
+    val m = BpeTrain.learnMerges(docs, col("text"), 5)
+      .orderBy("rank").collect()
+      .map(r => (r.getString(1), r.getString(2), r.getLong(4)))
+    // two merges exhaust the corpus: 5 asked for, 2 learned
+    assert(m.toSeq == Seq(("\uFF41", "b", 1L), ("\uD835\uDC1A", "b", 1L)))
+  }
+
   test("bpe: tokenCountWithMerges applies the learned chain") {
     val docs = Seq((1L, "low lower"), (2L, "wow")).toDF("doc_id", "text")
     val out = BpeTrain.tokenCountWithMerges(docs, "doc_id", col("text"),

@@ -106,6 +106,8 @@ class PlanShapeSpec extends SparkSpec {
       "q95_pmi_bigrams" -> ("broadcast 1-row pair-total aggregate " +
         "over the vocabulary²-bounded checkpointed pair table (the " +
         "output sort is a parallel range sort)"),
+      "q101_triangle_count" ->
+        "1-row scalar aggregates (n_nodes, n_edges, n_triangles)",
       "q104_kmv_distinct" -> ("event-type groups ≪ corpus (sketch " +
         "rows: one per group, each O(k) state)"),
       "q114_lsh_topk" -> "top-k per query vector (≤ 8×5 rows)",
@@ -123,9 +125,9 @@ class PlanShapeSpec extends SparkSpec {
         "(one rolled-up sketch row per group)"))
     // bounded single-partition exchanges permitted per allowed query
     // (default 1): q116 carries the mass-total scalar AND the sorted
-    // top-k head
+    // top-k head; q101 one per scalar count
     val allowedCount = Map("q116_ivf_topk" -> 2,
-      "q120_ivf_topk_quantized" -> 2)
+      "q120_ivf_topk_quantized" -> 2, "q101_triangle_count" -> 3)
     // q58 excluded: building its frame executes the full
     // write→stream→append loop (side effects, ~seconds); its final
     // query is perProblemStats, which ends in a parallel orderBy.

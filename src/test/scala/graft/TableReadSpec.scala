@@ -4,6 +4,7 @@ import java.io.File
 import org.apache.spark.sql.functions._
 import graft.lake.{Lakehouse, ParquetRead}
 import graft.metrics.JobCounter
+import graft.ops.BpeTrain
 import graft.schema.Schemas
 import graft.testqueries.Tables
 
@@ -82,13 +83,31 @@ class TableReadSpec extends SparkSpec {
     val jobs = new JobCounter(spark.sparkContext)
     try {
       jobs.tagged("q04")(SparkEntry.queries("q04_pricing_summary")(spark, sf))
+      jobs.tagged("q101")(SparkEntry.queries("q101_triangle_count")(spark, sf))
       jobs.tagged("open")(lake.observations)
       // control: the tag does see a job that runs
       jobs.tagged("count")(lake.observations.count())
       val n = jobs.counts()
       assert(n.getOrElse("q04", 0) == 0, n)
+      assert(n.getOrElse("q101", 0) == 0, n)
       assert(n.getOrElse("open", 0) == 0, n)
       assert(n.getOrElse("count", 0) > 0, n)
+    } finally jobs.close()
+  }
+
+  test("q90 builds with no job beyond its one word-table collect") {
+    // measured at sf0.001 and sf0.1 on 4 cores: the collect and q90's
+    // build each run 2 jobs (the word-count shuffle stage, then the
+    // result); the per-round Spark form this replaced ran 26
+    // (2 + 8 rounds × (collect + checkpoint))
+    val jobs = new JobCounter(spark.sparkContext)
+    try {
+      jobs.tagged("words")(BpeTrain.wordFrequencies(
+        Tables.documents(spark, sf), col("text")).collect())
+      jobs.tagged("q90")(SparkEntry.queries("q90_bpe_merges")(spark, sf))
+      val n = jobs.counts()
+      assert(n.getOrElse("words", 0) > 0, n)
+      assert(n.getOrElse("q90", 0) <= n("words"), n)
     } finally jobs.close()
   }
 

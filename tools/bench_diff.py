@@ -18,9 +18,11 @@ diff cleanly over the 100+ queries the knobs don't touch. An
 warns. Artifacts without a knobs field (the driver's compact stdout
 line) are treated as unknown and diffed as-is, with a warning.
 
-Build jobs: when both artifacts carry Bench's "build_jobs" map (Spark
-jobs started while each query's DataFrame was built, last sweep), the
-per-query delta is printed for every query whose count moved.
+Jobs: when both artifacts carry Bench's "build_jobs" map (Spark jobs
+started while each query's DataFrame was built, last sweep) or its
+"run_jobs" map (jobs started while it executed), the per-query delta is
+printed for every query whose count moved — a job moved from build time
+to run time shows in both.
 
 --norm (VERDICT r11 #2): divide each per-query ratio by the MEDIAN
 ratio over all compared queries — the host factor. The shared host's
@@ -131,20 +133,21 @@ def main():
         print("improvements:")
         for ratio, name, a, b, _ in improved:
             print(f"  {name:32s} {a:7.2f}s -> {b:7.2f}s  {ratio:.2f}x")
-    build_jobs_delta(old, new)
+    jobs_delta(old, new, "build_jobs")
+    jobs_delta(old, new, "run_jobs")
     sys.exit(1 if regressions else 0)
 
 
-def build_jobs_delta(old, new):
-    """Per-query change in build-time jobs; silent unless both have them."""
-    ob, nb = old.get("build_jobs"), new.get("build_jobs")
+def jobs_delta(old, new, key):
+    """Per-query change in one jobs map; silent unless both have it."""
+    ob, nb = old.get(key), new.get(key)
     if ob is None or nb is None:
         return
     common = sorted(set(ob) & set(nb))
     moved = [(n, ob[n], nb[n]) for n in common if ob[n] != nb[n]]
-    print(f"build_jobs: {sum(ob[n] for n in common)} -> "
+    print(f"{key}: {sum(ob[n] for n in common)} -> "
           f"{sum(nb[n] for n in common)} over {len(common)} queries; "
-          f"zero-job builds {sum(ob[n] == 0 for n in common)} -> "
+          f"zero-job queries {sum(ob[n] == 0 for n in common)} -> "
           f"{sum(nb[n] == 0 for n in common)}")
     for name, a, b in moved:
         print(f"  {name:32s} {a:4d} -> {b:4d}  ({b - a:+d})")
