@@ -28,6 +28,16 @@ import org.apache.spark.sql.SparkSession
   * `CanonicalQueries.interactive` on the pruned input for single-stage
   * execution.
   *
+  * Both profiles bind the `file:` scheme to [[graft.lake.LocalFs]]
+  * ([[FileSystemConf]]). Without the native Hadoop library, Hadoop's
+  * local FileSystem changes permissions by running `chmod` as a child
+  * process, once for every file and directory a write creates (data
+  * files, their `.crc` siblings, partition directories, committer
+  * markers, manifests), and `FileContext` renames (Structured Streaming
+  * checkpoints and sinks) run `readlink` twice each; `LocalFs` does both
+  * through `java.nio` with the same modes and checksums. This is a fixed
+  * part of the session, not an option.
+  *
   * `getOrCreate` caveat (Spark semantics, not graft's): if a session is
   * already active in the JVM, it is returned as-is and this factory's
   * configs/extensions do NOT apply — build the graft session first.
@@ -43,6 +53,13 @@ object GraftSession {
       s"SPARK_GRAFT_CPUS must be an integer core count, got '$c'"))
   }
 
+  /** The `file:` FileSystem binding for both Hadoop APIs, applied by
+    * every session this factory builds (and by the test session). */
+  private[graft] val FileSystemConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[graft.lake.LocalFs].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[graft.lake.LocalFs.Context].getName)
+
   private def base(master: String): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -55,6 +72,7 @@ object GraftSession {
       // repeat of a query would pay Janino recompilation again
       // (~0.1-0.3 s/query). Sized so a full pass stays resident.
       .config("spark.sql.codegen.cache.maxEntries", "10000")
+      .config(FileSystemConf)
 
   def batch(master: String = "local[*]",
       shufflePartitions: Int = Runtime.getRuntime.availableProcessors)

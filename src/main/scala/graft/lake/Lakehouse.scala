@@ -140,9 +140,11 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * depth-first listing order; empty if `dir` does not exist. Walks
     * with `listStatus`, not `listFiles`: the latter wraps each entry in
     * a `LocatedFileStatus`, whose constructor reads the file's
-    * permission, and on the local FS without native Hadoop that forks
-    * an `ls -ld` per file (Spark's own file listing avoids it for the
-    * same reason). */
+    * permission. [[LocalFs]] only takes child processes off the write
+    * path: without native Hadoop, any read that loads a local file's
+    * permission still forks an `ls -ld` per file, and `listStatus`
+    * avoids that load (Spark's own file listing avoids it for the same
+    * reason). */
   private def filesUnder(fs: FileSystem,
       dir: HPath): Seq[(String, FileStatus)] = {
     val out = scala.collection.mutable.ArrayBuffer

@@ -65,7 +65,8 @@ object BpeTrain {
 
   /** Learn `k` merges from the corpus. Returns one row per merge:
     * (rank, left, right, merged, pair_cnt), rank = 1-based learning
-    * order; fewer than `k` rows when no adjacent pair is left.
+    * order; fewer than `k` rows when no adjacent pair is left. The
+    * frame is local and already in rank order, so it needs no sort.
     * Deterministic: ties on pair count break to the smallest
     * (left, right) in UTF-8 byte order. */
   def learnMerges(docs: DataFrame, textCol: Column, k: Int): DataFrame = {

@@ -216,11 +216,10 @@ object PipelineQueries {
     // property-asserted in PipelineOpsSpec), each round one pair-count
     // aggregation + one (count desc, pair asc) argmax + one literal
     // replace. Determinism comes from that tie-break; the textbook
-    // example corpus is additionally spec-asserted by hand.
+    // example corpus is additionally spec-asserted by hand. The merge
+    // table comes back in rank order, so the query adds no sort.
     QueryDef("q90_bpe_merges",
-      (s, d) => BpeTrain.learnMerges(documents(s, d), col("text"),
-          BpeK)
-        .orderBy("rank"),
+      (s, d) => BpeTrain.learnMerges(documents(s, d), col("text"), BpeK),
       Some(bpeLearnOracle(BpeK))),
 
     // Count-Min sketch build over the events key: the shuffle is

@@ -75,6 +75,16 @@ class PlanShapeSpec extends SparkSpec {
       s"dedup must be one digest shuffle (+ output sort):\n${planOf(df)}")
   }
 
+  test("q90: the local merge table runs with no exchange, in rank " +
+      "order") {
+    val df = byName("q90_bpe_merges")
+    val plan = planOf(df)
+    assert(!plan.contains("Exchange"),
+      s"q90's merges are already in rank order:\n$plan")
+    val ranks = df.collect().map(_.getAs[Int]("rank")).toSeq
+    assert(ranks.nonEmpty && ranks == (1 to ranks.size), ranks)
+  }
+
   test("no corpus-proportional declared query sorts through one task") {
     // Single-task sorts (Exchange SinglePartition) are allowed ONLY for
     // provably bounded results or inherent 1-row scalar aggregates.
