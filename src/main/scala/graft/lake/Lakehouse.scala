@@ -3,7 +3,10 @@ package graft.lake
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+  HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import graft.schema.Schemas
 
 /** Lakehouse storage layer: the three tables as Hive-style partitioned
@@ -11,7 +14,10 @@ import graft.schema.Schemas
   * mirroring the reference's physical layout
   * (`/root/reference/README.md:92-110`). Catalog/ACID management is
   * external (BASELINE.json); this layer owns layout, append, load, schema
-  * alignment and additive schema evolution.
+  * alignment and additive schema evolution. Like the reference's
+  * Iceberg metadata (`olake/lakehouse.py:28-35,44-127`), every committed
+  * snapshot records the table's declared schema, and every read takes
+  * its schema from there: no footer is read and no inference job runs.
   *
   * Scale design: identity partitioning on `(data_set_id, problem_id)` is
   * what the reference credits for its sub-100 ms latencies
@@ -22,6 +28,7 @@ import graft.schema.Schemas
   * `lakehouse.py:157-165`) for compression + row-group locality.
   */
 final class Lakehouse(spark: SparkSession, warehouse: String) {
+  import Lakehouse._
 
   private def dir(table: String) = s"$warehouse/$table"
 
@@ -46,6 +53,7 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * clustering); table contents are identical. */
   def append(table: String, df: DataFrame, schema: StructType,
       sortCols: Seq[String] = Nil, clustered: Boolean = false): Unit = {
+    val committed = withLatest(table, schema)
     val aligned = align(df, schema)
     val sorted =
       if (sortCols.nonEmpty && clustered)
@@ -59,34 +67,24 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     sorted.write.mode("append")
       .partitionBy(Schemas.partitionCols: _*)
       .parquet(dir(table))
-    commitVersion(table, "append")
+    commit(table, "append", committed)
   }
 
-  /** Lazy partitioned-table load; partition-key filters prune at the file
-    * index, predicates/projections push into the parquet scan. The
-    * schema comes from one footer read on the driver
-    * ([[ParquetRead.table]]), so opening a table launches no Spark job.
-    * A known table whose directory holds no data files (e.g. every
-    * append so far produced zero rows — an export with no metadata rows)
-    * falls back to Spark's inference, whose UNABLE_TO_INFER_SCHEMA error
-    * becomes an EMPTY, correctly-typed frame, the table-format
+  /** Lazy partitioned-table load of the latest snapshot, i.e.
+    * `load(table, currentVersion(table))`: partition-key filters prune
+    * at the file index, predicates/projections push into the parquet
+    * scan. The schema is the one the snapshot's manifest records, so
+    * opening a table launches no Spark job, and files written before an
+    * additive evolution read the new columns as typed NULLs
+    * (`lakehouse.py:281-336`). A snapshot with no data file (every
+    * append so far produced zero rows — an export with no metadata
+    * rows) reads as the EMPTY, correctly-typed frame, the table-format
     * behavior. */
-  def load(table: String): DataFrame =
-    try ParquetRead.table(spark, dir(table))
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getMessage != null &&
-            e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") &&
-            Schemas.byName.contains(table) =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          Schemas.byName(table))
-    }
-
-  /** Load with `mergeSchema` — tolerates files written before an additive
-    * schema evolution (`lakehouse.py:281-336`). */
-  def loadEvolved(table: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(dir(table))
+  def load(table: String): DataFrame = {
+    val v = currentVersion(table)
+    require(v > 0, s"table '$table' has no committed snapshot in $warehouse")
+    load(table, v)
+  }
 
   // -----------------------------------------------------------------
   // Snapshot-lite versioning — read-at-version time travel.
@@ -97,11 +95,20 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
   // transaction semantics stay external per BASELINE.json, but the
   // READ-AT-VERSION half needs no format dependency. Data files are
   // immutable and uniquely named (Spark part-file UUIDs), so:
-  //   - every mutating op commits a manifest under `_manifests/`: the
-  //     COMPLETE live-file list + a monotonic version (full snapshot
-  //     listing, not a delta — replay reads ONE manifest). Three sites
-  //     commit: [[append]], [[rollbackTo]] and the one rewrite path
-  //     behind every other mutation ([[rewritePartitions]]);
+  //   - every mutating op commits a manifest under `_manifests/`:
+  //       graft-manifest v=<version> op=<op>
+  //       schema <the table schema as Spark's one-line JSON>
+  //       <one live data file per line, relative to the table dir>
+  //     The file list is COMPLETE (full snapshot listing, not a delta —
+  //     replay reads ONE manifest). Three sites commit: [[append]]
+  //     (schema: the latest one plus the append's new columns),
+  //     [[rollbackTo]] (the target version's schema) and the one
+  //     rewrite path behind every other mutation
+  //     ([[rewritePartitions]], like append). Every read — latest,
+  //     at-version, incremental, diff and the rewrites' own — reads
+  //     with its snapshot's recorded schema and exactly its files, so
+  //     no read infers a schema or lists the table. A manifest with no
+  //     schema line fails loudly;
   //   - a rewrite stages the new files of the touched partitions under
   //     the hidden `_staging/<uuid>/` and only then swaps them in,
   //     partition by partition, MOVING the replaced files into the
@@ -119,8 +126,8 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
   //     space, dropping old manifests and the archived files only they
   //     reference.
   // Underscore-prefixed names are invisible to Spark directory scans,
-  // so [[load]] (latest live state) is byte-identical with or without
-  // snapshots present. Version assignment is last-writer-wins, not a
+  // so a catalog table over the directory ([[createTable]]) sees the
+  // live state only. Version assignment is last-writer-wins, not a
   // transaction log: RACING writers still need the external catalog.
   // -----------------------------------------------------------------
 
@@ -177,31 +184,63 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
   private def manifestPath(table: String, v: Int): HPath =
     new HPath(new HPath(dir(table), "_manifests"), f"v$v%08d.txt")
 
-  private def readManifest(table: String, v: Int): Seq[String] = {
+  private val SchemaLine = "schema "
+
+  private def manifest(table: String, v: Int): Manifest = {
     val p = manifestPath(table, v)
     val fs = hadoopFs(p)
     require(fs.exists(p),
       s"no snapshot v$v for table '$table' (have v${currentVersion(table)})" +
         " - never committed, or removed by expireSnapshots")
     val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .drop(1).filter(_.nonEmpty).toList
-    finally in.close()
+    val lines =
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+      finally in.close()
+    val schema = lines.lift(1).filter(_.startsWith(SchemaLine))
+    require(schema.isDefined,
+      s"snapshot v$v of '$table' records no table schema: its manifest " +
+        "predates schema-recording commits")
+    Manifest(
+      lines.head.split(" op=", 2) match {
+        case Array(_, op) => op
+        case _ => "unknown"
+      },
+      DataType.fromJson(schema.get.stripPrefix(SchemaLine))
+        .asInstanceOf[StructType],
+      lines.drop(2).filter(_.nonEmpty))
   }
 
-  /** Commit the table's CURRENT live-file set as the next snapshot
-    * version. Called by every mutating op; callable directly to pin a
-    * baseline on a table populated out-of-band. Returns the version. */
-  def commitVersion(table: String, op: String): Int = {
+  /** `schema` evolved onto the table's latest committed schema: the
+    * committed columns keep their order and type, the new ones follow.
+    * A column whose type differs from the committed one fails loudly —
+    * evolution is additive only. */
+  private def withLatest(table: String, schema: StructType): StructType =
+    currentVersion(table) match {
+      case 0 => schema
+      case v =>
+        val prev = manifest(table, v).schema
+        schema.fields.foreach { f =>
+          prev.find(_.name == f.name).foreach(p =>
+            require(p.dataType == f.dataType,
+              s"'$table'.${f.name} is ${p.dataType.sql}, cannot write it " +
+                s"as ${f.dataType.sql}: schema evolution is additive only"))
+        }
+        StructType(prev.fields ++
+          schema.fields.filterNot(f => prev.fieldNames.contains(f.name)))
+    }
+
+  /** Commit the table's CURRENT live-file set and `schema` as the next
+    * snapshot version. Returns the version. */
+  private def commit(table: String, op: String, schema: StructType): Int = {
     val v = currentVersion(table) + 1
     val files = liveFiles(table).sorted
     val p = manifestPath(table, v)
     val fs = hadoopFs(p)
     fs.mkdirs(p.getParent)
     val out = fs.create(p, true)
-    try out.write(
-      (s"graft-manifest v=$v op=$op\n" + files.mkString("\n") + "\n")
-        .getBytes("UTF-8"))
+    val text = s"graft-manifest v=$v op=$op\n$SchemaLine${schema.json}\n" +
+      files.map(_ + "\n").mkString
+    try out.write(text.getBytes("UTF-8"))
     finally out.close()
     v
   }
@@ -212,50 +251,66 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * it); a file in neither was reclaimed by [[expireSnapshots]] and
     * the read fails loudly rather than returning a silently partial
     * table. */
-  def load(table: String, asOf: Int): DataFrame =
-    readRels(table, readManifest(table, asOf), s"snapshot v$asOf")
+  def load(table: String, asOf: Int): DataFrame = {
+    val m = manifest(table, asOf)
+    readRels(table, m.schema, m.files, s"snapshot v$asOf")
+  }
 
   /** The op string a snapshot's manifest header recorded at commit
     * time ("append", "deleteWhere", "compact", ...). */
-  def manifestOp(table: String, v: Int): String = {
-    val p = manifestPath(table, v)
-    val fs = hadoopFs(p)
-    require(fs.exists(p),
-      s"no snapshot v$v for table '$table' (have v${currentVersion(table)})")
-    val in = fs.open(p)
-    val header =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().next()
-      finally in.close()
-    header.split(" op=", 2) match {
-      case Array(_, op) => op
-      case _ => "unknown"
-    }
-  }
+  def manifestOp(table: String, v: Int): String = manifest(table, v).op
 
-  /** Resolve manifest-relative paths live-first-then-archive, failing
-    * loudly on files reclaimed by [[expireSnapshots]]; read each group
-    * anchored at its own basePath so partition parsing is identical. */
-  private def readRels(table: String, rels: Seq[String],
+  /** Read manifest-relative paths with `schema`, resolving each
+    * live-first-then-archive and failing loudly on files reclaimed by
+    * [[expireSnapshots]]; each group is read anchored at its own
+    * basePath so partition parsing is identical. No file: the typed
+    * empty frame. */
+  private def readRels(table: String, schema: StructType, rels: Seq[String],
       what: String): DataFrame = {
+    if (rels.isEmpty)
+      return spark.createDataFrame(java.util.List.of[Row](), schema)
     val root = new HPath(dir(table))
+    val archive = new HPath(root, "_archive")
     val fs = hadoopFs(root)
-    if (rels.isEmpty) return load(table).limit(0)
-    val (live, archived) =
-      rels.partition(r => fs.exists(new HPath(root, r)))
-    val missing = archived
-      .filterNot(r => fs.exists(new HPath(s"${dir(table)}/_archive/$r")))
+    def status(base: HPath, rel: String): Option[FileStatus] =
+      try Some(fs.getFileStatus(new HPath(base, rel)))
+      catch { case _: java.io.FileNotFoundException => None }
+    val found = rels.map(r =>
+      r -> status(root, r).map(root -> _).orElse(
+        status(archive, r).map(archive -> _)))
+    val missing = found.collect { case (r, None) => r }
     require(missing.isEmpty,
       s"$what of '$table' is no longer readable: ${missing.size} " +
         s"file(s) reclaimed by expireSnapshots " +
         s"(e.g. ${missing.take(3).mkString(", ")})")
-    Seq(dir(table) -> live, s"${dir(table)}/_archive" -> archived)
-      .filter(_._2.nonEmpty)
-      .map { case (base, rs) =>
-        spark.read.option("basePath", base)
-          .option("mergeSchema", "true")
-          .parquet(rs.map(r => s"$base/$r"): _*)
-      }
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val byBase = found.flatMap(_._2).groupMap(_._1)(_._2)
+    Seq(root, archive).flatMap(b => byBase.get(b).map(scan(schema, b, _)))
+      .reduce(_.union(_))
+  }
+
+  /** A Parquet scan of exactly `files` below `base`, read with `schema`.
+    * The file index is handed the files' statuses, so building it lists
+    * nothing: Spark's own reader lists every path it is given, and past
+    * `parallelPartitionDiscovery.threshold` (32) paths it runs a
+    * listing job. Partition values are parsed from the paths below
+    * `base` and typed by `schema`, as a directory read types them. */
+  private def scan(schema: StructType, base: HPath,
+      files: Seq[FileStatus]): DataFrame = {
+    val known = files.map(f => f.getPath -> Array(f)).toMap
+    val statuses = new FileStatusCache {
+      override def getLeafFiles(p: HPath): Option[Array[FileStatus]] =
+        known.get(p)
+      def putLeafFiles(p: HPath, fs: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val opts = Map("basePath" -> base.toString)
+    val index = new InMemoryFileIndex(spark, files.map(_.getPath), opts,
+      Some(schema), statuses)
+    val parts = index.partitionSchema.fieldNames.toSet
+    spark.baseRelationToDataFrame(HadoopFsRelation(index,
+      index.partitionSchema,
+      StructType(schema.filterNot(f => parts(f.name))).toNullable,
+      None, new ParquetFileFormat, opts)(spark))
   }
 
   /** Incremental (CDC-style) read: the rows ADDED between snapshots
@@ -286,9 +341,10 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
         "use changeDiff for row-level changes across rewrites")
     val from =
       if (fromV == 0) Set.empty[String]
-      else readManifest(table, fromV).toSet
-    val added = readManifest(table, toV).filterNot(from)
-    readRels(table, added, s"incremental read v$fromV..v$toV")
+      else manifest(table, fromV).files.toSet
+    val to = manifest(table, toV)
+    readRels(table, to.schema, to.files.filterNot(from),
+      s"incremental read v$fromV..v$toV")
   }
 
   /** Row-level change diff between ANY two snapshots: bag-semantics
@@ -358,9 +414,11 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * that earlier rewrites archived move back to their live paths.
     * Every other manifest stays readable — resolution is live-first-
     * then-archive, and each file still exists at exactly one of the
-    * two. Returns the new version number. */
+    * two. The new commit records v's schema, so the live table reads
+    * exactly as `load(table, v)`. Returns the new version number. */
   def rollbackTo(table: String, v: Int): Int = {
-    val target = readManifest(table, v).toSet
+    val m = manifest(table, v)
+    val target = m.files.toSet
     val root = new HPath(dir(table))
     val fs = hadoopFs(root)
     val live = liveFiles(table).toSet
@@ -379,7 +437,7 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
       fs.mkdirs(dst.getParent)
       require(fs.rename(src, dst), s"rollbackTo: cannot restore $rel")
     }
-    commitVersion(table, s"rollback-to-v$v")
+    commit(table, s"rollback-to-v$v", m.schema)
   }
 
   // -----------------------------------------------------------------
@@ -396,28 +454,30 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
   // replaces the nightly full GROUP BY with work proportional to one
   // day's arrivals. State swaps through a per-version directory +
   // watermark marker, so a concurrent reader sees the old state or
-  // the new — never a half-written directory.
+  // the new — never a half-written directory. The marker's second line
+  // records the state's schema, which [[readStats]] reads with.
   // -----------------------------------------------------------------
 
   private def mvRoot(name: String) = s"$warehouse/_mv/$name"
 
-  private def mvMarker(name: String): Option[(Int, String)] = {
+  private def mvMarker(name: String): Option[MvMarker] = {
     val p = new HPath(s"${mvRoot(name)}/VERSION")
     val fs = hadoopFs(p)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      val line =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().next()
+      val lines =
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
         finally in.close()
-      val Array(v, sig) = line.split(" ", 2)
-      Some(v.toInt -> sig)
+      val Array(v, sig) = lines.head.split(" ", 2)
+      Some(MvMarker(v.toInt, sig,
+        DataType.fromJson(lines(1)).asInstanceOf[StructType]))
     }
   }
 
   /** The source snapshot version [[readStats]] currently reflects;
     * 0 = never refreshed. */
-  def statsVersion(name: String): Int = mvMarker(name).fold(0)(_._1)
+  def statsVersion(name: String): Int = mvMarker(name).fold(0)(_.v)
 
   /** How a [[refreshStats]] call brought the view current. */
   sealed trait RefreshMode
@@ -436,10 +496,10 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
       v: String): RefreshMode = {
     import graft.ops.IncrementalAgg
     val sig = s"$source|${keys.mkString(",")}|$v"
-    mvMarker(name).foreach { case (_, s) =>
-      require(s == sig,
+    mvMarker(name).foreach { m =>
+      require(m.sig == sig,
         s"refreshStats('$name'): signature mismatch - state was built " +
-          s"as [$s], asked to refresh as [$sig]; use a new view name")
+          s"as [${m.sig}], asked to refresh as [$sig]; use a new view name")
     }
     val cur = currentVersion(source)
     val last = statsVersion(name)
@@ -457,7 +517,8 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     val p = new HPath(s"${mvRoot(name)}/VERSION")
     val fs = hadoopFs(p)
     val out = fs.create(p, true)
-    try out.write(s"$cur $sig\n".getBytes("UTF-8")) finally out.close()
+    try out.write(s"$cur $sig\n${state.schema.json}\n".getBytes("UTF-8"))
+    finally out.close()
     // reclaim superseded state dirs (readers of the OLD marker may
     // still be scanning — same single-writer caveat as upsert)
     fs.listStatus(new HPath(mvRoot(name)))
@@ -473,9 +534,10 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * bit-identical to `IncrementalAgg.statsOf` over the source at the
     * watermark version (monoid merge exactness, oracle q80). */
   def readStats(name: String): DataFrame = {
-    val v = statsVersion(name)
-    require(v > 0, s"materialized view '$name' was never refreshed")
-    ParquetRead.table(spark, s"${mvRoot(name)}/state-v$v.parquet")
+    val m = mvMarker(name)
+    require(m.isDefined, s"materialized view '$name' was never refreshed")
+    spark.read.schema(m.get.schema)
+      .parquet(s"${mvRoot(name)}/state-v${m.get.v}.parquet")
   }
 
   /** Vacuum: keep the latest `keepLast` snapshots, drop older
@@ -495,7 +557,7 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
       versions.splitAt(math.max(0, versions.length - keepLast))
     if (expire.isEmpty) return
     val kept: Set[String] =
-      keep.flatMap(v => readManifest(table, v)).toSet
+      keep.flatMap(v => manifest(table, v).files).toSet
     filesUnder(fs, new HPath(root, "_archive")).foreach { case (rel, f) =>
       if (!kept.contains(rel)) fs.delete(f.getPath, false)
     }
@@ -538,14 +600,19 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * exists does anything live move: per touched partition, the live
     * files move into `_archive/` (snapshot readers keep resolving
     * them), the staged files move into place, and a partition left with
-    * no staged file is removed. Then one version is committed. Renames
+    * no staged file is removed. Then one version is committed, with
+    * `schema` evolved onto the latest committed one as [[append]] does
+    * (rows the caller aligned to an older schema leave the newer
+    * columns NULL in the touched partitions). Renames
     * are O(touched files) metadata ops; Hadoop's checksummed local FS
     * carries the `.crc` sidecars along. A write that fails leaves the
     * live table as it was, and the staging dir is removed either way.
     * A rewrite that touches no partition commits nothing. */
-  private def rewritePartitions(table: String, rows: DataFrame, op: String,
-      scope: Option[Seq[Row]] = None, order: Seq[Column] = Nil): Unit = {
+  private def rewritePartitions(table: String, rows: DataFrame,
+      schema: StructType, op: String, scope: Option[Seq[Row]] = None,
+      order: Seq[Column] = Nil): Unit = {
     if (scope.exists(_.isEmpty)) return
+    val committed = withLatest(table, schema)
     val root = new HPath(dir(table))
     val fs = hadoopFs(root)
     val stagingRoot = new HPath(root, "_staging")
@@ -580,7 +647,7 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
           case None => fs.delete(live, true)
         }
       }
-      if (touched.nonEmpty) commitVersion(table, op)
+      if (touched.nonEmpty) commit(table, op, committed)
     } finally {
       fs.delete(staging, true)
       if (fs.exists(stagingRoot) && fs.listStatus(stagingRoot).isEmpty)
@@ -617,9 +684,8 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
   /** Keyed upsert — MERGE semantics without a table format's ACID log:
     * rows of `updates` replace existing rows with the same `keys`, new
     * keys are inserted. Only the partitions PRESENT IN `updates` are
-    * rewritten (their existing rows, read through [[loadEvolved]] so
-    * files from before an additive evolution still align, are
-    * anti-joined against the update keys and retained); untouched
+    * rewritten (their existing rows are anti-joined against the update
+    * keys and retained); untouched
     * partitions' files are never opened. At 100 TB the cost is
     * proportional to the touched partitions, not the table. Swapped in
     * partition by partition ([[rewritePartitions]]), so not
@@ -629,11 +695,11 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
       keys: Seq[String]): Unit = {
     val up = align(updates, schema)
     val (touched, touchedDf) = partitionsOf(up)
-    val kept = loadEvolved(table)
+    val kept = load(table)
       .join(broadcast(touchedDf), Schemas.partitionCols, "left_semi")
       .join(up.select(keys.map(col): _*).distinct(), keys, "left_anti")
-    rewritePartitions(table, align(kept, schema).union(up), "upsert",
-      Some(touched))
+    rewritePartitions(table, align(kept, schema).union(up), schema,
+      "upsert", Some(touched))
   }
 
   /** Per-partition file/byte statistics — the observability half of
@@ -667,7 +733,7 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
   def compact(table: String, schema: StructType,
       partitionPredicate: Column = lit(true)): Unit =
     rewritePartitions(table,
-      align(loadEvolved(table).filter(partitionPredicate), schema),
+      align(load(table).filter(partitionPredicate), schema), schema,
       if (partitionPredicate == lit(true)) "compact" else "compactWhere")
 
   /** Row-level delete: rewrite ONLY the partitions containing matching
@@ -676,15 +742,15 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * removed. Cost ∝ touched partitions, the upsert discipline. */
   def deleteWhere(table: String, schema: StructType,
       predicate: Column): Unit = {
-    val cur = loadEvolved(table)
+    val cur = load(table)
     val (touched, touchedDf) = partitionsOf(cur.filter(predicate))
     // SQL DELETE semantics: only predicate-TRUE rows go; a NULL
     // predicate keeps the row (bare !predicate would drop it)
     val survivors = cur
       .join(broadcast(touchedDf), Schemas.partitionCols, "left_semi")
       .filter(!coalesce(predicate, lit(false)))
-    rewritePartitions(table, align(survivors, schema), "deleteWhere",
-      Some(touched))
+    rewritePartitions(table, align(survivors, schema), schema,
+      "deleteWhere", Some(touched))
   }
 
   /** Z-order compaction — [[compact]] with a multi-dimensional
@@ -698,7 +764,7 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * inside each partition's files differs. */
   def compactZOrder(table: String, schema: StructType, dims: Seq[String],
       partitionPredicate: Column = lit(true)): Unit = {
-    val base = align(loadEvolved(table).filter(partitionPredicate), schema)
+    val base = align(load(table).filter(partitionPredicate), schema)
     // Order-PRESERVING 20-bit encoding per numeric dimension (hashing
     // would scramble the value space and void min/max skipping): scale
     // by the observed [min, max] — one small agg job, the same
@@ -717,7 +783,7 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
       ((col(d).cast("double") - lo) / span * ((1L << bitsPerDim) - 1))
         .cast("long")
     }
-    rewritePartitions(table, base, "compactZOrder",
+    rewritePartitions(table, base, schema, "compactZOrder",
       order = Seq(graft.plans.ZOrderExpr.zorder(enc: _*)))
   }
 
@@ -752,10 +818,7 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * whole-table materialization (SURVEY EP3). */
   def query(sql: String): DataFrame = {
     Seq("observations", "code_implementations", "tests").foreach { t =>
-      // existence via the warehouse path's FileSystem (HDFS/S3A/local),
-      // same as compact — not java.io.File
-      val p = new org.apache.hadoop.fs.Path(dir(t))
-      if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) {
+      if (currentVersion(t) > 0) {
         load(t).createOrReplaceTempView(t)
         // `VERSION AS OF n` resolves through the manifest at analysis
         // time (GraftExtensions must be installed on the session);
@@ -766,4 +829,16 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     }
     spark.sql(sql)
   }
+}
+
+private object Lakehouse {
+
+  /** One committed snapshot: the op that made it, the table schema and
+    * the data files, relative to the table dir. */
+  final case class Manifest(op: String, schema: StructType,
+      files: Seq[String])
+
+  /** A materialized view's marker: the source version its state
+    * reflects, the (source, keys, value) signature, the state schema. */
+  final case class MvMarker(v: Int, sig: String, schema: StructType)
 }

@@ -62,31 +62,20 @@ object CanonicalQueries {
       .agg(min(col("output")))
       .orderBy("test_id", "step_id")
 
-  /** Dynamic-pivot variant (reference behavior: column set is
-    * data-dependent). Two jobs: distinct pass then pivot. Sorted for
+  /** Dynamic variant (reference behavior: column set is
+    * data-dependent). Two jobs: distinct pass then the map aggregation
+    * of [[srmOutputView]], which has no pivot width cap. Sorted for
     * deterministic column order.
     *
-    * Width guard: the discovered implementation list is unbounded —
-    * an adversarial problem with 10⁵ implementations would both blow
-    * the driver-side column list and (in the pivot form) exceed
-    * `spark.sql.pivotMaxValues` semantics silently. Above `maxWidth`
-    * implementations the view is built through [[srmOutputViewChunked]]
-    * (maxWidth-column pivots joined on the (test_id, step_id) spine)
-    * instead of one flat aggregation. Results are identical either way
-    * (spec-asserted); `maxWidth` defaults to Spark's own
-    * `pivotMaxValues` default.
-    *
-    * Driver guard: the distinct-implementation collect itself is also
-    * bounded — the chunked path caps pivot WIDTH but a pathological
-    * 10⁷-implementation column would OOM the driver during discovery,
-    * before chunking ever engages. The collect reads `maxImpls + 1`
-    * rows at most (LIMIT is pushed into the distinct, so the overflow
-    * check costs one extra row, not a count job) and fails loudly past
-    * the cap: a view wider than ~100k columns is a modeling error, not
-    * a pivot. */
+    * Driver guard: the discovered implementation list is unbounded, and
+    * a pathological 10⁷-implementation column would OOM the driver
+    * during discovery. The collect reads `maxImpls + 1` rows at most
+    * (LIMIT is pushed into the distinct, so the overflow check costs
+    * one extra row, not a count job) and fails loudly past the cap: a
+    * view wider than ~100k columns is a modeling error, not a pivot. */
   def srmOutputViewDynamic(observations: DataFrame,
-      maxWidth: Int = 10000, maxImpls: Int = 100000): DataFrame = {
-    require(maxWidth > 0 && maxImpls >= maxWidth)
+      maxImpls: Int = 100000): DataFrame = {
+    require(maxImpls > 0)
     val impls = observations.select("implementation_id").distinct()
       .limit(maxImpls + 1)
       .collect().map(_.getString(0)).sorted.toSeq
@@ -95,30 +84,7 @@ object CanonicalQueries {
         s"srmOutputViewDynamic: more than $maxImpls distinct " +
           "implementations - a pivot this wide is unusable; raise " +
           "maxImpls explicitly or aggregate instead of pivoting")
-    if (impls.size <= maxWidth) srmOutputView(observations, impls)
-    else srmOutputViewChunked(observations, impls, maxWidth)
-  }
-
-  /** Chunked pivot for very wide implementation sets (SURVEY §7:
-    * `spark.sql.pivotMaxValues` caps a single pivot at 10k columns and
-    * pivot width is memory-bound): pivot `chunkSize` implementations at
-    * a time and join the chunks on the (test_id, step_id) spine. Chunk
-    * joins are 1:1 on the grouping key, so each is a cheap sort-merge on
-    * an already-aggregated (small) spine. */
-  def srmOutputViewChunked(observations: DataFrame,
-      implValues: Seq[String], chunkSize: Int): DataFrame = {
-    require(chunkSize > 0)
-    val chunks = implValues.grouped(chunkSize).toSeq
-    val pivots = chunks.map { vs =>
-      observations
-        .filter(col("implementation_id").isin(vs: _*))
-        .groupBy(col("test_id"), col("step_id"))
-        .pivot("implementation_id", vs)
-        .agg(min(col("output")))
-    }
-    pivots.reduce((a, b) =>
-        a.join(b, Seq("test_id", "step_id"), "full_outer"))
-      .orderBy("test_id", "step_id")
+    srmOutputView(observations, impls)
   }
 
   /** Per-(impl, test, run) output-trace signature — the inner stage of

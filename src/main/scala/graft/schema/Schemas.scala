@@ -17,12 +17,6 @@ object Schemas {
 
   val partitionCols: Seq[String] = Seq("data_set_id", "problem_id")
 
-  /** Declared schema by table name (empty-table load fallback). */
-  lazy val byName: Map[String, StructType] = Map(
-    "observations" -> observations,
-    "code_implementations" -> codeImplementations,
-    "tests" -> tests)
-
   /** lakehouse.py:49-88 — the SRC fact table (20 fields). */
   val observations: StructType = StructType(Seq(
     StructField("data_set_id", StringType, nullable = false),

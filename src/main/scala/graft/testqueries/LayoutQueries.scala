@@ -22,28 +22,6 @@ import graft.plans.ZOrderExpr
 object LayoutQueries {
   import Tables._
 
-  /** Wall time spent building the q77-q80 versioned warehouses —
-    * side-effecting maintenance work (appends, deletes, rollbacks,
-    * stats refreshes) memoized per (session, sf dir, query) exactly
-    * like q58's stream gate, and reported separately by Bench as
-    * `maint_gate_s`: the declared queries then measure the READ
-    * paths (version resolution, incremental read, change diff,
-    * stats read), not the repeated reconstruction of the same
-    * warehouse. Verify's single invocation still runs the whole
-    * build+read loop under the oracle gate. */
-  val maintGateMillis = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val whCache = new java.util.concurrent
-    .ConcurrentHashMap[String, graft.lake.Lakehouse]()
-  private def maintGate(s: org.apache.spark.sql.SparkSession, d: String,
-      tag: String)(build: => graft.lake.Lakehouse): graft.lake.Lakehouse =
-    whCache.computeIfAbsent(
-      s"${System.identityHashCode(s)}:$d:$tag", _ => {
-        val t0 = System.nanoTime()
-        val l = build
-        maintGateMillis.addAndGet((System.nanoTime() - t0) / 1000000L)
-        l
-      })
-
   val all: Seq[QueryDef] = Seq(
 
     // The 2-D Morton interleave evaluated over the whole corpus (the
@@ -135,7 +113,7 @@ object LayoutQueries {
     // Additive schema evolution under the oracle gate (the reference's
     // evolve_*_schema, lakehouse.py:281-336): era-1 rows are written
     // WITHOUT column w, the schema evolves, era-2 rows carry it, and
-    // the evolved read must surface era-1 rows with a typed NULL w —
+    // the plain table read must surface era-1 rows with a typed NULL w —
     // proven by n_w/min_w aggregating only era-2 values. The DuckDB
     // mirror reproduces both eras from the same source table with a
     // CASE standing in for the NULL-filled column. 1/5 of orders keeps
@@ -161,7 +139,7 @@ object LayoutQueries {
             col("o_orderpriority").as("w"))
         lake.append("evo", o.filter(col("k") % 10 === 0), v1)
         lake.append("evo", o.filter(col("k") % 10 === 5), v2)
-        lake.loadEvolved("evo")
+        lake.load("evo")
           .groupBy("problem_id")
           .agg(count(lit(1)).as("n_rows"),
             count(col("w")).as("n_w"),
@@ -196,7 +174,7 @@ object LayoutQueries {
     QueryDef("q77_time_travel",
       (s, d) => {
         import org.apache.spark.sql.types._
-        val lake = maintGate(s, d, "q77") {
+        val lake = QueryDef.setupOnce(s, d, "q77") {
           val l = new graft.lake.Lakehouse(s,
             java.nio.file.Files.createTempDirectory("q77wh").toString)
           val sch = StructType(Seq(
@@ -249,7 +227,7 @@ object LayoutQueries {
     QueryDef("q78_incremental_read",
       (s, d) => {
         import org.apache.spark.sql.types._
-        val lake = maintGate(s, d, "q78") {
+        val lake = QueryDef.setupOnce(s, d, "q78") {
           val l = new graft.lake.Lakehouse(s,
             java.nio.file.Files.createTempDirectory("q78wh").toString)
           val sch = StructType(Seq(
@@ -297,7 +275,7 @@ object LayoutQueries {
     QueryDef("q79_rollback_diff",
       (s, d) => {
         import org.apache.spark.sql.types._
-        val lake = maintGate(s, d, "q79") {
+        val lake = QueryDef.setupOnce(s, d, "q79") {
           val l = new graft.lake.Lakehouse(s,
             java.nio.file.Files.createTempDirectory("q79wh").toString)
           val sch = StructType(Seq(
@@ -357,7 +335,7 @@ object LayoutQueries {
     QueryDef("q80_materialized_stats",
       (s, d) => {
         import org.apache.spark.sql.types._
-        val lake = maintGate(s, d, "q80") {
+        val lake = QueryDef.setupOnce(s, d, "q80") {
           val l = new graft.lake.Lakehouse(s,
             java.nio.file.Files.createTempDirectory("q80wh").toString)
           val sch = StructType(Seq(

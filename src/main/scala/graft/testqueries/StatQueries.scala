@@ -19,12 +19,6 @@ import graft.ops.{Sketches, TextAnalysis}
 object StatQueries {
   import Tables._
 
-  /** q108's side-effecting stream-dedup gate runs once per
-    * (session, sf dir) — the q58 memoization pattern. Holds the sink
-    * dir and its schema. */
-  private val streamDedupCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.sql.types.StructType)]()
-
   /** q103 containment threshold (percent). 25 on the synthetic corpus
     * exercises both verdicts: exact duplicates of benchmark docs sit
     * at 100%, unrelated docs share only stop-word 4-grams. */
@@ -370,25 +364,26 @@ object StatQueries {
     // duplicate → stream → dedup → sink loop is what's verified.
     QueryDef("q108_stream_dedup", {
       (s, d) =>
-        val (sink, schema) = streamDedupCache.computeIfAbsent(
-          s"${System.identityHashCode(s)}:$d", _ => {
-            val tmp = java.nio.file.Files
-              .createTempDirectory("q108").toString
-            val src = s"$tmp/src"
-            val out = s"$tmp/out"
-            val ev = events(s, d)
-            ev.union(ev).write.mode("overwrite").parquet(src)
-            s.readStream.schema(ev.schema).parquet(src)
-              .dropDuplicates("event_id")
-              .writeStream
-              .outputMode("append")
-              .option("checkpointLocation", s"$tmp/ck")
-              .trigger(org.apache.spark.sql.streaming.Trigger
-                .AvailableNow())
-              .start(out)
-              .awaitTermination()
-            (out, ev.schema)
-          })
+        // the stream into the sink is a set-up; it yields the sink dir
+        // and its schema
+        val (sink, schema) = QueryDef.setupOnce(s, d, "q108") {
+          val tmp = java.nio.file.Files
+            .createTempDirectory("q108").toString
+          val src = s"$tmp/src"
+          val out = s"$tmp/out"
+          val ev = events(s, d)
+          ev.union(ev).write.mode("overwrite").parquet(src)
+          s.readStream.schema(ev.schema).parquet(src)
+            .dropDuplicates("event_id")
+            .writeStream
+            .outputMode("append")
+            .option("checkpointLocation", s"$tmp/ck")
+            .trigger(org.apache.spark.sql.streaming.Trigger
+              .AvailableNow())
+            .start(out)
+            .awaitTermination()
+          (out, ev.schema)
+        }
         // a user schema skips inference; Spark still resolves the sink
         // dir through its `_spark_metadata` log
         s.read.schema(schema).parquet(sink).groupBy("event_type")

@@ -11,13 +11,6 @@ import graft.functions.Fns
   */
 object VectorEventQueries {
 
-  /** Wall millis of the last q58 stream→lakehouse gate run — Bench
-    * reports this as `q58_gate_s`, separate from the stats query its
-    * timed passes measure. 0 until the gate has run in this JVM. */
-  val streamGateMillis = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val streamGateCache = new java.util.concurrent
-    .ConcurrentHashMap[String, graft.lake.Lakehouse]()
-
   /** q58's side-effecting gate: synthesize arena cell exports from
     * lineitem (1/7 of orders), run them through the REAL streaming
     * ingest (readStream → AvailableNow → foreachBatch → single-shuffle
@@ -849,20 +842,9 @@ object VectorEventQueries {
     // hash-verified, not just spec-smoked.
     QueryDef("q58_stream_ingest_stats",
       (s, d) => {
-        // The side-effecting write→stream→append GATE runs once per
-        // (session, sf dir) and is memoized; repeated invocations (the
-        // bench's timed passes) re-run only the declared stats query
-        // over the already-streamed table. Wall time of the gate is
-        // recorded for Bench to report separately as q58_gate_s — so
-        // the q58 bench number measures the QUERY, not the loop, while
-        // Verify's single invocation still oracle-gates the whole loop.
-        val lake = streamGateCache.computeIfAbsent(
-          s"${System.identityHashCode(s)}:$d", _ => {
-            val t0 = System.nanoTime()
-            val l = runQ58StreamGate(s, d)
-            streamGateMillis.set((System.nanoTime() - t0) / 1000000L)
-            l
-          })
+        // the side-effecting write→stream→append gate is a set-up:
+        // timed passes re-run only the stats query over its table
+        val lake = QueryDef.setupOnce(s, d, "q58")(runQ58StreamGate(s, d))
         graft.queries.CanonicalQueries.perProblemStats(lake.observations)
       },
       Some("""WITH g AS (

@@ -56,68 +56,15 @@ object IngestBench {
     // partitioned write both reuse that partitioning. One untimed pass
     // absorbs JIT/codegen (steady-state throughput, like the reference's
     // long-running ingest), then the timed pass into a fresh warehouse.
-    // SPARK_GRAFT_INGEST_PHASE isolates pipeline stages for profiling:
-    //   scan  = glob read only;  agg = read + regroup (noop sink);
-    //   (unset) = the full pipeline incl. sorted partitioned append.
-    val phase = sys.env.get("SPARK_GRAFT_INGEST_PHASE")
-    // 20 problems < 32 cores: shard within problems so the single
-    // exchange fans out problems×shards ways (clusterByProblem doc);
-    // cost is `shards` files per partition dir. Unset = data-driven
-    // (clusterByProblemAuto → 2 here).
-    val shardsEnv = sys.env.get("SPARK_GRAFT_INGEST_SHARDS").map(_.toInt)
-    // the shard decision is per-EXPORT (layout choice), not per-append:
-    // the auto probe runs once here, outside the timed reps
-    lazy val clustered = shardsEnv match {
-      case Some(s) => ArenaIngest.clusterByProblem(raw, s)
-      case None => ArenaIngest.clusterByProblemAuto(raw)
-    }
-    // A/B the fused ObservationStepAgg against the composed HOF chain
-    val composed = sys.env.get("SPARK_GRAFT_INGEST_COMPOSED")
-      .exists(_.toBoolean)
-    def regroup(in: org.apache.spark.sql.DataFrame) =
-      if (composed)
-        ArenaIngest.observationsFromArenaComposed(in, "IngestBench")
-      else ArenaIngest.observationsFromArena(in, "IngestBench")
-    // phase=ceiling — the write-side I/O floor: the final frame is
-    // computed ONCE (scan + regroup + append-layout sort), pinned in
-    // cache, and the timed pass is nothing but the partitioned parquet
-    // write of those cached rows at the exact append layout. obs_per_sec
-    // here is the throughput the storage layer allows if scan+regroup
-    // were free; the full pipeline's number is graded against it.
-    lazy val ceilingFrame = {
-      val sortCols = Seq("implementation_id", "test_id", "step_id")
-      val aligned = lake.align(
-        regroup(clustered),
-        Schemas.observations)
-      val sorted = aligned.sortWithinPartitions(
-        (Schemas.partitionCols ++ sortCols).map(col): _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sorted.count() // materialize outside the timed window
-      sorted
-    }
-    def ingest(warehouse: Lakehouse): Unit = phase match {
-      case Some("scan") =>
-        raw.write.format("noop").mode("overwrite").save()
-      case Some("agg") =>
-        regroup(clustered)
-          .write.format("noop").mode("overwrite").save()
-      case Some("shuffle") =>
-        // scan + the one exchange, no aggregation: the data-motion floor
-        // the regroup pays before any aggregate work
-        clustered
-          .write.format("noop").mode("overwrite").save()
-      case Some("ceiling") =>
-        ceilingFrame.write.mode("append")
-          .partitionBy(Schemas.partitionCols: _*)
-          .parquet(java.nio.file.Files
-            .createTempDirectory("ingest-ceiling").toString)
-      case _ =>
-        warehouse.append("observations",
-          regroup(clustered),
-          Schemas.observations,
-          sortCols = Seq("implementation_id", "test_id", "step_id"),
-          clustered = true)
-    }
+    // The shard decision is per-EXPORT (layout choice), not per-append:
+    // the auto probe runs once here, outside the timed reps.
+    val clustered = ArenaIngest.clusterByProblemAuto(raw)
+    def ingest(warehouse: Lakehouse): Unit =
+      warehouse.append("observations",
+        ArenaIngest.observationsFromArena(clustered, "IngestBench"),
+        Schemas.observations,
+        sortCols = Seq("implementation_id", "test_id", "step_id"),
+        clustered = true)
     ingest(new Lakehouse(spark,
       java.nio.file.Files.createTempDirectory("ingest-warm").toString))
     // min-of-N (SPARK_GRAFT_INGEST_REPS): single-pass numbers swing
@@ -134,17 +81,12 @@ object IngestBench {
       ingest(target)
       (System.nanoTime() - t0) / 1e9
     }.min
-    // phase runs write to a noop sink — no table to count
-    val nObs =
-      if (phase.isEmpty) lake.observations.count()
-      else if (phase.contains("ceiling")) ceilingFrame.count()
-      else 0L
+    val nObs = lake.observations.count()
     println(f"INGEST cells=$nCells obs=$nObs secs=$secs%.2f " +
-      f"cells_per_sec=${nCells / secs}%.0f obs_per_sec=${nObs / secs}%.0f" +
-      phase.fold("")(p => s" phase=$p"))
+      f"cells_per_sec=${nCells / secs}%.0f obs_per_sec=${nObs / secs}%.0f")
     // Per-round committed artifact (VERDICT r10 #7): the same numbers
     // the INGEST line prints, as self-describing JSON — reps, basis,
-    // knobs, timestamp — so the 3x-ingest claim is re-measured and
+    // timestamp — so the 3x-ingest claim is re-measured and
     // versioned each round instead of living in README prose.
     sys.env.get("SPARK_GRAFT_INGEST_OUT").foreach { out =>
       val json =
@@ -152,8 +94,6 @@ object IngestBench {
         f""""secs_min":$secs%.3f,"reps":$reps,""" +
         f""""cells_per_sec":${nCells / secs}%.0f,""" +
         f""""obs_per_sec":${nObs / secs}%.0f,""" +
-        s""""phase":"${phase.getOrElse("full")}",""" +
-        s""""composed":$composed,""" +
         s""""basis":"sf0.1 lineitem -> 3 cells/row, single-shuffle """ +
         s"""clustered append","run_at":"${java.time.Instant.now()}"}"""
       java.nio.file.Files.write(java.nio.file.Paths.get(out),

@@ -79,24 +79,6 @@ class CanonicalQueriesSpec extends SparkSpec {
     assert(m.columns.toSeq == Seq("test_id", "step_id", "i1", "i2", "i3"))
   }
 
-  test("dynamic SRM view routes wide implementation sets through chunks") {
-    // above maxWidth the dynamic entry must fall back to the chunked
-    // pivot (identical columns and cells) instead of one flat
-    // aggregation whose width is unbounded by the data
-    val spark2 = spark
-    import spark2.implicits._
-    val obs = (1 to 9).flatMap(i =>
-      Seq(("t1", 0, f"i$i%02d", s"a$i"), ("t2", 1, f"i$i%02d", s"b$i")))
-      .toDF("test_id", "step_id", "implementation_id", "output")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSeq
-    val flat = CanonicalQueries.srmOutputViewDynamic(obs)
-    val chunked = CanonicalQueries.srmOutputViewDynamic(obs, maxWidth = 4)
-    assert(flat.columns.length == 2 + 9)
-    assert(chunked.columns.toSeq == flat.columns.toSeq)
-    assert(rows(chunked) == rows(flat))
-  }
-
   test("dynamic SRM view fails loudly past the driver-collect cap") {
     // the distinct-impl discovery collect is itself bounded: past
     // maxImpls the call must throw (not OOM the driver), and the
@@ -107,13 +89,11 @@ class CanonicalQueriesSpec extends SparkSpec {
       ("t1", 0, s"i$i", "x")).toDF(
       "test_id", "step_id", "implementation_id", "output")
     val e = intercept[IllegalArgumentException] {
-      CanonicalQueries.srmOutputViewDynamic(obs, maxWidth = 3,
-        maxImpls = 5)
+      CanonicalQueries.srmOutputViewDynamic(obs, maxImpls = 5)
     }
     assert(e.getMessage.contains("maxImpls"))
-    // at exactly the cap it still succeeds via the chunked path
-    val ok = CanonicalQueries.srmOutputViewDynamic(obs, maxWidth = 3,
-      maxImpls = 7)
+    // at exactly the cap it still succeeds
+    val ok = CanonicalQueries.srmOutputViewDynamic(obs, maxImpls = 7)
     assert(ok.columns.length == 2 + 7)
   }
 

@@ -3,21 +3,10 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
-import graft.queries.CanonicalQueries
 import graft.streaming.EventsStreaming
 
 class ExtensionOpsSpec extends SparkSpec {
   import TestSpark.spark.implicits._
-
-  test("chunked SRM pivot equals the single pivot") {
-    val whole = CanonicalQueries.srmOutputView(Fixtures.observations,
-      Seq("i1", "i2", "i3")).collect().map(_.toSeq).toSeq
-    val chunked = CanonicalQueries.srmOutputViewChunked(
-      Fixtures.observations, Seq("i1", "i2", "i3"), chunkSize = 2)
-    assert(chunked.columns.toSeq ==
-      Seq("test_id", "step_id", "i1", "i2", "i3"))
-    assert(chunked.collect().map(_.toSeq).toSeq == whole)
-  }
 
   test("ivf topk finds the identical vector through its cell") {
     val corpus = (0L until 40L).map { i =>

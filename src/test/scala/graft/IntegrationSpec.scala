@@ -63,11 +63,6 @@ class IntegrationSpec extends SparkSpec {
     val m = CanonicalQueries.srmOutputViewDynamic(obs("p0"))
     assert(m.columns.length > 2)
     assert(m.count() > 0)
-    // chunked variant identical
-    val impls = m.columns.drop(2).toSeq
-    val chunked = CanonicalQueries.srmOutputViewChunked(obs("p0"), impls, 2)
-    assert(chunked.collect().map(_.toSeq).toSeq ==
-      m.collect().map(_.toSeq).toSeq)
   }
 
   test("clustering partitions all implementations of the problem") {

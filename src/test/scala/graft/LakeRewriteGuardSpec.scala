@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
   * then swaps them in (`Lakehouse.rewritePartitions`). The mechanisms
   * that path replaced must not come back beside it: Spark's dynamic
   * partition overwrite, a checkpoint to break the read/overwrite cycle,
-  * and compaction's whole-table directory swap. */
+  * and compaction's whole-table directory swap. Nor may a lake read
+  * infer its schema beside the one its snapshot manifest records. */
 class LakeRewriteGuardSpec extends AnyFunSuite {
 
   test("graft/lake has no dynamic overwrite, checkpoint or root swap") {
@@ -27,5 +28,15 @@ class LakeRewriteGuardSpec extends AnyFunSuite {
         }.toList.sorted
       finally files.close()
     assert(hits.isEmpty, "rewrite through Lakehouse.rewritePartitions")
+  }
+
+  test("Lakehouse reads with its manifests' schema, never an inferred one") {
+    // each of these would decide a lake table's schema beside the one
+    // its committed manifest records
+    val lakehouse = Paths.get("src/main/scala/graft/lake/Lakehouse.scala")
+    val text = Files.readString(lakehouse)
+    val hits = Seq("mergeSchema", "UNABLE_TO_INFER_SCHEMA", "ParquetRead")
+      .filter(text.contains)
+    assert(hits.isEmpty, s"$lakehouse: take the schema from the manifest")
   }
 }

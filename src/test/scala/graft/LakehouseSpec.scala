@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField}
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
 import graft.lake.Lakehouse
 import graft.schema.Schemas
 
@@ -55,10 +56,47 @@ class LakehouseSpec extends SparkSpec {
       Fixtures.observations.withColumn("study_tag", lit("s1"))
         .withColumn("problem_id", lit("p2")),
       evolved)
-    val all = lake.loadEvolved("observations")
+    val all = lake.observations
     assert(all.count() == 24)
     assert(all.filter(col("study_tag").isNull).count() == 12)
     assert(all.filter(col("study_tag") === "s1").count() == 12)
+  }
+
+  test("load takes the evolved schema from the manifest, not from the " +
+      "first footer") {
+    // p0's files sort first and predate study_tag: a schema read from
+    // the first footer would drop the column
+    val wh = tmpDir("wh-evo")
+    val lake = new Lakehouse(spark, wh)
+    val evolved = lake.evolveSchema(Schemas.observations,
+      StructField("study_tag", StringType, nullable = true))
+    lake.append("observations", Fixtures.observations
+      .withColumn("problem_id", lit("p0")), Schemas.observations)
+    lake.append("observations", Fixtures.observations
+      .withColumn("problem_id", lit("p1"))
+      .withColumn("study_tag", lit("s1")), evolved)
+    val all = lake.observations
+    assert(all.columns.contains("study_tag"))
+    assert(all.filter(col("problem_id") === "p0" &&
+      col("study_tag").isNull).count() == 12)
+    assert(all.filter(col("problem_id") === "p1" &&
+      col("study_tag") === "s1").count() == 12)
+    // each version keeps the schema it committed, and a rollback
+    // commits its target's schema
+    assert(!lake.load("observations", 1).columns.contains("study_tag"))
+    assert(lake.load("observations", 2).schema == all.schema)
+    lake.rollbackTo("observations", 1)
+    assert(lake.observations.schema ==
+      lake.load("observations", 1).schema)
+    assert(lake.observations.count() == 12)
+    // evolution is additive only: a retyped column fails before writing
+    val e = intercept[IllegalArgumentException] {
+      lake.append("observations", Fixtures.observations,
+        StructType(Schemas.observations.fields.map(f =>
+          if (f.name == "step_id") f.copy(dataType = LongType) else f)))
+    }
+    assert(e.getMessage.contains("step_id"))
+    assert(lake.currentVersion("observations") == 3)
   }
 
   test("CSV sink round-trips benchmark-style results (S7)") {

@@ -36,10 +36,12 @@ class RewritePathSpec extends SparkSpec {
     walk(dir, "").toSet
   }
 
+  /** The data files a manifest lists, after its header and schema
+    * lines. */
   private def manifest(table: File, v: Int): Set[String] = {
     val src = scala.io.Source.fromFile(
       new File(table, f"_manifests/v$v%08d.txt"), "UTF-8")
-    try src.getLines().drop(1).filter(_.nonEmpty).toSet
+    try src.getLines().drop(2).filter(_.nonEmpty).toSet
     finally src.close()
   }
 
@@ -149,7 +151,7 @@ class RewritePathSpec extends SparkSpec {
     lake.append(T, obsIn("p1").withColumn("study_tag", lit("s1")), evolved)
     lake.upsert(T, obsIn("p1").limit(1).withColumn("study_tag", lit("s2")),
       evolved, keys)
-    val back = lake.loadEvolved(T)
+    val back = lake.observations
     assert(back.count() == 24)
     assert(back.filter(col("study_tag") === "s2").count() == 1)
     assert(back.filter(col("study_tag") === "s1").count() == 11)
