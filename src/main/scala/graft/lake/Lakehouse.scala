@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache,
   HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import graft.ops.IncrementalAgg
 import graft.schema.Schemas
 
 /** Lakehouse storage layer: the three tables as Hive-style partitioned
@@ -16,8 +17,10 @@ import graft.schema.Schemas
   * external (BASELINE.json); this layer owns layout, append, load, schema
   * alignment and additive schema evolution. Like the reference's
   * Iceberg metadata (`olake/lakehouse.py:28-35,44-127`), every committed
-  * snapshot records the table's declared schema, and every read takes
-  * its schema from there: no footer is read and no inference job runs.
+  * snapshot records the table's declared schema and partition columns,
+  * and every read and rewrite takes them from there: no footer is read
+  * and no inference job runs. Materialized stats views are lake tables
+  * too, partitioned by a hash bucket of their group key.
   *
   * Scale design: identity partitioning on `(data_set_id, problem_id)` is
   * what the reference credits for its sub-100 ms latencies
@@ -50,24 +53,22 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * the whole ingest runs with ONE shuffle of slim raw cells instead of
     * two (measured 2.1× ingest throughput). Only the file layout
     * changes shape (files-per-partition follows the caller's
-    * clustering); table contents are identical. */
+    * clustering); table contents are identical. The table's partition
+    * columns are the ones its manifest records; the first append to a
+    * new table records `Schemas.partitionCols`. */
   def append(table: String, df: DataFrame, schema: StructType,
       sortCols: Seq[String] = Nil, clustered: Boolean = false): Unit = {
-    val committed = withLatest(table, schema)
+    val (committed, parts) = withLatest(table, schema, Schemas.partitionCols)
     val aligned = align(df, schema)
     val sorted =
       if (sortCols.nonEmpty && clustered)
-        aligned.sortWithinPartitions(
-          (Schemas.partitionCols ++ sortCols).map(col): _*)
+        aligned.sortWithinPartitions((parts ++ sortCols).map(col): _*)
       else if (sortCols.nonEmpty)
-        aligned.repartition(Schemas.partitionCols.map(col): _*)
-          .sortWithinPartitions(
-            (Schemas.partitionCols ++ sortCols).map(col): _*)
+        aligned.repartition(parts.map(col): _*)
+          .sortWithinPartitions((parts ++ sortCols).map(col): _*)
       else aligned
-    sorted.write.mode("append")
-      .partitionBy(Schemas.partitionCols: _*)
-      .parquet(dir(table))
-    commit(table, "append", committed)
+    sorted.write.mode("append").partitionBy(parts: _*).parquet(dir(table))
+    commit(table, "append", committed, parts)
   }
 
   /** Lazy partitioned-table load of the latest snapshot, i.e.
@@ -80,11 +81,7 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * append so far produced zero rows — an export with no metadata
     * rows) reads as the EMPTY, correctly-typed frame, the table-format
     * behavior. */
-  def load(table: String): DataFrame = {
-    val v = currentVersion(table)
-    require(v > 0, s"table '$table' has no committed snapshot in $warehouse")
-    load(table, v)
-  }
+  def load(table: String): DataFrame = read(table, latest(table))
 
   // -----------------------------------------------------------------
   // Snapshot-lite versioning — read-at-version time travel.
@@ -98,17 +95,21 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
   //   - every mutating op commits a manifest under `_manifests/`:
   //       graft-manifest v=<version> op=<op>
   //       schema <the table schema as Spark's one-line JSON>
+  //       partitions <the table's partition columns, comma-separated>
+  //       view <watermark> <source|keys|value>     (stats views only)
   //       <one live data file per line, relative to the table dir>
   //     The file list is COMPLETE (full snapshot listing, not a delta —
   //     replay reads ONE manifest). Three sites commit: [[append]]
   //     (schema: the latest one plus the append's new columns),
-  //     [[rollbackTo]] (the target version's schema) and the one
-  //     rewrite path behind every other mutation
-  //     ([[rewritePartitions]], like append). Every read — latest,
-  //     at-version, incremental, diff and the rewrites' own — reads
-  //     with its snapshot's recorded schema and exactly its files, so
-  //     no read infers a schema or lists the table. A manifest with no
-  //     schema line fails loudly;
+  //     [[rollbackTo]] (the target version's schema, partitions and
+  //     view line) and the one rewrite path behind every other
+  //     mutation, stats views included ([[rewritePartitions]], like
+  //     append). Partition columns are fixed by a table's first commit.
+  //     Every read — latest, at-version, incremental, diff and the
+  //     rewrites' own — reads with its snapshot's recorded schema and
+  //     exactly its files, so no read infers a schema or lists the
+  //     table. A manifest with no schema or partitions line fails
+  //     loudly;
   //   - a rewrite stages the new files of the touched partitions under
   //     the hidden `_staging/<uuid>/` and only then swaps them in,
   //     partition by partition, MOVING the replaced files into the
@@ -136,10 +137,12 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
   private def hadoopFs(p: HPath) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** A relative path is hidden iff any segment is underscore/dot-
-    * prefixed — Spark's own directory-scan visibility rule. */
+  /** A relative path is hidden iff any segment is dot-prefixed, or
+    * underscore-prefixed and not a `col=value` partition dir — Spark's
+    * own directory-scan visibility rule. */
   private def isHidden(rel: String): Boolean =
-    rel.split("/").exists(s => s.startsWith("_") || s.startsWith("."))
+    rel.split("/").exists(s =>
+      (s.startsWith("_") && !s.contains("=")) || s.startsWith("."))
 
   /** Every file under `dir` at any depth, paired with its path
     * relative to `dir` (the names as they are on disk, so a partition
@@ -185,6 +188,8 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     new HPath(new HPath(dir(table), "_manifests"), f"v$v%08d.txt")
 
   private val SchemaLine = "schema "
+  private val PartitionsLine = "partitions "
+  private val ViewLine = "view "
 
   private def manifest(table: String, v: Int): Manifest = {
     val p = manifestPath(table, v)
@@ -196,42 +201,59 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     val lines =
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
       finally in.close()
-    val schema = lines.lift(1).filter(_.startsWith(SchemaLine))
-    require(schema.isDefined,
-      s"snapshot v$v of '$table' records no table schema: its manifest " +
-        "predates schema-recording commits")
-    Manifest(
-      lines.head.split(" op=", 2) match {
-        case Array(_, op) => op
-        case _ => "unknown"
-      },
-      DataType.fromJson(schema.get.stripPrefix(SchemaLine))
-        .asInstanceOf[StructType],
-      lines.drop(2).filter(_.nonEmpty))
+    def field(i: Int, key: String, what: String): String = {
+      val line = lines.lift(i).filter(_.startsWith(key))
+      require(line.isDefined, s"snapshot v$v of '$table' records no " +
+        s"$what: its manifest predates $what-recording commits")
+      line.get.stripPrefix(key)
+    }
+    val schema = DataType.fromJson(field(1, SchemaLine, "table schema"))
+      .asInstanceOf[StructType]
+    val parts = field(2, PartitionsLine, "partition columns")
+      .split(",").filter(_.nonEmpty).toSeq
+    val (view, files) = lines.drop(3).span(_.startsWith(ViewLine))
+    Manifest(v, lines.head.split(" op=", 2).lift(1).getOrElse("unknown"),
+      schema, parts, view.headOption.map { l =>
+        val Array(w, sig) = l.stripPrefix(ViewLine).split(" ", 2)
+        View(w.toLong, sig)
+      }, files.filter(_.nonEmpty))
   }
 
-  /** `schema` evolved onto the table's latest committed schema: the
-    * committed columns keep their order and type, the new ones follow.
-    * A column whose type differs from the committed one fails loudly —
-    * evolution is additive only. */
-  private def withLatest(table: String, schema: StructType): StructType =
+  /** The latest committed snapshot's manifest. */
+  private def latest(table: String): Manifest = {
+    val v = currentVersion(table)
+    require(v > 0, s"table '$table' has no committed snapshot in $warehouse")
+    manifest(table, v)
+  }
+
+  /** `schema` evolved onto the table's latest committed schema, with
+    * the table's partition columns: the committed columns keep their
+    * order and type, the new ones follow. A table with no commit yet
+    * takes `schema` and `newParts`. A column whose type differs from
+    * the committed one fails loudly — evolution is additive only. */
+  private def withLatest(table: String, schema: StructType,
+      newParts: Seq[String]): (StructType, Seq[String]) =
     currentVersion(table) match {
-      case 0 => schema
+      case 0 => (schema, newParts)
       case v =>
-        val prev = manifest(table, v).schema
+        val m = manifest(table, v)
+        val prev = m.schema
         schema.fields.foreach { f =>
           prev.find(_.name == f.name).foreach(p =>
             require(p.dataType == f.dataType,
               s"'$table'.${f.name} is ${p.dataType.sql}, cannot write it " +
                 s"as ${f.dataType.sql}: schema evolution is additive only"))
         }
-        StructType(prev.fields ++
-          schema.fields.filterNot(f => prev.fieldNames.contains(f.name)))
+        (StructType(prev.fields ++
+          schema.fields.filterNot(f => prev.fieldNames.contains(f.name))),
+          m.partitionCols)
     }
 
-  /** Commit the table's CURRENT live-file set and `schema` as the next
+  /** Commit the table's CURRENT live-file set, `schema`, partition
+    * columns `parts` and a stats view's `view` state as the next
     * snapshot version. Returns the version. */
-  private def commit(table: String, op: String, schema: StructType): Int = {
+  private def commit(table: String, op: String, schema: StructType,
+      parts: Seq[String], view: Option[View] = None): Int = {
     val v = currentVersion(table) + 1
     val files = liveFiles(table).sorted
     val p = manifestPath(table, v)
@@ -239,6 +261,8 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     fs.mkdirs(p.getParent)
     val out = fs.create(p, true)
     val text = s"graft-manifest v=$v op=$op\n$SchemaLine${schema.json}\n" +
+      s"$PartitionsLine${parts.mkString(",")}\n" +
+      view.fold("")(w => s"$ViewLine${w.watermark} ${w.sig}\n") +
       files.map(_ + "\n").mkString
     try out.write(text.getBytes("UTF-8"))
     finally out.close()
@@ -251,10 +275,12 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * it); a file in neither was reclaimed by [[expireSnapshots]] and
     * the read fails loudly rather than returning a silently partial
     * table. */
-  def load(table: String, asOf: Int): DataFrame = {
-    val m = manifest(table, asOf)
-    readRels(table, m.schema, m.files, s"snapshot v$asOf")
-  }
+  def load(table: String, asOf: Int): DataFrame = read(table,
+    manifest(table, asOf))
+
+  /** Exactly the files of snapshot `m`, read with its schema. */
+  private def read(table: String, m: Manifest): DataFrame =
+    readRels(table, m.schema, m.files, s"snapshot v${m.v}")
 
   /** The op string a snapshot's manifest header recorded at commit
     * time ("append", "deleteWhere", "compact", ...). */
@@ -414,8 +440,9 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * that earlier rewrites archived move back to their live paths.
     * Every other manifest stays readable — resolution is live-first-
     * then-archive, and each file still exists at exactly one of the
-    * two. The new commit records v's schema, so the live table reads
-    * exactly as `load(table, v)`. Returns the new version number. */
+    * two. The new commit records v's schema, partition columns and view
+    * state, so the live table reads exactly as `load(table, v)`.
+    * Returns the new version number. */
   def rollbackTo(table: String, v: Int): Int = {
     val m = manifest(table, v)
     val target = m.files.toSet
@@ -437,47 +464,57 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
       fs.mkdirs(dst.getParent)
       require(fs.rename(src, dst), s"rollbackTo: cannot restore $rel")
     }
-    commit(table, s"rollback-to-v$v", m.schema)
+    commit(table, s"rollback-to-v$v", m.schema, m.partitionCols, m.view)
   }
 
   // -----------------------------------------------------------------
-  // Materialized per-group stats, maintained through CDC versions.
+  // Materialized per-group stats: each view is a lake table.
   //
   // The composition the snapshot layer exists for: a stored
   // `GROUP BY keys -> count/sum/min/max(v)` whose refresh cost is the
-  // DELTA, not the table. Each refresh reads the CDC interval since
-  // its recorded high-water version — [[incrementalRead]] when the
-  // interval is append-only (delta-sized scan, then
-  // [[graft.ops.IncrementalAgg.merge]] keeps untouched groups out of
-  // the shuffle) — and falls back to one full recompute across
-  // rewrites/deletes, where merge cannot subtract. At 100 TB this
-  // replaces the nightly full GROUP BY with work proportional to one
-  // day's arrivals. State swaps through a per-version directory +
-  // watermark marker, so a concurrent reader sees the old state or
-  // the new — never a half-written directory. The marker's second line
-  // records the state's schema, which [[readStats]] reads with.
+  // DELTA, not the table. View `name` is the lake table `_mv/<name>`,
+  // partitioned by `__bucket = pmod(xxhash64(keys), 64)`, so every
+  // change to it is one [[rewritePartitions]] call: a full build
+  // rewrites every bucket, an incremental fold only the buckets its
+  // delta's groups hash into (the other buckets keep their files, and
+  // [[graft.ops.IncrementalAgg.merge]] keeps the touched buckets'
+  // untouched groups out of the shuffle). Each commit's manifest
+  // records the view's signature `source|keys|value` and its
+  // watermark; a reader sees one snapshot or the next, never a
+  // half-written one. Two writers keep a view:
+  //   - [[refreshStats]] (batch): the watermark is the source snapshot
+  //     version the state reflects. An append-only interval since then
+  //     folds its [[incrementalRead]] delta; an interval with a
+  //     rewrite/delete, where merge cannot subtract, recomputes in full.
+  //     At 100 TB this replaces the nightly full GROUP BY with work
+  //     proportional to one day's arrivals;
+  //   - [[foldStats]] (streaming): the watermark is the last micro-batch
+  //     id folded, so a batch replayed at least once folds once.
   // -----------------------------------------------------------------
 
-  private def mvRoot(name: String) = s"$warehouse/_mv/$name"
+  private def mvTable(name: String) = s"_mv/$name"
 
-  private def mvMarker(name: String): Option[MvMarker] = {
-    val p = new HPath(s"${mvRoot(name)}/VERSION")
-    val fs = hadoopFs(p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      val Array(v, sig) = lines.head.split(" ", 2)
-      Some(MvMarker(v.toInt, sig,
-        DataType.fromJson(lines(1)).asInstanceOf[StructType]))
-    }
+  private def statsSig(source: String, keys: Seq[String], v: String) =
+    s"$source|${keys.mkString(",")}|$v"
+
+  /** The view's latest state; None = never refreshed. */
+  private def viewOf(name: String): Option[View] = {
+    val t = mvTable(name)
+    Some(currentVersion(t)).filter(_ > 0).flatMap(manifest(t, _).view)
+  }
+
+  /** [[viewOf]], after checking the view was built as `sig`. */
+  private def viewAs(name: String, sig: String): Option[View] = {
+    val w = viewOf(name)
+    w.foreach(w => require(w.sig == sig,
+      s"view '$name': signature mismatch - state was built as " +
+        s"[${w.sig}], asked to refresh as [$sig]; use a new view name"))
+    w
   }
 
   /** The source snapshot version [[readStats]] currently reflects;
     * 0 = never refreshed. */
-  def statsVersion(name: String): Int = mvMarker(name).fold(0)(_.v)
+  def statsVersion(name: String): Int = viewOf(name).fold(0)(_.watermark.toInt)
 
   /** How a [[refreshStats]] call brought the view current. */
   sealed trait RefreshMode
@@ -488,56 +525,73 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
   /** Bring the materialized stats view `name` up to `source`'s current
     * snapshot. Returns the mode used: [[RefreshNoop]] (already
     * current), [[RefreshIncremental]] (append-only interval: delta
-    * scan + merge), or [[RefreshFull]] (first build, or the interval
-    * contains a rewrite/delete). The (keys, v) signature is recorded
-    * with the state and must match on every refresh — a silent
-    * signature change would merge incompatible states. */
+    * scan + merge of the touched buckets), or [[RefreshFull]] (first
+    * build, or the interval contains a rewrite/delete). The
+    * (source, keys, v) signature is recorded with the state and must
+    * match on every refresh — a silent signature change would merge
+    * incompatible states. */
   def refreshStats(name: String, source: String, keys: Seq[String],
       v: String): RefreshMode = {
-    import graft.ops.IncrementalAgg
-    val sig = s"$source|${keys.mkString(",")}|$v"
-    mvMarker(name).foreach { m =>
-      require(m.sig == sig,
-        s"refreshStats('$name'): signature mismatch - state was built " +
-          s"as [${m.sig}], asked to refresh as [$sig]; use a new view name")
-    }
+    val sig = statsSig(source, keys, v)
+    val last = viewAs(name, sig).fold(0)(_.watermark.toInt)
     val cur = currentVersion(source)
-    val last = statsVersion(name)
     if (cur == last) return RefreshNoop
-    val appendOnly = last > 0 &&
+    val incremental = last > 0 &&
       ((last + 1) to cur).forall(manifestOp(source, _) == "append")
-    val state =
-      if (appendOnly)
-        IncrementalAgg.merge(readStats(name),
-          IncrementalAgg.statsOf(
-            incrementalRead(source, last, cur), keys, v), keys)
-      else IncrementalAgg.statsOf(load(source), keys, v)
-    val dst = s"${mvRoot(name)}/state-v$cur.parquet"
-    state.write.mode("overwrite").parquet(dst)
-    val p = new HPath(s"${mvRoot(name)}/VERSION")
-    val fs = hadoopFs(p)
-    val out = fs.create(p, true)
-    try out.write(s"$cur $sig\n${state.schema.json}\n".getBytes("UTF-8"))
-    finally out.close()
-    // reclaim superseded state dirs (readers of the OLD marker may
-    // still be scanning — same single-writer caveat as upsert)
-    fs.listStatus(new HPath(mvRoot(name)))
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith("state-v") &&
-        s.getPath.getName != s"state-v$cur.parquet")
-      .foreach(s => fs.delete(s.getPath, true))
-    if (appendOnly) RefreshIncremental else RefreshFull
+    writeStats(name, IncrementalAgg.statsOf(
+      if (incremental) incrementalRead(source, last, cur) else load(source),
+      keys, v), keys, View(cur, sig), "refreshStats", full = !incremental)
+    if (incremental) RefreshIncremental else RefreshFull
   }
 
-  /** The materialized stats state as of its last [[refreshStats]]:
-    * one row per group, `(keys..., n_rows, sum_v, min_v, max_v)` —
-    * bit-identical to `IncrementalAgg.statsOf` over the source at the
-    * watermark version (monoid merge exactness, oracle q80). */
+  /** Fold micro-batch `batchId` of `source` (its `rows`) into the stats
+    * view `name`: [[refreshStats]]' incremental fold, with the batch id
+    * as the watermark; the first batch builds the view. A batch at or
+    * below the watermark is skipped: a streaming sink re-runs a batch
+    * whose stats commit landed but whose checkpoint commit did not, and
+    * folding it again would count it twice. */
+  def foldStats(name: String, source: String, keys: Seq[String],
+      v: String, rows: DataFrame, batchId: Long): Unit = {
+    val sig = statsSig(source, keys, v)
+    val w = viewAs(name, sig)
+    if (!w.exists(_.watermark >= batchId))
+      writeStats(name, IncrementalAgg.statsOf(rows, keys, v), keys,
+        View(batchId, sig), "foldStats", full = w.isEmpty)
+  }
+
+  private def bucketed(stats: DataFrame, keys: Seq[String]): DataFrame =
+    stats.withColumn(BucketCol,
+      pmod(xxhash64(keys.map(col): _*), lit(StatsBuckets)).cast("int"))
+
+  /** The one write of view `name`, committing state `at`. `full`:
+    * `stats` is the whole new state and every bucket is rewritten.
+    * Otherwise `stats` is a delta merged into the view: only the
+    * buckets its groups hash into are read and rewritten, so the cost
+    * is the delta plus those buckets. */
+  private def writeStats(name: String, stats: DataFrame, keys: Seq[String],
+      at: View, op: String, full: Boolean): Unit = {
+    val t = mvTable(name)
+    val scope =
+      if (full) (0 until StatsBuckets).map(Row(_))
+      else partitionsOf(bucketed(stats, keys), Seq(BucketCol))._1
+    val state =
+      if (full) stats
+      else IncrementalAgg.merge(load(t).filter(col(BucketCol)
+        .isin(scope.map(_.get(0)): _*)).drop(BucketCol), stats, keys)
+    rewritePartitions(t, bucketed(state, keys), op, Some(scope),
+      newParts = Seq(BucketCol), view = Some(at))
+  }
+
+  /** The materialized stats state as of its last refresh: one row per
+    * group, `(keys..., n_rows, sum_v, min_v, max_v)` — bit-identical to
+    * `IncrementalAgg.statsOf` over the source at the watermark (monoid
+    * merge exactness, oracle q80). The view's latest snapshot, bucket
+    * column dropped. */
   def readStats(name: String): DataFrame = {
-    val m = mvMarker(name)
-    require(m.isDefined, s"materialized view '$name' was never refreshed")
-    spark.read.schema(m.get.schema)
-      .parquet(s"${mvRoot(name)}/state-v${m.get.v}.parquet")
+    val t = mvTable(name)
+    val v = currentVersion(t)
+    require(v > 0, s"materialized view '$name' was never refreshed")
+    load(t, v).drop(BucketCol)
   }
 
   /** Vacuum: keep the latest `keepLast` snapshots, drop older
@@ -568,28 +622,30 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * Spark's own partition-path escaping, the names the partitioned
     * writer gives the directories (a raw "$c=$v" string misses escaped
     * values). */
-  private def partitionRelDirs(rows: Seq[Row]): Seq[String] =
+  private def partitionRelDirs(rows: Seq[Row],
+      parts: Seq[String]): Seq[String] =
     rows.map { r =>
-      Schemas.partitionCols.zipWithIndex.map { case (c, i) =>
+      parts.zipWithIndex.map { case (c, i) =>
         val v = if (r.isNullAt(i)) null else String.valueOf(r.get(i))
         org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
           .getPartitionPathString(c, v)
       }.mkString("/")
     }
 
-  /** The distinct partition-key rows of `df` (a bounded collect: the
+  /** The distinct `parts` rows of `df` (a bounded collect: the
     * partitions of one mutation's scope), with a local frame of them to
     * semi-join against, whose broadcast runs no job. */
-  private def partitionsOf(df: DataFrame): (Seq[Row], DataFrame) = {
-    val parts = df.select(Schemas.partitionCols.map(col): _*).distinct()
-    val rows = parts.collect().toSeq
+  private def partitionsOf(df: DataFrame,
+      parts: Seq[String]): (Seq[Row], DataFrame) = {
+    val distinct = df.select(parts.map(col): _*).distinct()
+    val rows = distinct.collect().toSeq
     (rows, spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-      parts.schema))
+      distinct.schema))
   }
 
   /** The one rewrite path behind every mutation that replaces files
-    * ([[upsert]], [[deleteWhere]], [[compact]], [[compactZOrder]]):
-    * stage, then swap.
+    * ([[upsert]], [[deleteWhere]], [[compact]], [[compactZOrder]] and
+    * every stats-view change): stage, then swap.
     *
     * `rows` are the complete new contents of the partitions they fall
     * in. They are written, one file per partition (`order` sorts
@@ -601,31 +657,34 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * files move into `_archive/` (snapshot readers keep resolving
     * them), the staged files move into place, and a partition left with
     * no staged file is removed. Then one version is committed, with
-    * `schema` evolved onto the latest committed one as [[append]] does
-    * (rows the caller aligned to an older schema leave the newer
-    * columns NULL in the touched partitions). Renames
+    * `rows`' schema evolved onto the latest committed one as [[append]]
+    * does, the table's partition columns (`newParts` if this rewrite
+    * creates the table) and a stats view's new `view` state. Renames
     * are O(touched files) metadata ops; Hadoop's checksummed local FS
     * carries the `.crc` sidecars along. A write that fails leaves the
     * live table as it was, and the staging dir is removed either way.
-    * A rewrite that touches no partition commits nothing. */
-  private def rewritePartitions(table: String, rows: DataFrame,
-      schema: StructType, op: String, scope: Option[Seq[Row]] = None,
-      order: Seq[Column] = Nil): Unit = {
-    if (scope.exists(_.isEmpty)) return
-    val committed = withLatest(table, schema)
+    * A rewrite that touches no partition commits nothing, unless it
+    * moves a view's watermark. */
+  private def rewritePartitions(table: String, rows: DataFrame, op: String,
+      scope: Option[Seq[Row]] = None, order: Seq[Column] = Nil,
+      newParts: Seq[String] = Nil, view: Option[View] = None): Unit = {
+    val (committed, partCols) = withLatest(table, rows.schema, newParts)
+    if (scope.exists(_.isEmpty)) // nothing to rewrite; a view's watermark moves
+      return view.foreach(_ => commit(table, op, committed, partCols, view))
     val root = new HPath(dir(table))
     val fs = hadoopFs(root)
     val stagingRoot = new HPath(root, "_staging")
     val staging = new HPath(stagingRoot, java.util.UUID.randomUUID.toString)
-    val parts = Schemas.partitionCols.map(col)
+    val parts = partCols.map(col)
     try {
       rows.repartition(parts: _*).sortWithinPartitions(parts ++ order: _*)
-        .write.partitionBy(Schemas.partitionCols: _*)
+        .write.partitionBy(partCols: _*)
         .parquet(staging.toString)
       val staged = filesUnder(fs, staging).filterNot(f => isHidden(f._1))
         .groupBy { case (rel, _) => rel.substring(0, rel.lastIndexOf('/')) }
       val touched =
-        (scope.fold(Seq.empty[String])(partitionRelDirs) ++ staged.keys)
+        (scope.fold(Seq.empty[String])(partitionRelDirs(_, partCols)) ++
+          staged.keys)
           .distinct
       touched.foreach { rd =>
         val live = new HPath(root, rd)
@@ -647,7 +706,7 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
           case None => fs.delete(live, true)
         }
       }
-      if (touched.nonEmpty) commit(table, op, committed)
+      if (touched.nonEmpty) commit(table, op, committed, partCols, view)
     } finally {
       fs.delete(staging, true)
       if (fs.exists(stagingRoot) && fs.listStatus(stagingRoot).isEmpty)
@@ -690,15 +749,26 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * proportional to the touched partitions, not the table. Swapped in
     * partition by partition ([[rewritePartitions]]), so not
     * transactional across partitions — pair with an external catalog
-    * (Iceberg/Delta per BASELINE.json) when writers race. */
-  def upsert(table: String, updates: DataFrame, schema: StructType,
-      keys: Seq[String]): Unit = {
-    val up = align(updates, schema)
-    val (touched, touchedDf) = partitionsOf(up)
-    val kept = load(table)
-      .join(broadcast(touchedDf), Schemas.partitionCols, "left_semi")
+    * (Iceberg/Delta per BASELINE.json) when writers race.
+    *
+    * `updates` align to the table's schema by column name: a column
+    * they lack reads as a typed NULL if it is optional and fails the
+    * upsert if it is required; a column the table lacks evolves the
+    * table as an optional column, as [[append]] does. */
+  def upsert(table: String, updates: DataFrame, keys: Seq[String]): Unit = {
+    val m = latest(table)
+    val lacking = m.schema.filterNot(f =>
+      f.nullable || updates.columns.contains(f.name)).map(_.name)
+    require(lacking.isEmpty, s"upsert into '$table': the updates lack " +
+      s"required column(s) ${lacking.mkString(", ")}")
+    val up = updates.select(updates.columns.toSeq.map(c =>
+      m.schema.find(_.name == c).fold(col(c))(f => col(c).cast(f.dataType))
+        .as(c)): _*)
+    val (touched, touchedDf) = partitionsOf(up, m.partitionCols)
+    val kept = read(table, m)
+      .join(broadcast(touchedDf), m.partitionCols, "left_semi")
       .join(up.select(keys.map(col): _*).distinct(), keys, "left_anti")
-    rewritePartitions(table, align(kept, schema).union(up), schema,
+    rewritePartitions(table, kept.unionByName(up, allowMissingColumns = true),
       "upsert", Some(touched))
   }
 
@@ -730,27 +800,25 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * `compact`); a predicate (e.g. the fragmented partitions per
     * [[tableStats]]) rewrites only those (op `compactWhere`), the
     * per-partition-batch mode SCALE.md prescribes for 100 TB tables. */
-  def compact(table: String, schema: StructType,
-      partitionPredicate: Column = lit(true)): Unit =
-    rewritePartitions(table,
-      align(load(table).filter(partitionPredicate), schema), schema,
+  def compact(table: String, partitionPredicate: Column = lit(true)): Unit =
+    rewritePartitions(table, load(table).filter(partitionPredicate),
       if (partitionPredicate == lit(true)) "compact" else "compactWhere")
 
   /** Row-level delete: rewrite ONLY the partitions containing matching
     * rows (touched set via broadcast semi-join, like [[upsert]]),
     * keeping the survivors; a partition none of whose rows survive is
     * removed. Cost ∝ touched partitions, the upsert discipline. */
-  def deleteWhere(table: String, schema: StructType,
-      predicate: Column): Unit = {
-    val cur = load(table)
-    val (touched, touchedDf) = partitionsOf(cur.filter(predicate))
+  def deleteWhere(table: String, predicate: Column): Unit = {
+    val m = latest(table)
+    val cur = read(table, m)
+    val (touched, touchedDf) =
+      partitionsOf(cur.filter(predicate), m.partitionCols)
     // SQL DELETE semantics: only predicate-TRUE rows go; a NULL
     // predicate keeps the row (bare !predicate would drop it)
     val survivors = cur
-      .join(broadcast(touchedDf), Schemas.partitionCols, "left_semi")
+      .join(broadcast(touchedDf), m.partitionCols, "left_semi")
       .filter(!coalesce(predicate, lit(false)))
-    rewritePartitions(table, align(survivors, schema), schema,
-      "deleteWhere", Some(touched))
+    rewritePartitions(table, survivors, "deleteWhere", Some(touched))
   }
 
   /** Z-order compaction — [[compact]] with a multi-dimensional
@@ -762,9 +830,9 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * maintenance action; skipping quantified in LayoutSpec). The
     * partition-dir layout and the data are unchanged — only the order
     * inside each partition's files differs. */
-  def compactZOrder(table: String, schema: StructType, dims: Seq[String],
+  def compactZOrder(table: String, dims: Seq[String],
       partitionPredicate: Column = lit(true)): Unit = {
-    val base = align(load(table).filter(partitionPredicate), schema)
+    val base = load(table).filter(partitionPredicate)
     // Order-PRESERVING 20-bit encoding per numeric dimension (hashing
     // would scramble the value space and void min/max skipping): scale
     // by the observed [min, max] — one small agg job, the same
@@ -783,27 +851,25 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
       ((col(d).cast("double") - lo) / span * ((1L << bitsPerDim) - 1))
         .cast("long")
     }
-    rewritePartitions(table, base, schema, "compactZOrder",
+    rewritePartitions(table, base, "compactZOrder",
       order = Seq(graft.plans.ZOrderExpr.zorder(enc: _*)))
   }
 
-  /** SQL DDL registration (SURVEY S6): declares the partitioned layout as
-    * an external catalog table so plain `spark.sql` sees it; call
-    * [[repairTable]] after out-of-band appends so new partition dirs are
-    * discovered. */
-  def createTable(table: String, schema: StructType,
-      location: String = null): Unit = {
-    val loc = Option(location).getOrElse(dir(table))
-    val dataCols = schema.fields
-      .filterNot(f => Schemas.partitionCols.contains(f.name))
-      .map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
-    val partCols = schema.fields
-      .filter(f => Schemas.partitionCols.contains(f.name))
-      .map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
-    spark.sql(s"""CREATE TABLE IF NOT EXISTS $table ($dataCols)
-      USING parquet PARTITIONED BY ($partCols)
-      LOCATION '$loc'""")
-    repairTable(table)
+  /** SQL DDL registration (SURVEY S6): declares lake table `table`'s
+    * partitioned layout as the external catalog table `name`, with the
+    * schema and partition columns its latest manifest records, so plain
+    * `spark.sql` sees it; call [[repairTable]] after out-of-band
+    * appends so new partition dirs are discovered. */
+  def createTable(name: String, table: String): Unit = {
+    val m = latest(table)
+    def ddl(fs: Seq[StructField]) =
+      fs.map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
+    val (partCols, dataCols) =
+      m.schema.fields.toSeq.partition(f => m.partitionCols.contains(f.name))
+    spark.sql(s"""CREATE TABLE IF NOT EXISTS $name (${ddl(dataCols)})
+      USING parquet PARTITIONED BY (${ddl(partCols)})
+      LOCATION '${dir(table)}'""")
+    repairTable(name)
   }
 
   /** Partition discovery for externally-appended files
@@ -833,12 +899,18 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
 
 private object Lakehouse {
 
-  /** One committed snapshot: the op that made it, the table schema and
-    * the data files, relative to the table dir. */
-  final case class Manifest(op: String, schema: StructType,
-      files: Seq[String])
+  /** One committed snapshot: its version, the op that made it, the
+    * table schema, its partition columns, a stats view's state and the
+    * data files, relative to the table dir. */
+  final case class Manifest(v: Int, op: String, schema: StructType,
+      partitionCols: Seq[String], view: Option[View], files: Seq[String])
 
-  /** A materialized view's marker: the source version its state
-    * reflects, the (source, keys, value) signature, the state schema. */
-  final case class MvMarker(v: Int, sig: String, schema: StructType)
+  /** A stats view's state: its watermark (the source version, or the
+    * last micro-batch id, that it reflects) and its
+    * `source|keys|value` signature. */
+  final case class View(watermark: Long, sig: String)
+
+  /** A stats view's partition column and its number of values. */
+  val BucketCol = "__bucket"
+  val StatsBuckets = 64
 }

@@ -48,11 +48,6 @@ object IncrementalAgg {
       max(col(v)).as("max_v"),
       hll_sketch_agg(col(distinctCol)).as("distinct_sketch"))
 
-  /** Null-safe equality on every group key. `groupBy` keeps NULL as a
-    * real group, so the touched/untouched split must route a NULL-keyed
-    * delta to the SAME side as prev's NULL-keyed state row — a plain
-    * `=` join would leave prev's NULL row in "untouched" AND emit the
-    * delta's NULL row from "touched", duplicating the group. */
   /** The delta's distinct keys under UNAMBIGUOUS names: prev and delta
     * typically share lineage (two filters of one frame), so a condition
     * built from same-named columns can resolve both sides to one
@@ -62,6 +57,11 @@ object IncrementalAgg {
   private def distinctKeysRenamed(delta: DataFrame, keys: Seq[String]) =
     delta.select(keys.map(k => col(k).as(s"__dk_$k")): _*).distinct()
 
+  /** Null-safe equality on every group key. `groupBy` keeps NULL as a
+    * real group, so the touched/untouched split must route a NULL-keyed
+    * delta to the SAME side as prev's NULL-keyed state row — a plain
+    * `=` join would leave prev's NULL row in "untouched" AND emit the
+    * delta's NULL row from "touched", duplicating the group. */
   private def keyCond(prev: DataFrame, deltaKeys: DataFrame,
       keys: Seq[String]) =
     keys.map(k => prev(k) <=> deltaKeys(s"__dk_$k")).reduce(_ && _)

@@ -112,57 +112,29 @@ object EventsStreaming {
       .start()
 
   /** Streaming incremental stats maintenance: each micro-batch's
-    * per-group state folds into a persisted stats table via
-    * [[graft.ops.IncrementalAgg.merge]] — the stats table is exactly
+    * per-group state folds into the lake's stats view `name`
+    * ([[graft.lake.Lakehouse.foldStats]]) — the view is exactly
     * `IncrementalAgg.statsOf(all rows so far)` after every batch
     * (StreamingSpec), with per-batch cost ∝ the batch + its touched
-    * groups, never the history. The 100 TB shape end to end: the
-    * stats table is PARTITIONED by a hash bucket of the group key, so
-    * a batch reads only the buckets its groups hash into
-    * (partition-pruned scan) and dynamic partition overwrite rewrites
-    * ONLY those buckets — without the bucketing, every micro-batch
-    * would re-read and re-write the whole stats table no matter how
-    * small the delta. The checkpoint is the recovery log. */
+    * groups, never the history. The stream is the change log of the
+    * view: the view is a lake table partitioned by a hash bucket of the
+    * group key, so a batch reads and rewrites only the buckets its
+    * groups hash into, through the same stage-then-swap commit as every
+    * other lake write. The checkpoint is the recovery log; the view's
+    * watermark (the last batch id folded) makes a batch the sink
+    * replays fold once. [[graft.lake.Lakehouse.readStats]] reads the
+    * view. */
   def streamIncrementalStats(spark: SparkSession, srcDir: String,
       srcSchema: org.apache.spark.sql.types.StructType,
-      keys: Seq[String], valueCol: String, statsDir: String,
-      checkpoint: String, nBuckets: Int = 64)
+      keys: Seq[String], valueCol: String, lake: graft.lake.Lakehouse,
+      name: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     spark.readStream.schema(srcSchema).parquet(srcDir)
       .writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        def bucketed(df: org.apache.spark.sql.DataFrame) =
-          df.withColumn("__bucket",
-            pmod(xxhash64(keys.map(col): _*), lit(nBuckets)).cast("int"))
-        val delta = bucketed(
-          graft.ops.IncrementalAgg.statsOf(batch, keys, valueCol))
-        // existence probe through the path's own FileSystem (HDFS/S3A/
-        // local) — java.io.File is always false on a remote statsDir,
-        // which would silently re-write the table non-merged every batch
-        val statsPath = new org.apache.hadoop.fs.Path(statsDir)
-        val statsFs = statsPath.getFileSystem(
-          batch.sparkSession.sparkContext.hadoopConfiguration)
-        if (!statsFs.exists(statsPath))
-          delta.write.partitionBy("__bucket").parquet(statsDir)
-        else {
-          // bounded driver-side list (≤ nBuckets) drives partition
-          // pruning on the read AND scopes the dynamic overwrite
-          val touched = delta.select("__bucket").distinct()
-            .collect().map(_.getInt(0))
-          val prevTouched =
-            graft.lake.ParquetRead.table(batch.sparkSession, statsDir)
-              .filter(col("__bucket").isin(touched.map(Integer.valueOf): _*))
-          val merged = bucketed(graft.ops.IncrementalAgg.merge(
-            prevTouched.drop("__bucket"), delta.drop("__bucket"), keys))
-          // materialize before overwriting partitions the plan reads
-          merged.localCheckpoint(true)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__bucket")
-            .parquet(statsDir)
-        }
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+        lake.foldStats(name, srcDir, keys, valueCol, batch, id)
       }
       .start()
 

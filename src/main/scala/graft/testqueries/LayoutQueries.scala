@@ -191,7 +191,7 @@ object LayoutQueries {
             sortCols = Seq("doc_id"))                            // v1
           l.append("docs", docs.filter(col("doc_id") % 2 =!= 0), sch,
             sortCols = Seq("doc_id"))                            // v2
-          l.deleteWhere("docs", sch, col("lang") === "en")       // v3
+          l.deleteWhere("docs", col("lang") === "en")            // v3
           l
         }
         def stats(df: org.apache.spark.sql.DataFrame, tag: String) =
@@ -292,7 +292,7 @@ object LayoutQueries {
             sortCols = Seq("doc_id"))                          // v1
           l.append("docs", docs.filter(col("doc_id") % 2 =!= 0), sch,
             sortCols = Seq("doc_id"))                          // v2
-          l.deleteWhere("docs", sch, col("lang") === "en")     // v3
+          l.deleteWhere("docs", col("lang") === "en")          // v3
           l.rollbackTo("docs", 2)                              // v4
           l
         }
@@ -355,7 +355,7 @@ object LayoutQueries {
           l.refreshStats("mv_ord", "ord", keys, "val")            // full
           l.append("ord", o.filter(col("k") % 3 === 1), sch)      // v2
           l.refreshStats("mv_ord", "ord", keys, "val")            // incr
-          l.deleteWhere("ord", sch, col("pri") === "1-URGENT")    // v3
+          l.deleteWhere("ord", col("pri") === "1-URGENT")         // v3
           l.refreshStats("mv_ord", "ord", keys, "val")            // full
           l
         }

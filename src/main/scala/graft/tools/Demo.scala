@@ -78,8 +78,7 @@ object Demo {
       "WHERE problem_id = 'p1' GROUP BY 1 ORDER BY 1").show(false)
 
     println("-- SQL DDL + partition discovery --")
-    lake.createTable("obs_sql", Schemas.observations,
-      location = s"$wh/observations")
+    lake.createTable("obs_sql", "observations")
     spark.sql("SELECT problem_id, count(*) AS n FROM obs_sql GROUP BY 1")
       .show(false)
 

@@ -5,29 +5,39 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Every Lakehouse mutation that replaces files stages its new files and
-  * then swaps them in (`Lakehouse.rewritePartitions`). The mechanisms
-  * that path replaced must not come back beside it: Spark's dynamic
-  * partition overwrite, a checkpoint to break the read/overwrite cycle,
-  * and compaction's whole-table directory swap. Nor may a lake read
-  * infer its schema beside the one its snapshot manifest records. */
+  * then swaps them in (`Lakehouse.rewritePartitions`), stats views
+  * included. The mechanisms that path replaced must not come back
+  * beside it: Spark's dynamic partition overwrite and the stats views'
+  * own `state-v<N>` swap anywhere in the program, and in `graft/lake` a
+  * checkpoint to break the read/overwrite cycle and compaction's
+  * whole-table directory swap. Nor may a lake read infer its schema
+  * beside the one its snapshot manifest records. */
 class LakeRewriteGuardSpec extends AnyFunSuite {
 
+  /** `root-relative path: pattern` for each banned pattern a file under
+    * `root` contains. */
+  private def hits(root: String, banned: Seq[String]): List[String] = {
+    val dir = Paths.get(root)
+    assert(Files.isDirectory(dir),
+      s"expected to run from the project root, no ${dir.toAbsolutePath}")
+    val files = Files.walk(dir)
+    try files.iterator.asScala.filter(Files.isRegularFile(_))
+      .flatMap { p =>
+        val text = Files.readString(p)
+        banned.filter(text.contains).map(b => s"${dir.relativize(p)}: $b")
+      }.toList.sorted
+    finally files.close()
+  }
+
   test("graft/lake has no dynamic overwrite, checkpoint or root swap") {
-    val root = Paths.get("src/main/scala/graft/lake")
-    assert(Files.isDirectory(root),
-      s"expected to run from the project root, no ${root.toAbsolutePath}")
-    val banned = Seq("partitionOverwriteMode", "localCheckpoint(",
-      "__compacting")
-    val files = Files.walk(root)
-    val hits =
-      try files.iterator.asScala.filter(Files.isRegularFile(_))
-        .flatMap { p =>
-          val text = Files.readString(p)
-          banned.filter(text.contains)
-            .map(b => s"${root.relativize(p)}: $b")
-        }.toList.sorted
-      finally files.close()
-    assert(hits.isEmpty, "rewrite through Lakehouse.rewritePartitions")
+    val found = hits("src/main/scala/graft/lake",
+      Seq("partitionOverwriteMode", "localCheckpoint(", "__compacting"))
+    assert(found.isEmpty, "rewrite through Lakehouse.rewritePartitions")
+  }
+
+  test("src/main has no dynamic partition overwrite or state-v swap") {
+    val found = hits("src/main", Seq("partitionOverwriteMode", "state-v"))
+    assert(found.isEmpty, "rewrite through Lakehouse.rewritePartitions")
   }
 
   test("Lakehouse reads with its manifests' schema, never an inferred one") {

@@ -62,6 +62,66 @@ class LakehouseSpec extends SparkSpec {
     assert(all.filter(col("study_tag") === "s1").count() == 12)
   }
 
+  test("every rewrite op keeps an evolved column's values") {
+    // the ops rewrite with the schema the table's manifest records:
+    // none of them may NULL a column added after the first append
+    val T = "observations"
+    val keys = Seq("data_set_id", "problem_id", "implementation_id",
+      "test_id", "run_id", "environment_id", "step_id")
+    def obsIn(p: String) =
+      Fixtures.observations.withColumn("problem_id", lit(p))
+    // (op, the op, 's1' rows that survive it)
+    val ops: Seq[(String, Lakehouse => Unit, Long)] = Seq(
+      ("upsert", _.upsert(T,
+        obsIn("p1").limit(1).withColumn("step_id", lit(99)), keys), 12L),
+      ("deleteWhere", _.deleteWhere(T,
+        col("problem_id") === "p1" && col("implementation_id") === "i1"),
+        8L),
+      ("compact", _.compact(T), 12L),
+      ("compactZOrder",
+        _.compactZOrder(T, Seq("step_id", "execution_time_ms")), 12L))
+    ops.foreach { case (op, run, survivors) =>
+      val lake = new Lakehouse(spark, tmpDir(s"wh-evo-$op"))
+      lake.append(T, obsIn("p0"), Schemas.observations)
+      lake.append(T, obsIn("p1").withColumn("study_tag", lit("s1")),
+        lake.evolveSchema(Schemas.observations,
+          StructField("study_tag", StringType, nullable = true)))
+      run(lake)
+      assert(lake.manifestOp(T, 3) == op)
+      val all = lake.observations
+      assert(all.filter(col("study_tag") === "s1").count() == survivors,
+        op)
+      assert(all.filter(col("problem_id") === "p0" &&
+        col("study_tag").isNull).count() == 12, op)
+    }
+  }
+
+  test("upsert aligns its updates to the table by name") {
+    val wh = tmpDir("wh-upalign")
+    val lake = new Lakehouse(spark, wh)
+    val keys = Seq("data_set_id", "problem_id", "implementation_id",
+      "test_id", "run_id", "environment_id", "step_id")
+    lake.append("observations", Fixtures.observations, Schemas.observations)
+    // a missing optional column reads as a typed NULL, whatever the
+    // column order; a new column evolves the table as optional
+    val upd = Fixtures.observations.limit(1).drop("output")
+      .withColumn("study_tag", lit("s2"))
+    lake.upsert("observations", upd.select(upd.columns.reverse.map(col)
+      .toSeq: _*), keys)
+    val back = lake.observations
+    assert(back.count() == 12)
+    assert(back.filter(col("output").isNull).count() == 1)
+    assert(back.filter(col("study_tag") === "s2").count() == 1)
+    assert(back.filter(col("study_tag").isNull).count() == 11)
+    // a missing required column fails before anything is written
+    val e = intercept[IllegalArgumentException] {
+      lake.upsert("observations", upd.drop("step_id"),
+        keys.filterNot(_ == "step_id"))
+    }
+    assert(e.getMessage.contains("step_id"))
+    assert(lake.currentVersion("observations") == 2)
+  }
+
   test("load takes the evolved schema from the manifest, not from the " +
       "first footer") {
     // p0's files sort first and predate study_tag: a schema read from
@@ -137,7 +197,7 @@ class LakehouseSpec extends SparkSpec {
         .union(base
           .withColumn("step_id", org.apache.spark.sql.functions.lit(99))
           .withColumn("output", org.apache.spark.sql.functions.lit("NEW")))
-    lake.upsert("observations", updates, Schemas.observations, keys)
+    lake.upsert("observations", updates, keys)
     val after = lake.observations
     assert(after.count() == before + 1) // replaced one, inserted one
     assert(after.filter(col("output") === "UPD").count() == 1)
@@ -148,7 +208,7 @@ class LakehouseSpec extends SparkSpec {
     assert(stats.nonEmpty && stats.forall(_.getAs[Long]("files") >= 1))
     val rowsBefore = after.orderBy("step_id", "implementation_id",
       "test_id").collect().toSeq
-    lake.compact("observations", Schemas.observations,
+    lake.compact("observations",
       col("problem_id") === "p1")
     val rowsAfter = lake.observations.orderBy("step_id",
       "implementation_id", "test_id").collect().toSeq
@@ -162,7 +222,7 @@ class LakehouseSpec extends SparkSpec {
     val lake = new Lakehouse(spark, wh)
     // v1: initial append; v2: destructive delete
     lake.append("observations", Fixtures.observations, Schemas.observations)
-    lake.deleteWhere("observations", Schemas.observations,
+    lake.deleteWhere("observations",
       col("implementation_id") === "i1")
     assert(lake.currentVersion("observations") == 2)
     // SQL form = programmatic load(table, asOf): v1 intact post-delete
@@ -207,7 +267,7 @@ class LakehouseSpec extends SparkSpec {
       .drop("created_at").collect().toSeq
     assert(v1Rows.size == 12)
     // v2: delete a slice — v1 must read back INTACT afterwards
-    lake.deleteWhere("observations", Schemas.observations,
+    lake.deleteWhere("observations",
       col("implementation_id") === "i1")
     assert(lake.currentVersion("observations") == 2)
     assert(lake.observations.filter(col("implementation_id") === "i1")
@@ -218,7 +278,7 @@ class LakehouseSpec extends SparkSpec {
     // v3: upsert on top — v1 and v2 both still pinned
     val upd = Fixtures.observations.limit(1)
       .withColumn("output", lit("UPD"))
-    lake.upsert("observations", upd, Schemas.observations,
+    lake.upsert("observations", upd,
       Seq("data_set_id", "problem_id", "implementation_id",
         "test_id", "run_id", "environment_id", "step_id"))
     val v2Count = lake.load("observations", 2).count()
@@ -226,7 +286,7 @@ class LakehouseSpec extends SparkSpec {
     assert(lake.load("observations", 3)
       .filter(col("output") === "UPD").count() == 1)
     // v4: whole-table compaction — every earlier version still reads
-    lake.compact("observations", Schemas.observations)
+    lake.compact("observations")
     assert(lake.currentVersion("observations") == 4)
     assert(lake.load("observations", 1).count() == 12)
     assert(lake.load("observations", 2).count() == v2Count)
@@ -280,7 +340,7 @@ class LakehouseSpec extends SparkSpec {
     assert(canon(d12.drop("_change")) ==
       canon(obs.filter(col("step_id") === 1)))
     // v4: destructive delete — incrementalRead refuses loudly
-    lake.deleteWhere("observations", Schemas.observations,
+    lake.deleteWhere("observations",
       col("step_id") === 0)
     val e = intercept[IllegalArgumentException] {
       lake.incrementalRead("observations", 3, 4)
@@ -310,7 +370,7 @@ class LakehouseSpec extends SparkSpec {
         .toLowerCase.contains("replicaterows"))
     }
     // v5: compaction rewrites files but changes no rows — empty diff
-    lake.compact("observations", Schemas.observations)
+    lake.compact("observations")
     assert(lake.changeDiff("observations", 4, 5).count() == 0)
     assert(lake.changeDiffCounts("observations", 4, 5).count() == 0)
     // the append-only check is on the INTERVAL, not what came after:
@@ -355,7 +415,7 @@ class LakehouseSpec extends SparkSpec {
     assert(lake.refreshStats("mv", "observations", keys, "execution_time_ms")
       == lake.RefreshNoop)
     // a delete makes merge impossible: full-recompute fallback
-    lake.deleteWhere("observations", Schemas.observations,
+    lake.deleteWhere("observations",
       col("implementation_id") === "i1")
     assert(lake.refreshStats("mv", "observations", keys, "execution_time_ms")
       == lake.RefreshFull)
@@ -427,8 +487,7 @@ class LakehouseSpec extends SparkSpec {
     lake.upsert("observations",
       base.withColumn("output", lit("UPD"))
         .union(base.withColumn("step_id", lit(99))
-          .withColumn("output", lit("NEW"))),
-      Schemas.observations, keys)
+          .withColumn("output", lit("NEW"))), keys)
 
     // untouched partition: the PRE-upsert handle still reads p2 intact
     // (its files were never rewritten)

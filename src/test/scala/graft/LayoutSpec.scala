@@ -173,7 +173,7 @@ class LayoutSpec extends SparkSpec {
     lake.append("observations", rows.toDF(), Schemas.observations)
     val before = lake.observations.drop("created_at")
       .collect().map(_.toSeq).toSet
-    lake.compactZOrder("observations", Schemas.observations,
+    lake.compactZOrder("observations",
       Seq("step_id", "execution_time_ms"))
     val after = lake.observations.drop("created_at")
       .collect().map(_.toSeq).toSet
@@ -221,7 +221,7 @@ class LayoutSpec extends SparkSpec {
     // scoped rewrite: only p0; p1 files untouched on disk
     val p1Files = new java.io.File(
       s"$wh/observations/data_set_id=ds/problem_id=p1").list().toSet
-    lake.compactZOrder("observations", Schemas.observations,
+    lake.compactZOrder("observations",
       Seq("step_id", "execution_time_ms"),
       col("problem_id") === "p0")
     assert(lake.observations.drop("created_at")
@@ -230,7 +230,7 @@ class LayoutSpec extends SparkSpec {
       s"$wh/observations/data_set_id=ds/problem_id=p1").list().toSet
       == p1Files, "untouched partition must keep its files")
     // empty selection: no-op, no exception, data intact
-    lake.compactZOrder("observations", Schemas.observations,
+    lake.compactZOrder("observations",
       Seq("step_id"), col("problem_id") === "nope")
     assert(lake.observations.count() == 32)
   }
@@ -253,7 +253,7 @@ class LayoutSpec extends SparkSpec {
     lake.append("observations", rows.toDF(), Schemas.observations)
     // delete all of p2 (full partition), impl a in p0 (partial);
     // p1's NULL-output row matches a NULL predicate -> must survive
-    lake.deleteWhere("observations", Schemas.observations,
+    lake.deleteWhere("observations",
       col("problem_id") === "p2" ||
         (col("problem_id") === "p0" && col("implementation_id") === "a") ||
         (col("problem_id") === "p1" && col("output") === "never"))
@@ -265,7 +265,7 @@ class LayoutSpec extends SparkSpec {
     assert(!new java.io.File(
       s"$wh/observations/data_set_id=ds/problem_id=p2").exists())
     // no-op delete leaves everything alone
-    lake.deleteWhere("observations", Schemas.observations,
+    lake.deleteWhere("observations",
       col("implementation_id") === "zzz")
     assert(lake.observations.count() == 3)
   }
@@ -287,7 +287,7 @@ class LayoutSpec extends SparkSpec {
     val wh = tmpDir("z4-wh")
     val lake = new Lakehouse(spark, wh)
     lake.append("observations", rows.toDF(), Schemas.observations)
-    lake.compactZOrder("observations", Schemas.observations,
+    lake.compactZOrder("observations",
       Seq("step_id", "execution_time_ms", "memory_used_mb",
         "branch_coverage_percent"))
     val pDir = new java.io.File(
@@ -318,7 +318,7 @@ class LayoutSpec extends SparkSpec {
     val wh = tmpDir("del-esc-wh")
     val lake = new Lakehouse(spark, wh)
     lake.append("observations", rows.toDF(), Schemas.observations)
-    lake.deleteWhere("observations", Schemas.observations,
+    lake.deleteWhere("observations",
       col("problem_id") === "p:1 x")
     val back = lake.observations.select("problem_id", "implementation_id")
       .collect().map(r => (r.getString(0), r.getString(1))).toSet

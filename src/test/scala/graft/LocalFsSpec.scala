@@ -78,7 +78,7 @@ class LocalFsSpec extends SparkSpec {
         sortCols = Seq("implementation_id", "test_id", "step_id"))
       lake.append(T, Fixtures.observations.withColumn("problem_id",
         lit("p2")), Schemas.observations)
-      lake.compact(T, Schemas.observations)
+      lake.compact(T)
     }
     assert(procs.isEmpty, procs.mkString("\n"))
     assert(lake.observations.count() == 24)

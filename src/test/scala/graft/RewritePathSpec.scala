@@ -36,12 +36,12 @@ class RewritePathSpec extends SparkSpec {
     walk(dir, "").toSet
   }
 
-  /** The data files a manifest lists, after its header and schema
-    * lines. */
+  /** The data files a manifest lists, after its header, schema and
+    * partitions lines. */
   private def manifest(table: File, v: Int): Set[String] = {
     val src = scala.io.Source.fromFile(
       new File(table, f"_manifests/v$v%08d.txt"), "UTF-8")
-    try src.getLines().drop(2).filter(_.nonEmpty).toSet
+    try src.getLines().drop(3).filter(_.nonEmpty).toSet
     finally src.close()
   }
 
@@ -86,30 +86,29 @@ class RewritePathSpec extends SparkSpec {
     val base = Fixtures.observations.limit(1)
     lake.upsert(T, base.withColumn("output", lit("UPD"))
         .union(base.withColumn("step_id", lit(99))
-          .withColumn("output", lit("NEW"))),
-      Schemas.observations, keys)
+          .withColumn("output", lit("NEW"))), keys)
     check("upsert")
     assert(count(col("output") === "UPD") == 1)
     assert(count(col("output") === "NEW") == 1)
 
-    lake.deleteWhere(T, Schemas.observations,
+    lake.deleteWhere(T,
       col("problem_id") === "p2" && col("implementation_id") === "i1")
     check("deleteWhere")
     assert(count(col("problem_id") === "p2") == 8)
 
-    lake.deleteWhere(T, Schemas.observations, col("problem_id") === "p:3")
+    lake.deleteWhere(T, col("problem_id") === "p:3")
     check("deleteWhere")
     assert(count(col("problem_id") === "p:3") == 0)
     assert(new File(table, "data_set_id=HumanEval").list().toSet ==
       Set("problem_id=p1", "problem_id=p2"))
 
-    lake.compact(T, Schemas.observations, col("problem_id") === "p1")
+    lake.compact(T, col("problem_id") === "p1")
     check("compactWhere")
-    lake.compact(T, Schemas.observations)
+    lake.compact(T)
     check("compact")
     assert(lake.tableStats(T).collect()
       .forall(_.getAs[Long]("files") == 1))
-    lake.compactZOrder(T, Schemas.observations,
+    lake.compactZOrder(T,
       Seq("step_id", "execution_time_ms"))
     check("compactZOrder")
     // compactions move no row
@@ -117,8 +116,8 @@ class RewritePathSpec extends SparkSpec {
       snaps(7) == snaps(8))
 
     // no-ops commit nothing
-    lake.deleteWhere(T, Schemas.observations, col("problem_id") === "zz")
-    lake.compact(T, Schemas.observations, col("problem_id") === "zz")
+    lake.deleteWhere(T, col("problem_id") === "zz")
+    lake.compact(T, col("problem_id") === "zz")
     assert(lake.currentVersion(T) == 8)
     assert(!new File(table, "_staging").exists())
   }
@@ -132,8 +131,7 @@ class RewritePathSpec extends SparkSpec {
     val all = files(table, visibleOnly = false)
     intercept[Exception] {
       lake.upsert(T, Fixtures.observations.limit(2)
-          .withColumn("output", raise_error(lit("boom"))),
-        Schemas.observations, keys)
+          .withColumn("output", raise_error(lit("boom"))), keys)
     }
     assert(canon(lake.observations) == rows)
     assert(lake.currentVersion(T) == 1)
@@ -150,7 +148,7 @@ class RewritePathSpec extends SparkSpec {
     lake.append(T, obsIn("p0"), Schemas.observations)
     lake.append(T, obsIn("p1").withColumn("study_tag", lit("s1")), evolved)
     lake.upsert(T, obsIn("p1").limit(1).withColumn("study_tag", lit("s2")),
-      evolved, keys)
+      keys)
     val back = lake.observations
     assert(back.count() == 24)
     assert(back.filter(col("study_tag") === "s2").count() == 1)
@@ -174,14 +172,14 @@ class RewritePathSpec extends SparkSpec {
     val n = try {
       jobs.tagged("upsert")(lake.upsert(T,
         Fixtures.observations.limit(1).withColumn("output", lit("UPD")),
-        Schemas.observations, keys))
-      jobs.tagged("deleteWhere")(lake.deleteWhere(T, Schemas.observations,
+        keys))
+      jobs.tagged("deleteWhere")(lake.deleteWhere(T,
         col("problem_id") === "p2" && col("implementation_id") === "i1"))
-      jobs.tagged("compactWhere")(lake.compact(T, Schemas.observations,
+      jobs.tagged("compactWhere")(lake.compact(T,
         col("problem_id") === "p1"))
-      jobs.tagged("compact")(lake.compact(T, Schemas.observations))
+      jobs.tagged("compact")(lake.compact(T))
       jobs.tagged("compactZOrder")(lake.compactZOrder(T,
-        Schemas.observations, Seq("step_id", "execution_time_ms")))
+        Seq("step_id", "execution_time_ms")))
       jobs.counts()
     } finally jobs.close()
     info(s"jobs per op: $n, before: $before")

@@ -82,7 +82,7 @@ class ScaleOpsSpec extends SparkSpec {
     assert(files >= 4)
     val before = lake.observations.orderBy("implementation_id", "test_id",
       "step_id", "run_id").collect().map(_.toSeq).toSeq
-    lake.compact("observations", graft.schema.Schemas.observations)
+    lake.compact("observations")
     assert(files == 1)
     val after = lake.observations.orderBy("implementation_id", "test_id",
       "step_id", "run_id").collect().map(_.toSeq).toSeq
@@ -149,8 +149,7 @@ class ScaleOpsSpec extends SparkSpec {
     val lake = new graft.lake.Lakehouse(spark, wh)
     lake.append("observations", Fixtures.observations,
       graft.schema.Schemas.observations)
-    lake.createTable("obs_ddl", graft.schema.Schemas.observations,
-      location = s"$wh/observations")
+    lake.createTable("obs_ddl", "observations")
     assert(spark.sql("SELECT count(*) FROM obs_ddl").collect()
       .head.getLong(0) == 12)
     // out-of-band append to a NEW partition, then repair discovers it

@@ -64,32 +64,58 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(outDir).count() >= n1)
   }
 
+  /** Stats rows as a set, sums as doubles, for comparing a view with
+    * `IncrementalAgg.statsOf`. */
+  private def canonStats(d: org.apache.spark.sql.DataFrame) =
+    d.select(col("event_type"), col("n_rows"),
+      col("sum_v").cast("double"), col("min_v"), col("max_v"))
+      .collect().map(_.toSeq).toSet
+
+  private def oneShot(rows: org.apache.spark.sql.DataFrame) =
+    canonStats(graft.ops.IncrementalAgg.statsOf(rows, Seq("event_type"),
+      "value"))
+
   test("streaming incremental stats: maintained table == one-shot " +
       "stats after every wave (checkpointed restart)") {
-    import graft.ops.IncrementalAgg
     val srcDir = tmpDir("incr-src")
-    val statsDir = tmpDir("incr-stats") + "/stats"
+    val lake = new graft.lake.Lakehouse(spark, tmpDir("incr-wh"))
     val ckDir = tmpDir("incr-ck")
-    def canon(d: org.apache.spark.sql.DataFrame) =
-      d.select(col("event_type"), col("n_rows"),
-        col("sum_v").cast("double"), col("min_v"), col("max_v"))
-        .collect().map(_.toSeq).toSet
+    def run() = EventsStreaming.streamIncrementalStats(spark, srcDir,
+      schema, Seq("event_type"), "value", lake, "events_by_type", ckDir)
+      .awaitTermination(60000)
     // wave 1
     eventsDf.filter(col("event_id") <= 2).coalesce(1)
       .write.mode("append").parquet(srcDir)
-    EventsStreaming.streamIncrementalStats(spark, srcDir, schema,
-      Seq("event_type"), "value", statsDir, ckDir).awaitTermination(60000)
-    assert(canon(spark.read.parquet(statsDir)) ==
-      canon(IncrementalAgg.statsOf(
-        eventsDf.filter(col("event_id") <= 2), Seq("event_type"), "value")))
+    run()
+    assert(canonStats(lake.readStats("events_by_type")) ==
+      oneShot(eventsDf.filter(col("event_id") <= 2)))
     // wave 2: resume from checkpoint; only the new files are processed,
     // yet the stats table equals the full recompute
     eventsDf.filter(col("event_id") > 2).coalesce(1)
       .write.mode("append").parquet(srcDir)
-    EventsStreaming.streamIncrementalStats(spark, srcDir, schema,
-      Seq("event_type"), "value", statsDir, ckDir).awaitTermination(60000)
-    assert(canon(spark.read.parquet(statsDir)) ==
-      canon(IncrementalAgg.statsOf(eventsDf, Seq("event_type"), "value")))
+    run()
+    assert(canonStats(lake.readStats("events_by_type")) == oneShot(eventsDf))
+  }
+
+  test("streaming incremental stats: a replayed micro-batch folds once") {
+    val srcDir = tmpDir("replay-src")
+    val lake = new graft.lake.Lakehouse(spark, tmpDir("replay-wh"))
+    val ckDir = tmpDir("replay-ck")
+    def run() = EventsStreaming.streamIncrementalStats(spark, srcDir,
+      schema, Seq("event_type"), "value", lake, "events_by_type", ckDir)
+      .awaitTermination(60000)
+    val wave1 = eventsDf.filter(col("event_id") <= 3)
+    wave1.coalesce(1).write.mode("append").parquet(srcDir)
+    run()
+    assert(canonStats(lake.readStats("events_by_type")) == oneShot(wave1))
+    // batch 0's stats landed but its checkpoint commit did not: the
+    // restarted query re-runs batch 0 with the same id
+    val commit0 = java.nio.file.Paths.get(ckDir, "commits", "0")
+    java.nio.file.Files.delete(commit0)
+    java.nio.file.Files.deleteIfExists(commit0.resolveSibling(".0.crc"))
+    run()
+    assert(new java.io.File(ckDir, "commits/0").isFile)
+    assert(canonStats(lake.readStats("events_by_type")) == oneShot(wave1))
   }
 
   test("stateful sessionization (flatMapGroupsWithState), all sessions") {

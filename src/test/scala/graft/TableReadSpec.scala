@@ -17,6 +17,23 @@ class TableReadSpec extends SparkSpec {
 
   private def inferred(p: String) = spark.read.parquet(p).schema
 
+  /** One observation row per implementation id in `ids`. */
+  private def perImplementation(ids: Seq[Int]) = {
+    import spark.implicits._
+    ids.toDF("i").select(lit("d").as("data_set_id"), lit("p").as("problem_id"),
+      concat(lit("i"), col("i").cast("string")).as("implementation_id"))
+      .crossJoin(Fixtures.observations
+        .drop("data_set_id", "problem_id", "implementation_id").limit(1))
+  }
+
+  /** The data files a stats view's manifest `v` lists. */
+  private def viewFiles(wh: String, name: String, v: Int): Set[String] = {
+    val src = scala.io.Source.fromFile(
+      new File(wh, f"_mv/$name/_manifests/v$v%08d.txt"), "UTF-8")
+    try src.getLines().filter(_.startsWith("__bucket=")).toSet
+    finally src.close()
+  }
+
   test("footer schema equals Spark's inference on every testdata table") {
     // events stores TIMESTAMP(NANOS): readable only once Tables.events
     // has set nanosAsLong, which both reads below then honour
@@ -89,6 +106,13 @@ class TableReadSpec extends SparkSpec {
     val versioned =
       Seq("q77_time_travel", "q78_incremental_read", "q79_rollback_diff")
     versioned.foreach(q => SparkEntry.queries(q)(spark, sf))
+    // a stats view over 400 groups fills more bucket dirs than Spark's
+    // parallel-listing threshold (32)
+    lake.append("many", perImplementation(0 until 400), Schemas.observations)
+    lake.refreshStats("mv", "many", Seq("implementation_id"),
+      "execution_time_ms")
+    val buckets = viewFiles(wh, "mv", 1).map(_.takeWhile(_ != '/'))
+    assert(buckets.size > 32, buckets)
     val jobs = new JobCounter(spark.sparkContext)
     try {
       jobs.tagged("q04")(SparkEntry.queries("q04_pricing_summary")(spark, sf))
@@ -96,14 +120,51 @@ class TableReadSpec extends SparkSpec {
       jobs.tagged("open")(lake.observations)
       jobs.tagged("asOf")(lake.load("observations", 1))
       jobs.tagged("incremental")(lake.incrementalRead("observations", 1, 2))
+      jobs.tagged("readStats")(lake.readStats("mv"))
       versioned.foreach(q => jobs.tagged(q)(SparkEntry.queries(q)(spark, sf)))
       // control: the tag does see a job that runs
       jobs.tagged("count")(lake.observations.count())
       val n = jobs.counts()
-      (Seq("q04", "q101", "open", "asOf", "incremental") ++ versioned)
+      (Seq("q04", "q101", "open", "asOf", "incremental", "readStats") ++
+          versioned)
         .foreach(t => assert(n.getOrElse(t, 0) == 0, s"$t: $n"))
       assert(n.getOrElse("count", 0) > 0, n)
     } finally jobs.close()
+  }
+
+  test("a stats refresh after an append rewrites only the touched " +
+      "buckets") {
+    val wh = tmpDir("wh-mv-buckets")
+    val lake = new Lakehouse(spark, wh)
+    lake.append("many", perImplementation(0 until 400), Schemas.observations)
+    lake.refreshStats("mv", "many", Seq("implementation_id"),
+      "execution_time_ms")
+    val before = viewFiles(wh, "mv", 1)
+    def bytes(f: String) = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(wh, "_mv", "mv", f)).toSeq
+    val contents = before.map(f => f -> bytes(f)).toMap
+    // three groups gain rows: k <= 3 buckets
+    val grown = Seq(5, 77, 123)
+    lake.append("many", perImplementation(grown), Schemas.observations)
+    val touched = lake.load("_mv/mv")
+      .filter(col("implementation_id").isin(grown.map("i" + _): _*))
+      .select("__bucket").distinct().collect().map(r => s"__bucket=${r(0)}")
+      .toSet
+    assert(lake.refreshStats("mv", "many", Seq("implementation_id"),
+      "execution_time_ms") == lake.RefreshIncremental)
+    val after = viewFiles(wh, "mv", 2)
+    def inTouched(f: String) = touched(f.takeWhile(_ != '/'))
+    // every other bucket keeps its files, byte for byte
+    val kept = before.filterNot(inTouched)
+    assert(kept.size > 32 && after.filterNot(inTouched) == kept)
+    kept.foreach(f => assert(bytes(f) == contents(f), f))
+    // one file per bucket: exactly k files replaced, k written
+    assert((before -- after).size == touched.size)
+    assert((after -- before).size == touched.size)
+    assert(lake.readStats("mv").orderBy("implementation_id").collect()
+      .toSeq == graft.ops.IncrementalAgg.statsOf(lake.load("many"),
+        Seq("implementation_id"), "execution_time_ms")
+      .orderBy("implementation_id").collect().toSeq)
   }
 
   test("q90 builds with no job beyond its one word-table collect") {
