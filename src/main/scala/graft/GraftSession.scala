@@ -26,7 +26,12 @@ import org.apache.spark.sql.SparkSession
   * off — its per-exchange re-plan + materialization is fixed latency
   * with nothing to adapt at this size. Combine with
   * `CanonicalQueries.interactive` on the pruned input for single-stage
-  * execution.
+  * execution. Each collect then runs through
+  * [[graft.plans.ResultCollectExec]] (the extensions' physical rule, in
+  * both profiles): one job whose function the closure cleaner does not
+  * re-parse Spark's `RDD` and `SparkContext` classes for, which was the
+  * largest fixed per-query cost on this path (31% of the driver's CPU
+  * samples on a 4-core host).
   *
   * Both profiles bind the `file:` scheme to [[graft.lake.LocalFs]]
   * ([[FileSystemConf]]). Without the native Hadoop library, Hadoop's

@@ -15,10 +15,19 @@ import org.apache.spark.sql.SparkSessionExtensions
   * Scalar expressions AND the native aggregates are injected — the
   * analyzer wraps an AggregateFunction returned by a builder in its
   * AggregateExpression, so the aggregates work in plain SQL GROUP BYs.
-  * The reference's query surface needs no custom Strategy (SURVEY §4);
-  * the one injected RULE is [[ResolveGraftTimeTravel]], which resolves
-  * `VERSION AS OF` over snapshot-lite lakehouse tables (the Iceberg
-  * SQL form) ahead of the built-in `ResolveRelations`.
+  * The reference's query surface needs no custom Strategy (SURVEY §4).
+  * Two RULES are injected:
+  *   - [[ResolveGraftTimeTravel]] resolves `VERSION AS OF` over
+  *     snapshot-lite lakehouse tables (the Iceberg SQL form) ahead of the
+  *     built-in `ResolveRelations`;
+  *   - [[ResultCollect]], a physical rule after the columnar transitions,
+  *     puts [[ResultCollectExec]] over each collected plan root and under
+  *     each `BroadcastExchangeExec`, so a collect is one Spark job that
+  *     the closure cleaner does not re-parse Spark's `RDD` and
+  *     `SparkContext` classes for. Roots that collect their own way
+  *     (commands, `LocalTableScan`, `CollectLimit`,
+  *     `TakeOrderedAndProject`, `AdaptiveSparkPlan`) and exchanges are
+  *     left alone.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -26,6 +35,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // would hard-fail VERSION AS OF over the lakehouse temp views.
     ext.injectHintResolutionRule(session =>
       ResolveGraftTimeTravel(session))
+    ext.injectColumnar(_ => ResultCollect.columnarRule)
     ext.injectFunction((GitBlobHashExpr.identifier, GitBlobHashExpr.info,
       GitBlobHashExpr.builder))
     ext.injectFunction((GitBlobHashExpr.sha1Identifier,

@@ -355,22 +355,38 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("interactive canonical path stays a single stage, zero exchanges") {
-    // the zero-exchange claim covers SRM + clustering (+ the join, which
-    // broadcasts its dims); per_problem_stats is NOT claimed — its
-    // countDistinct Expand rewrite plans distinct-stage exchanges
-    val one = graft.queries.CanonicalQueries.interactive(
-      Fixtures.observations)
-    Seq(
-      graft.queries.CanonicalQueries.behavioralClustering(one),
-      graft.queries.CanonicalQueries.srmOutputView(one,
-        Seq("i1", "i2", "i3"))
-    ).foreach { q =>
-      val (sh, _) = exchanges(q)
-      assert(sh == 0, s"interactive path must not exchange:\n${planOf(q)}")
-      assert(q.rdd.getNumPartitions == 1)
+    // the zero-shuffle claim covers SRM, clustering and the three-way
+    // join (its two dims travel as broadcast exchanges, not shuffles);
+    // per_problem_stats is NOT claimed — its countDistinct Expand
+    // rewrite plans distinct-stage exchanges
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import graft.queries.CanonicalQueries
+    // the plan a collect ran: AQE's final plan, result stage unwrapped
+    def resultRoot(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => resultRoot(a.executedPlan)
+      case s: QueryStageExec => resultRoot(s.plan)
+      case other => other
     }
-    val cluster = planOf(graft.queries.CanonicalQueries
-      .behavioralClustering(one))
+    val Seq(one, code, tests) = Seq(Fixtures.observations, Fixtures.code,
+      Fixtures.tests).map(CanonicalQueries.interactive)
+    val join = CanonicalQueries.threeWayJoin(one, code, tests)
+    Seq(
+      CanonicalQueries.behavioralClustering(one),
+      CanonicalQueries.srmOutputView(one, Seq("i1", "i2", "i3")),
+      join
+    ).foreach { q =>
+      val (sh, bc) = exchanges(q)
+      assert(sh == 0, s"interactive path must not exchange:\n${planOf(q)}")
+      assert(bc == (if (q eq join) 2 else 0), planOf(q))
+      assert(q.rdd.getNumPartitions == 1)
+      q.collect()
+      val root = resultRoot(q.queryExecution.executedPlan)
+      assert(root.isInstanceOf[graft.plans.ResultCollectExec],
+        s"the collect must run through ResultCollectExec:\n$root")
+    }
+    val cluster = planOf(CanonicalQueries.behavioralClustering(one))
     assert(cluster.contains("graft_sig_list"),
       s"interactive clustering must fingerprint through SigListAgg:\n$cluster")
   }
