@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache,
   HadoopFsRelation, InMemoryFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import graft.ops.IncrementalAgg
 import graft.schema.Schemas
 
@@ -319,7 +318,11 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * nothing: Spark's own reader lists every path it is given, and past
     * `parallelPartitionDiscovery.threshold` (32) paths it runs a
     * listing job. Partition values are parsed from the paths below
-    * `base` and typed by `schema`, as a directory read types them. */
+    * `base` and typed by `schema`, as a directory read types them.
+    * The relation reads through [[ParquetFormat]], so the scan's reader
+    * set-up broadcasts the Hadoop conf without per-key sources. Every
+    * lake read (`load`, version and incremental reads, change diffs,
+    * rewrites, `readStats`) builds its relation here. */
   private def scan(schema: StructType, base: HPath,
       files: Seq[FileStatus]): DataFrame = {
     val known = files.map(f => f.getPath -> Array(f)).toMap
@@ -336,7 +339,7 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     spark.baseRelationToDataFrame(HadoopFsRelation(index,
       index.partitionSchema,
       StructType(schema.filterNot(f => parts(f.name))).toNullable,
-      None, new ParquetFileFormat, opts)(spark))
+      None, new ParquetFormat, opts)(spark))
   }
 
   /** Incremental (CDC-style) read: the rows ADDED between snapshots

@@ -23,6 +23,10 @@ import org.apache.spark.sql.types.StructType
   * No cache: the footer is read on every call, so a rewritten table is
   * seen as it now is. Reads that must merge every footer
   * (`mergeSchema`) keep using Spark's inference.
+  *
+  * A table with a footer schema is read through [[ParquetFormat]], whose
+  * reader set-up broadcasts the scan's Hadoop conf without per-key
+  * sources; rows and plans are those of `spark.read.parquet`.
   */
 object ParquetRead {
 
@@ -51,12 +55,14 @@ object ParquetRead {
   }
 
   /** Lazy read of a Parquet file or (partitioned) directory with the
-    * footer schema. With no data file it falls back to
-    * `spark.read.parquet`, which keeps Spark's own exception for an
-    * empty or missing table. */
+    * footer schema, through [[ParquetFormat]]. With no data file it
+    * falls back to `spark.read.parquet`, which keeps Spark's own
+    * exception for an empty or missing table. */
   def table(spark: SparkSession, path: String): DataFrame =
     schemaOf(spark, path) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case Some(schema) =>
+        spark.read.format(classOf[ParquetFormat].getName).schema(schema)
+          .load(path)
       case None => spark.read.parquet(path)
     }
 

@@ -10,7 +10,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Each read takes its schema from the file's footer on the driver
   * (`graft.lake.ParquetRead`), so building a query's DataFrame launches
   * no schema-inference job; a path with no Parquet file falls back to
-  * `spark.read.parquet` and its error.
+  * `spark.read.parquet` and its error. The scans run through
+  * `graft.lake.ParquetFormat`, whose reader set-up broadcasts the Hadoop
+  * conf without per-key sources (runtime SQL confs such as
+  * `nanosAsLong` still reach the reader).
   */
 object Tables {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
