@@ -3,7 +3,7 @@ package graft.lake
 import java.io.DataOutput
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.io.{Text, WritableUtils}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -46,6 +46,14 @@ class ParquetFormat extends ParquetFileFormat {
 }
 
 object ParquetFormat {
+
+  /** A streaming source over the Parquet files appearing in `dir`, read
+    * through this format: each micro-batch's scan broadcasts the
+    * sourceless conf, as batch reads do. */
+  def stream(spark: SparkSession, schema: StructType, dir: String)
+      : DataFrame =
+    spark.readStream.schema(schema).format(classOf[ParquetFormat].getName)
+      .load(dir)
 
   /** A copy of `conf` (Hadoop's copy constructor) that serializes
     * without per-key sources. */

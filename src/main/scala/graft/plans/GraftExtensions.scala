@@ -15,7 +15,9 @@ import org.apache.spark.sql.SparkSessionExtensions
   * Scalar expressions AND the native aggregates are injected — the
   * analyzer wraps an AggregateFunction returned by a builder in its
   * AggregateExpression, so the aggregates work in plain SQL GROUP BYs.
-  * The reference's query surface needs no custom Strategy (SURVEY §4).
+  * One planner strategy, [[PreparedStrategy]], expands the analyzed
+  * leaf [[PreparedPlan]] over which [[PreparedPlans]] serves a kept
+  * per-problem plan; a session without it builds those queries plainly.
   * Two RULES are injected:
   *   - [[ResolveGraftTimeTravel]] resolves `VERSION AS OF` over
   *     snapshot-lite lakehouse tables (the Iceberg SQL form) ahead of the
@@ -36,6 +38,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectHintResolutionRule(session =>
       ResolveGraftTimeTravel(session))
     ext.injectColumnar(_ => ResultCollect.columnarRule)
+    ext.injectPlannerStrategy(_ => PreparedStrategy)
     ext.injectFunction((GitBlobHashExpr.identifier, GitBlobHashExpr.info,
       GitBlobHashExpr.builder))
     ext.injectFunction((GitBlobHashExpr.sha1Identifier,

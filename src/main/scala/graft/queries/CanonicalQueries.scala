@@ -1,9 +1,11 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Alias, ElementAt, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import graft.functions.Fns
-import graft.plans.SigListAgg
+import graft.plans.{PreparedPlans, SigListAgg}
 
 /** The reference's four canonical analytical queries as reusable
   * DataFrame→DataFrame builders (SURVEY §2.3-§2.6, §7 item 4). Each takes
@@ -28,6 +30,14 @@ object CanonicalQueries {
   def interactive(prunedPartition: DataFrame): DataFrame =
     prunedPartition.coalesce(1)
 
+  /** `build(inputs)` from its kept plan, or built plainly where
+    * [[graft.plans.PreparedPlans]] does not apply. */
+  private def prepared(kind: String, inputs: DataFrame*)(
+      build: Seq[DataFrame] => DataFrame): DataFrame =
+    PreparedPlans.bind(kind, inputs)(build)
+      .map(PreparedPlans.dataset(inputs.head.sparkSession, _))
+      .getOrElse(build(inputs))
+
   /** Q1 — SRM output view (`benchmark_srm_output_view.py:50-77`): rows =
     * (test_id, step_id) stimulus, one column per implementation, cells =
     * observed output. `implValues` pins the column set (explicit list →
@@ -36,20 +46,38 @@ object CanonicalQueries {
     * practice, deterministic under duplicates.
     *
     * Implementation: ONE native map aggregation
-    * (`plans/KeyedMinAgg` — a single hash upsert per input row) +
-    * `element_at` column projection, instead of `pivot().agg(min)`
-    * which compiles to one conditional min-aggregate PER implementation
-    * evaluated on EVERY row (N× expression evals and buffers). Output
-    * is bit-identical to the pivot form ([[srmOutputViewPivot]],
-    * spec-asserted). */
+    * (`plans/KeyedMinAgg` — a single hash upsert per input row), sorted,
+    * then an `element_at` column projection, instead of
+    * `pivot().agg(min)` which compiles to one conditional min-aggregate
+    * PER implementation evaluated on EVERY row (N× expression evals and
+    * buffers). Output is bit-identical to the pivot form
+    * ([[srmOutputViewPivot]], spec-asserted).
+    *
+    * Prepared ([[graft.plans.PreparedPlans]]): the sorted aggregation is
+    * planned once per input shape, and each call binds its partition
+    * values and puts its own projection on top, so one kept plan serves
+    * every problem, whatever its implementation set. */
   def srmOutputView(observations: DataFrame,
       implValues: Seq[String]): DataFrame =
+    PreparedPlans.bind("srm", Seq(observations))(in => srmByKey(in.head))
+      match {
+        case Some(byKey) =>
+          val Seq(t, s, m) = byKey.output
+          PreparedPlans.dataset(observations.sparkSession, Project(
+            t +: s +: implValues.map(v =>
+              Alias(ElementAt(m, Literal(v)), v)()), byKey))
+        case None =>
+          srmByKey(observations).select(col("test_id") +: col("step_id") +:
+            implValues.map(v => element_at(col("__m"), lit(v)).as(v)): _*)
+      }
+
+  /** (test_id, step_id, `__m`: implementation → min output), sorted by
+    * stimulus: the aggregation behind [[srmOutputView]]. */
+  private[graft] def srmByKey(observations: DataFrame): DataFrame =
     observations
       .groupBy(col("test_id"), col("step_id"))
       .agg(graft.plans.KeyedMinAgg.keyedMin(
         col("implementation_id"), col("output")).as("__m"))
-      .select(col("test_id") +: col("step_id") +:
-        implValues.map(v => element_at(col("__m"), lit(v)).as(v)): _*)
       .orderBy("test_id", "step_id")
 
   /** The built-in `pivot().agg(min)` form — kept as the bit-parity
@@ -113,8 +141,17 @@ object CanonicalQueries {
     * single upfront exchange satisfies the aggregation (subset-key
     * reuse, measured 1.6× on the sf0.1 analog). Do NOT pre-partition on
     * the [[interactive]] path: the extra exchange defeats its
-    * single-stage execution. */
-  def behavioralClustering(observations: DataFrame): DataFrame = {
+    * single-stage execution.
+    *
+    * Prepared ([[graft.plans.PreparedPlans]]): planned once per input
+    * shape; each call binds its partition values. */
+  def behavioralClustering(observations: DataFrame): DataFrame =
+    prepared("clustering", observations)(in =>
+      behavioralClusteringPlain(in.head))
+
+  /** The Dataset build behind [[behavioralClustering]]. */
+  private[graft] def behavioralClusteringPlain(observations: DataFrame)
+      : DataFrame = {
     val fps = observations
       .groupBy(col("implementation_id"))
       .agg(md5(to_json(SigListAgg.sigs(
@@ -208,9 +245,19 @@ object CanonicalQueries {
     * observations ⋈ code_implementations ⋈ tests on composite keys;
     * reattaches source code to every observation row. Dimensions
     * broadcast (small per problem; at 100 TB the fact side never
-    * shuffles). */
+    * shuffles).
+    *
+    * Prepared ([[graft.plans.PreparedPlans]]): planned once per input
+    * shape; each call binds its partition values. */
   def threeWayJoin(observations: DataFrame, code: DataFrame,
       tests: DataFrame): DataFrame =
+    prepared("join", observations, code, tests) {
+      case Seq(o, c, t) => threeWayJoinPlain(o, c, t)
+    }
+
+  /** The Dataset build behind [[threeWayJoin]]. */
+  private[graft] def threeWayJoinPlain(observations: DataFrame,
+      code: DataFrame, tests: DataFrame): DataFrame =
     observations
       .join(broadcast(code.withColumnRenamed("source_code", "program_code")
           .select("data_set_id", "problem_id", "implementation_id",

@@ -16,7 +16,7 @@ object EventsStreaming {
     * appearing over time — the CI-append pattern). */
   def readEventStream(spark: SparkSession, dir: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.readStream.schema(schema).parquet(dir)
+    graft.lake.ParquetFormat.stream(spark, schema, dir)
 
   /** Watermarked tumbling-window aggregation: event-time correctness with
     * bounded state; late rows beyond the watermark are dropped. */
@@ -96,7 +96,7 @@ object EventsStreaming {
       cellSchema: org.apache.spark.sql.types.StructType,
       lake: graft.lake.Lakehouse, dataSetId: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.schema(cellSchema).parquet(cellsDir)
+    graft.lake.ParquetFormat.stream(spark, cellSchema, cellsDir)
       .writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -129,7 +129,7 @@ object EventsStreaming {
       keys: Seq[String], valueCol: String, lake: graft.lake.Lakehouse,
       name: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.schema(srcSchema).parquet(srcDir)
+    graft.lake.ParquetFormat.stream(spark, srcSchema, srcDir)
       .writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

@@ -373,7 +373,7 @@ object StatQueries {
           val out = s"$tmp/out"
           val ev = events(s, d)
           ev.union(ev).write.mode("overwrite").parquet(src)
-          s.readStream.schema(ev.schema).parquet(src)
+          graft.lake.ParquetFormat.stream(s, ev.schema, src)
             .dropDuplicates("event_id")
             .writeStream
             .outputMode("append")

@@ -11,7 +11,9 @@ import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{FileFormat,
   HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField}
 import org.apache.spark.util.SerializableConfiguration
 import scala.jdk.CollectionConverters._
@@ -109,6 +111,34 @@ class ScanConfSpec extends SparkSpec {
         .map(root.relativize(_).toString).toList.sorted
       finally files.close()
     assert(found.isEmpty, "read through graft.lake.ParquetFormat")
+  }
+
+  test("no src/main file opens a streaming Parquet source by name") {
+    // `readStream….parquet(dir)` builds Spark's format for every
+    // micro-batch scan; `ParquetFormat.stream` reads through the engine's
+    val byName = raw"readStream(\s*\.\s*\w+\([^()]*\))*\s*\.\s*parquet\(".r
+    val root = Paths.get("src/main")
+    val files = Files.walk(root)
+    val found =
+      try files.iterator.asScala
+        .filter(p => Files.isRegularFile(p) &&
+          byName.findFirstIn(Files.readString(p)).isDefined)
+        .map(root.relativize(_).toString).toList.sorted
+      finally files.close()
+    assert(found.isEmpty, "read through graft.lake.ParquetFormat.stream")
+    val dir = tmpDir("scan-stream")
+    Fixtures.observations.write.parquet(s"$dir/src")
+    val stream = ParquetFormat.stream(spark, Fixtures.observations.schema,
+      s"$dir/src")
+    val sources = stream.queryExecution.analyzed.collect {
+      case r: StreamingRelation => r.dataSource.className
+    }
+    assert(sources == Seq(classOf[ParquetFormat].getName))
+    val sink = s"$dir/out"
+    stream.writeStream.option("checkpointLocation", s"$dir/ck")
+      .trigger(Trigger.AvailableNow()).format("parquet")
+      .start(sink).awaitTermination()
+    sameRows(spark.read.parquet(sink), Fixtures.observations, "streamed")
   }
 
   test("the reader's conf carries the scan conf's pairs, no sources") {

@@ -15,6 +15,7 @@ object TestSpark {
         .createTempDirectory("graft-warehouse").toString)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.execution.usePartitionEvaluator", "true")
       .config(GraftSession.FileSystemConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
