@@ -50,8 +50,12 @@ import org.apache.spark.sql.SparkSession
   * files, their `.crc` siblings, partition directories, committer
   * markers, manifests), and `FileContext` renames (Structured Streaming
   * checkpoints and sinks) run `readlink` twice each; `LocalFs` does both
-  * through `java.nio` with the same modes and checksums. This is a fixed
-  * part of the session, not an option.
+  * through `java.nio` with the same modes and checksums. Both also bind
+  * Spark's file commit protocol to [[graft.lake.LakeCommitProtocol]]
+  * ([[CommitProtocolConf]]): Spark's default, plus the list of files
+  * each lake write committed, which is what a lake commit records
+  * instead of listing the table. Both bindings are a fixed part of the
+  * session, not an option.
   *
   * `getOrCreate` caveat (Spark semantics, not graft's): if a session is
   * already active in the JVM, it is returned as-is and this factory's
@@ -75,6 +79,12 @@ object GraftSession {
     "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
       classOf[graft.lake.LocalFs.Context].getName)
 
+  /** The file commit protocol binding, applied by every session this
+    * factory builds (and by the test session). */
+  private[graft] val CommitProtocolConf: Map[String, String] = Map(
+    "spark.sql.sources.commitProtocolClass" ->
+      classOf[graft.lake.LakeCommitProtocol].getName)
+
   private def base(master: String): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -93,6 +103,7 @@ object GraftSession {
       // on every execution).
       .config("spark.sql.execution.usePartitionEvaluator", "true")
       .config(FileSystemConf)
+      .config(CommitProtocolConf)
 
   def batch(master: String = "local[*]",
       shufflePartitions: Int = Runtime.getRuntime.availableProcessors)

@@ -1,7 +1,8 @@
 package graft.lake
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache,
@@ -18,8 +19,10 @@ import graft.schema.Schemas
   * Iceberg metadata (`olake/lakehouse.py:28-35,44-127`), every committed
   * snapshot records the table's declared schema and partition columns,
   * and every read and rewrite takes them from there: no footer is read
-  * and no inference job runs. Materialized stats views are lake tables
-  * too, partitioned by a hash bucket of their group key.
+  * and no inference job runs. As in Iceberg, a data file is written
+  * once and never moves, and a snapshot is only its manifest's file
+  * list. Materialized stats views are lake tables too, partitioned by a
+  * hash bucket of their group key.
   *
   * Scale design: identity partitioning on `(data_set_id, problem_id)` is
   * what the reference credits for its sub-100 ms latencies
@@ -57,7 +60,9 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * new table records `Schemas.partitionCols`. */
   def append(table: String, df: DataFrame, schema: StructType,
       sortCols: Seq[String] = Nil, clustered: Boolean = false): Unit = {
-    val (committed, parts) = withLatest(table, schema, Schemas.partitionCols)
+    val base = latestOption(table)
+    val (committed, parts) =
+      withLatest(table, base, schema, Schemas.partitionCols)
     val aligned = align(df, schema)
     val sorted =
       if (sortCols.nonEmpty && clustered)
@@ -66,8 +71,9 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
         aligned.repartition(parts.map(col): _*)
           .sortWithinPartitions((parts ++ sortCols).map(col): _*)
       else aligned
-    sorted.write.mode("append").partitionBy(parts: _*).parquet(dir(table))
-    commit(table, "append", committed, parts)
+    writeAndCommit(table, sorted.write.partitionBy(parts: _*), "append",
+      base, committed, parts)(written =>
+      Some(base.fold(Seq.empty[String])(_.files) ++ written))
   }
 
   /** Lazy partitioned-table load of the latest snapshot, i.e.
@@ -89,46 +95,43 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
   // `table.append` is a committed snapshot: `olake/lakehouse.py:28-35`,
   // `ingest/arena.py:146`, `README.md:11`); full table-format
   // transaction semantics stay external per BASELINE.json, but the
-  // READ-AT-VERSION half needs no format dependency. Data files are
-  // immutable and uniquely named (Spark part-file UUIDs), so:
+  // READ-AT-VERSION half needs no format dependency. As in Iceberg, a
+  // data file is written once under a fresh name (Spark part-file
+  // names carry the write job's UUID) and stays where it is, and a
+  // snapshot is only its manifest:
   //   - every mutating op commits a manifest under `_manifests/`:
   //       graft-manifest v=<version> op=<op>
   //       schema <the table schema as Spark's one-line JSON>
   //       partitions <the table's partition columns, comma-separated>
   //       view <watermark> <source|keys|value>     (stats views only)
-  //       <one live data file per line, relative to the table dir>
-  //     The file list is COMPLETE (full snapshot listing, not a delta —
-  //     replay reads ONE manifest). Three sites commit: [[append]]
-  //     (schema: the latest one plus the append's new columns),
-  //     [[rollbackTo]] (the target version's schema, partitions and
-  //     view line) and the one rewrite path behind every other
-  //     mutation, stats views included ([[rewritePartitions]], like
-  //     append). Partition columns are fixed by a table's first commit.
-  //     Every read — latest, at-version, incremental, diff and the
-  //     rewrites' own — reads with its snapshot's recorded schema and
-  //     exactly its files, so no read infers a schema or lists the
-  //     table. A manifest with no schema or partitions line fails
-  //     loudly;
-  //   - a rewrite stages the new files of the touched partitions under
-  //     the hidden `_staging/<uuid>/` and only then swaps them in,
-  //     partition by partition, MOVING the replaced files into the
-  //     hidden `_archive/` at the same relative path instead of
-  //     deleting them, so every committed version stays READABLE after
-  //     later rewrites (spec'd in LakehouseSpec, RewritePathSpec). A
-  //     rewrite whose rows fail to evaluate leaves the table as it was.
-  //     Concurrent-reader contract: a version is re-resolvable at any
-  //     time via load(table, asOf) — but a DataFrame PLANNED before a
-  //     concurrent rewrite holds the pre-move paths and must be
-  //     re-planned (unlike a table format, which leaves files in place
-  //     until vacuum; the same single-writer caveat as the rest of this
-  //     layer);
-  //   - [[expireSnapshots]] is the vacuum that actually reclaims
-  //     space, dropping old manifests and the archived files only they
-  //     reference.
-  // Underscore-prefixed names are invisible to Spark directory scans,
-  // so a catalog table over the directory ([[createTable]]) sees the
-  // live state only. Version assignment is last-writer-wins, not a
-  // transaction log: RACING writers still need the external catalog.
+  //       <one data file per line, relative to the table dir>
+  //     The file list is COMPLETE (not a delta — replay reads ONE
+  //     manifest). Each commit builds it from the previous manifest and
+  //     the files its own write committed ([[LakeCommitProtocol]]),
+  //     never from a listing: [[append]] adds them; the one rewrite
+  //     path behind every other mutation, stats views included
+  //     ([[rewritePartitions]]), drops the touched partitions' files
+  //     and adds them; [[rollbackTo]] takes its target's list. A file
+  //     put into the table dir by anything else is in no snapshot.
+  //     Partition columns are fixed by a table's first commit. Every
+  //     read — latest, at-version, incremental, diff and the rewrites'
+  //     own — reads with its snapshot's recorded schema and exactly its
+  //     files, so no read infers a schema or lists the table. A
+  //     manifest with no schema or partitions line fails loudly;
+  //   - no append, rewrite or rollback renames or deletes a committed
+  //     data file, so every committed version stays READABLE and a
+  //     DataFrame planned before a later commit keeps reading its own
+  //     snapshot (spec'd in LakehouseSpec, RewritePathSpec). A commit
+  //     creates its manifest exclusively and never overwrites one; if
+  //     it fails after its write committed, it deletes that write's
+  //     files first, so a failed rewrite leaves the table as it was;
+  //   - [[expireSnapshots]] is the vacuum: it drops old manifests and
+  //     deletes the files only they name — the one delete of a data
+  //     file.
+  // Version assignment is not a transaction log: RACING writers still
+  // need the external catalog (concurrent writes into one table also
+  // share Hadoop's `<table>/_temporary`, which each job's cleanup
+  // deletes).
   // -----------------------------------------------------------------
 
   private val ManifestName = "v(\\d+)\\.txt".r
@@ -136,42 +139,9 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
   private def hadoopFs(p: HPath) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** A relative path is hidden iff any segment is dot-prefixed, or
-    * underscore-prefixed and not a `col=value` partition dir — Spark's
-    * own directory-scan visibility rule. */
-  private def isHidden(rel: String): Boolean =
-    rel.split("/").exists(s =>
-      (s.startsWith("_") && !s.contains("=")) || s.startsWith("."))
-
-  /** Every file under `dir` at any depth, paired with its path
-    * relative to `dir` (the names as they are on disk, so a partition
-    * dir Spark escape-encoded stays encoded exactly once), in
-    * depth-first listing order; empty if `dir` does not exist. Walks
-    * with `listStatus`, not `listFiles`: the latter wraps each entry in
-    * a `LocatedFileStatus`, whose constructor reads the file's
-    * permission. [[LocalFs]] only takes child processes off the write
-    * path: without native Hadoop, any read that loads a local file's
-    * permission still forks an `ls -ld` per file, and `listStatus`
-    * avoids that load (Spark's own file listing avoids it for the same
-    * reason). */
-  private def filesUnder(fs: FileSystem,
-      dir: HPath): Seq[(String, FileStatus)] = {
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(String, FileStatus)]
-    def walk(d: HPath, rel: String): Unit = fs.listStatus(d).foreach { f =>
-      val r = rel + f.getPath.getName
-      if (f.isDirectory) walk(f.getPath, r + "/")
-      else if (f.isFile) out += ((r, f))
-    }
-    if (fs.exists(dir)) walk(dir, "")
-    out.toSeq
-  }
-
-  /** Relative paths of the table's current (live) data files. */
-  private def liveFiles(table: String): Seq[String] = {
-    val root = new HPath(dir(table))
-    filesUnder(hadoopFs(root), root).map(_._1).filterNot(isHidden)
-  }
+  /** The partition directory of a table-relative file path. */
+  private def parentDir(rel: String): String =
+    rel.substring(0, math.max(0, rel.lastIndexOf('/')))
 
   /** Latest committed snapshot version; 0 = never committed. */
   def currentVersion(table: String): Int = {
@@ -218,24 +188,29 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
       }, files.filter(_.nonEmpty))
   }
 
+  /** The latest committed snapshot's manifest; None = never committed. */
+  private def latestOption(table: String): Option[Manifest] =
+    Some(currentVersion(table)).filter(_ > 0).map(manifest(table, _))
+
   /** The latest committed snapshot's manifest. */
   private def latest(table: String): Manifest = {
-    val v = currentVersion(table)
-    require(v > 0, s"table '$table' has no committed snapshot in $warehouse")
-    manifest(table, v)
+    val m = latestOption(table)
+    require(m.isDefined,
+      s"table '$table' has no committed snapshot in $warehouse")
+    m.get
   }
 
-  /** `schema` evolved onto the table's latest committed schema, with
-    * the table's partition columns: the committed columns keep their
-    * order and type, the new ones follow. A table with no commit yet
-    * takes `schema` and `newParts`. A column whose type differs from
-    * the committed one fails loudly — evolution is additive only. */
-  private def withLatest(table: String, schema: StructType,
-      newParts: Seq[String]): (StructType, Seq[String]) =
-    currentVersion(table) match {
-      case 0 => (schema, newParts)
-      case v =>
-        val m = manifest(table, v)
+  /** `schema` evolved onto the schema of the table's latest snapshot
+    * `base`, with the table's partition columns: the committed columns
+    * keep their order and type, the new ones follow. A table with no
+    * commit yet takes `schema` and `newParts`. A column whose type
+    * differs from the committed one fails loudly — evolution is
+    * additive only. */
+  private def withLatest(table: String, base: Option[Manifest],
+      schema: StructType, newParts: Seq[String]): (StructType, Seq[String]) =
+    base match {
+      case None => (schema, newParts)
+      case Some(m) =>
         val prev = m.schema
         schema.fields.foreach { f =>
           prev.find(_.name == f.name).foreach(p =>
@@ -248,32 +223,54 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
           m.partitionCols)
     }
 
-  /** Commit the table's CURRENT live-file set, `schema`, partition
-    * columns `parts` and a stats view's `view` state as the next
-    * snapshot version. Returns the version. */
-  private def commit(table: String, op: String, schema: StructType,
-      parts: Seq[String], view: Option[View] = None): Int = {
-    val v = currentVersion(table) + 1
-    val files = liveFiles(table).sorted
+  /** Commit `files`, `schema`, partition columns `parts` and a stats
+    * view's `view` state as the version after `base`. The manifest is
+    * created exclusively: a version that exists fails the commit and is
+    * never overwritten. Returns the version. */
+  private def commit(table: String, op: String, base: Option[Manifest],
+      schema: StructType, parts: Seq[String], files: Seq[String],
+      view: Option[View] = None): Int = {
+    val v = base.fold(0)(_.v) + 1
     val p = manifestPath(table, v)
     val fs = hadoopFs(p)
     fs.mkdirs(p.getParent)
-    val out = fs.create(p, true)
+    val out = fs.create(p, false)
     val text = s"graft-manifest v=$v op=$op\n$SchemaLine${schema.json}\n" +
       s"$PartitionsLine${parts.mkString(",")}\n" +
       view.fold("")(w => s"$ViewLine${w.watermark} ${w.sig}\n") +
-      files.map(_ + "\n").mkString
+      files.sorted.map(_ + "\n").mkString
     try out.write(text.getBytes("UTF-8"))
     finally out.close()
     v
   }
 
+  /** Write `w` into the table directory (an append: every file gets a
+    * fresh name), then [[commit]] the version after `base` with the
+    * file list `files` makes of the files this write committed; None
+    * commits nothing. If anything fails once the write has committed,
+    * its files are deleted before the failure propagates, so no file
+    * is left that no manifest names. */
+  private def writeAndCommit(table: String, w: DataFrameWriter[Row],
+      op: String, base: Option[Manifest], schema: StructType,
+      parts: Seq[String], view: Option[View] = None)(
+      files: Seq[String] => Option[Seq[String]]): Unit = {
+    val id = java.util.UUID.randomUUID.toString
+    w.mode("append").option(LakeCommitProtocol.WriteId, id).parquet(dir(table))
+    val written = LakeCommitProtocol.take(id).getOrElse(throw
+      new IllegalStateException(s"$op into '$table': the session does not " +
+        "bind graft.lake.LakeCommitProtocol; build it with GraftSession"))
+    try files(written).foreach(commit(table, op, base, schema, parts, _, view))
+    catch { case e: Throwable =>
+      val root = new HPath(dir(table))
+      written.foreach(r => hadoopFs(root).delete(new HPath(root, r), false))
+      throw e
+    }
+  }
+
   /** Read the table AS OF snapshot `asOf` — the Iceberg
-    * `VERSION AS OF` analog. Each manifest entry resolves to its live
-    * path first, then to the archive (where destructive rewrites moved
-    * it); a file in neither was reclaimed by [[expireSnapshots]] and
-    * the read fails loudly rather than returning a silently partial
-    * table. */
+    * `VERSION AS OF` analog. A file the manifest names that is gone was
+    * reclaimed by [[expireSnapshots]], and the read fails loudly rather
+    * than returning a silently partial table. */
   def load(table: String, asOf: Int): DataFrame = read(table,
     manifest(table, asOf))
 
@@ -285,32 +282,23 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * time ("append", "deleteWhere", "compact", ...). */
   def manifestOp(table: String, v: Int): String = manifest(table, v).op
 
-  /** Read manifest-relative paths with `schema`, resolving each
-    * live-first-then-archive and failing loudly on files reclaimed by
-    * [[expireSnapshots]]; each group is read anchored at its own
-    * basePath so partition parsing is identical. No file: the typed
-    * empty frame. */
+  /** Read table-relative paths with `schema`, failing loudly on files
+    * reclaimed by [[expireSnapshots]]. No file: the typed empty frame. */
   private def readRels(table: String, schema: StructType, rels: Seq[String],
       what: String): DataFrame = {
     if (rels.isEmpty)
       return spark.createDataFrame(java.util.List.of[Row](), schema)
     val root = new HPath(dir(table))
-    val archive = new HPath(root, "_archive")
     val fs = hadoopFs(root)
-    def status(base: HPath, rel: String): Option[FileStatus] =
-      try Some(fs.getFileStatus(new HPath(base, rel)))
-      catch { case _: java.io.FileNotFoundException => None }
     val found = rels.map(r =>
-      r -> status(root, r).map(root -> _).orElse(
-        status(archive, r).map(archive -> _)))
+      r -> (try Some(fs.getFileStatus(new HPath(root, r)))
+        catch { case _: java.io.FileNotFoundException => None }))
     val missing = found.collect { case (r, None) => r }
     require(missing.isEmpty,
       s"$what of '$table' is no longer readable: ${missing.size} " +
         s"file(s) reclaimed by expireSnapshots " +
         s"(e.g. ${missing.take(3).mkString(", ")})")
-    val byBase = found.flatMap(_._2).groupMap(_._1)(_._2)
-    Seq(root, archive).flatMap(b => byBase.get(b).map(scan(schema, b, _)))
-      .reduce(_.union(_))
+    scan(schema, root, found.flatMap(_._2))
   }
 
   /** A Parquet scan of exactly `files` below `base`, read with `schema`.
@@ -435,39 +423,16 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     (aligned(a), aligned(b), cols.map(_.name))
   }
 
-  /** Roll the table's LIVE state back to snapshot `v` — Iceberg
+  /** Roll the table's latest state back to snapshot `v` — Iceberg
     * rollback semantics: history is preserved and the rollback is
     * itself a new commit (readable, re-rollback-able), never a
-    * manifest deletion. Mechanics are pure renames: live files the
-    * target doesn't reference move into `_archive/`; target files
-    * that earlier rewrites archived move back to their live paths.
-    * Every other manifest stays readable — resolution is live-first-
-    * then-archive, and each file still exists at exactly one of the
-    * two. The new commit records v's schema, partition columns and view
-    * state, so the live table reads exactly as `load(table, v)`.
-    * Returns the new version number. */
+    * manifest deletion. The new commit records v's file list, schema,
+    * partition columns and view state, so the table reads exactly as
+    * `load(table, v)`; no file moves. Returns the new version number. */
   def rollbackTo(table: String, v: Int): Int = {
     val m = manifest(table, v)
-    val target = m.files.toSet
-    val root = new HPath(dir(table))
-    val fs = hadoopFs(root)
-    val live = liveFiles(table).toSet
-    (live -- target).foreach { rel =>
-      val dst = new HPath(s"${dir(table)}/_archive/$rel")
-      fs.mkdirs(dst.getParent)
-      require(fs.rename(new HPath(root, rel), dst),
-        s"rollbackTo: cannot archive $rel")
-    }
-    (target -- live).foreach { rel =>
-      val src = new HPath(s"${dir(table)}/_archive/$rel")
-      require(fs.exists(src),
-        s"rollbackTo: snapshot v$v of '$table' is no longer " +
-          s"restorable: $rel reclaimed by expireSnapshots")
-      val dst = new HPath(root, rel)
-      fs.mkdirs(dst.getParent)
-      require(fs.rename(src, dst), s"rollbackTo: cannot restore $rel")
-    }
-    commit(table, s"rollback-to-v$v", m.schema, m.partitionCols, m.view)
+    commit(table, s"rollback-to-v$v", latestOption(table), m.schema,
+      m.partitionCols, m.files, m.view)
   }
 
   // -----------------------------------------------------------------
@@ -501,10 +466,8 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     s"$source|${keys.mkString(",")}|$v"
 
   /** The view's latest state; None = never refreshed. */
-  private def viewOf(name: String): Option[View] = {
-    val t = mvTable(name)
-    Some(currentVersion(t)).filter(_ > 0).flatMap(manifest(t, _).view)
-  }
+  private def viewOf(name: String): Option[View] =
+    latestOption(mvTable(name)).flatMap(_.view)
 
   /** [[viewOf]], after checking the view was built as `sig`. */
   private def viewAs(name: String, sig: String): Option[View] = {
@@ -598,10 +561,11 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
   }
 
   /** Vacuum: keep the latest `keepLast` snapshots, drop older
-    * manifests, and delete archived files that no KEPT manifest
-    * references. Live files are never touched. After expiry, reads of
-    * dropped versions fail loudly in [[load(table:String,asOf:Int)*]].
-    */
+    * manifests, and delete the files they name that no KEPT manifest
+    * names — the only delete of a committed data file — and the
+    * partition dirs that leaves empty. After expiry,
+    * reads of dropped versions fail loudly in
+    * [[load(table:String,asOf:Int)*]]. */
   def expireSnapshots(table: String, keepLast: Int = 1): Unit = {
     require(keepLast >= 1, "keepLast must be >= 1")
     val root = new HPath(dir(table))
@@ -615,9 +579,19 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     if (expire.isEmpty) return
     val kept: Set[String] =
       keep.flatMap(v => manifest(table, v).files).toSet
-    filesUnder(fs, new HPath(root, "_archive")).foreach { case (rel, f) =>
-      if (!kept.contains(rel)) fs.delete(f.getPath, false)
+    val gone = expire.flatMap(v => manifest(table, v).files).distinct
+      .filterNot(kept)
+    gone.foreach(r => fs.delete(new HPath(root, r), false))
+    // a partition dir this emptied goes too, and so does its parent
+    def prune(d: String): Unit = if (d.nonEmpty) {
+      val p = new HPath(root, d)
+      // recursive: a checksummed FS lists no `.crc` sidecar
+      if (fs.exists(p) && fs.listStatus(p).isEmpty) {
+        fs.delete(p, true)
+        prune(parentDir(d))
+      }
     }
+    gone.map(parentDir).distinct.foreach(prune)
     expire.foreach(v => fs.delete(manifestPath(table, v), false))
   }
 
@@ -648,72 +622,40 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
 
   /** The one rewrite path behind every mutation that replaces files
     * ([[upsert]], [[deleteWhere]], [[compact]], [[compactZOrder]] and
-    * every stats-view change): stage, then swap.
+    * every stats-view change): write, then commit once.
     *
     * `rows` are the complete new contents of the partitions they fall
-    * in. They are written, one file per partition (`order` sorts
-    * within it), to `<table>/_staging/<uuid>/`. The touched partitions
-    * are those the staging write produced plus `scope` (the partitions
-    * a caller rewrites even if no row of them survives); `scope = None`
-    * means the staged partitions alone. Only once every staged file
-    * exists does anything live move: per touched partition, the live
-    * files move into `_archive/` (snapshot readers keep resolving
-    * them), the staged files move into place, and a partition left with
-    * no staged file is removed. Then one version is committed, with
-    * `rows`' schema evolved onto the latest committed one as [[append]]
-    * does, the table's partition columns (`newParts` if this rewrite
-    * creates the table) and a stats view's new `view` state. Renames
-    * are O(touched files) metadata ops; Hadoop's checksummed local FS
-    * carries the `.crc` sidecars along. A write that fails leaves the
-    * live table as it was, and the staging dir is removed either way.
-    * A rewrite that touches no partition commits nothing, unless it
-    * moves a view's watermark. */
+    * in. They are written into the table directory, one new file per
+    * partition (`order` sorts within it), beside the files they
+    * replace. The touched partitions are those the write produced
+    * files in plus `scope` (the partitions a caller rewrites even if no
+    * row of them survives); `scope = None` means the written partitions
+    * alone. The commit is the previous manifest minus the touched
+    * partitions' files plus the written ones, with `rows`' schema
+    * evolved onto the latest committed one as [[append]] does, the
+    * table's partition columns (`newParts` if this rewrite creates the
+    * table) and a stats view's new `view` state: one atomic manifest
+    * commit, so a reader sees every touched partition old or every one
+    * new. No file is renamed or deleted; a write that fails leaves the
+    * table as it was. A rewrite that touches no partition commits
+    * nothing, unless it moves a view's watermark. */
   private def rewritePartitions(table: String, rows: DataFrame, op: String,
       scope: Option[Seq[Row]] = None, order: Seq[Column] = Nil,
       newParts: Seq[String] = Nil, view: Option[View] = None): Unit = {
-    val (committed, partCols) = withLatest(table, rows.schema, newParts)
+    val base = latestOption(table)
+    val (committed, partCols) = withLatest(table, base, rows.schema, newParts)
+    val prev = base.fold(Seq.empty[String])(_.files)
     if (scope.exists(_.isEmpty)) // nothing to rewrite; a view's watermark moves
-      return view.foreach(_ => commit(table, op, committed, partCols, view))
-    val root = new HPath(dir(table))
-    val fs = hadoopFs(root)
-    val stagingRoot = new HPath(root, "_staging")
-    val staging = new HPath(stagingRoot, java.util.UUID.randomUUID.toString)
+      return view.foreach(_ =>
+        commit(table, op, base, committed, partCols, prev, view))
     val parts = partCols.map(col)
-    try {
-      rows.repartition(parts: _*).sortWithinPartitions(parts ++ order: _*)
-        .write.partitionBy(partCols: _*)
-        .parquet(staging.toString)
-      val staged = filesUnder(fs, staging).filterNot(f => isHidden(f._1))
-        .groupBy { case (rel, _) => rel.substring(0, rel.lastIndexOf('/')) }
-      val touched =
-        (scope.fold(Seq.empty[String])(partitionRelDirs(_, partCols)) ++
-          staged.keys)
-          .distinct
-      touched.foreach { rd =>
-        val live = new HPath(root, rd)
-        filesUnder(fs, live).filterNot(f => isHidden(f._1)).foreach {
-          case (name, f) =>
-            val dst = new HPath(root, s"_archive/$rd/$name")
-            fs.mkdirs(dst.getParent)
-            require(fs.rename(f.getPath, dst),
-              s"$op: cannot archive ${f.getPath} to $dst")
-        }
-        staged.get(rd) match {
-          case Some(files) =>
-            fs.mkdirs(live)
-            files.foreach { case (_, f) =>
-              val dst = new HPath(live, f.getPath.getName)
-              require(fs.rename(f.getPath, dst),
-                s"$op: cannot move ${f.getPath} to $dst")
-            }
-          case None => fs.delete(live, true)
-        }
-      }
-      if (touched.nonEmpty) commit(table, op, committed, partCols, view)
-    } finally {
-      fs.delete(staging, true)
-      if (fs.exists(stagingRoot) && fs.listStatus(stagingRoot).isEmpty)
-        fs.delete(stagingRoot, true)
+    val w = rows.repartition(parts: _*)
+      .sortWithinPartitions(parts ++ order: _*).write.partitionBy(partCols: _*)
+    writeAndCommit(table, w, op, base, committed, partCols, view) { written =>
+      val touched = scope.fold(Set.empty[String])(
+        partitionRelDirs(_, partCols).toSet) ++ written.map(parentDir)
+      Option.when(touched.nonEmpty)(
+        prev.filterNot(f => touched(parentDir(f))) ++ written)
     }
   }
 
@@ -749,9 +691,9 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * rewritten (their existing rows are anti-joined against the update
     * keys and retained); untouched
     * partitions' files are never opened. At 100 TB the cost is
-    * proportional to the touched partitions, not the table. Swapped in
-    * partition by partition ([[rewritePartitions]]), so not
-    * transactional across partitions — pair with an external catalog
+    * proportional to the touched partitions, not the table. Committed
+    * as one snapshot across every touched partition
+    * ([[rewritePartitions]]); pair with an external catalog
     * (Iceberg/Delta per BASELINE.json) when writers race.
     *
     * `updates` align to the table's schema by column name: a column
@@ -780,13 +722,10 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * anything. Returns (partition dir relative path, files, bytes). */
   def tableStats(table: String): DataFrame = {
     val root = new HPath(dir(table))
-    // skip snapshot bookkeeping (_manifests, _archive) and markers
-    // (_SUCCESS): stats describe the LIVE table, same visibility rule
-    // as a scan
-    val rows = filesUnder(hadoopFs(root), root).collect {
-      case (rel, f) if !isHidden(rel) =>
-        (rel.substring(0, math.max(0, rel.lastIndexOf('/'))), 1L, f.getLen)
-    }
+    val fs = hadoopFs(root)
+    // the latest snapshot's files: a replaced file stays on disk
+    val rows = latestOption(table).fold(Seq.empty[String])(_.files).map(r =>
+      (parentDir(r), 1L, fs.getFileStatus(new HPath(root, r)).getLen))
     import spark.implicits._
     rows.toDF("partition", "files", "bytes")
       .groupBy("partition")
@@ -857,28 +796,6 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     rewritePartitions(table, base, "compactZOrder",
       order = Seq(graft.plans.ZOrderExpr.zorder(enc: _*)))
   }
-
-  /** SQL DDL registration (SURVEY S6): declares lake table `table`'s
-    * partitioned layout as the external catalog table `name`, with the
-    * schema and partition columns its latest manifest records, so plain
-    * `spark.sql` sees it; call [[repairTable]] after out-of-band
-    * appends so new partition dirs are discovered. */
-  def createTable(name: String, table: String): Unit = {
-    val m = latest(table)
-    def ddl(fs: Seq[StructField]) =
-      fs.map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
-    val (partCols, dataCols) =
-      m.schema.fields.toSeq.partition(f => m.partitionCols.contains(f.name))
-    spark.sql(s"""CREATE TABLE IF NOT EXISTS $name (${ddl(dataCols)})
-      USING parquet PARTITIONED BY (${ddl(partCols)})
-      LOCATION '${dir(table)}'""")
-    repairTable(name)
-  }
-
-  /** Partition discovery for externally-appended files
-    * (`MSCK REPAIR TABLE`). */
-  def repairTable(table: String): Unit =
-    spark.sql(s"MSCK REPAIR TABLE $table")
 
   /** The reference's `ObservationAnalyzer.query_*` API
     * (`lakehouse.py:365-411`) — but lazy: tables are registered as temp

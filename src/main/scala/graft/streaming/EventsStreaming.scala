@@ -119,7 +119,7 @@ object EventsStreaming {
     * groups, never the history. The stream is the change log of the
     * view: the view is a lake table partitioned by a hash bucket of the
     * group key, so a batch reads and rewrites only the buckets its
-    * groups hash into, through the same stage-then-swap commit as every
+    * groups hash into, through the same write-then-commit path as every
     * other lake write. The checkpoint is the recovery log; the view's
     * watermark (the last batch id folded) makes a batch the sink
     * replays fold once. [[graft.lake.Lakehouse.readStats]] reads the

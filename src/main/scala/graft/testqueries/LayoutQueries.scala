@@ -163,11 +163,10 @@ object LayoutQueries {
     // Snapshot-lite time travel under the oracle gate (the Iceberg
     // `VERSION AS OF` analog, olake/lakehouse.py:28-35): three commits
     // — append the even-doc half (v1), append the odd half (v2), then
-    // a destructive deleteWhere(lang='en') (v3) whose stage-then-swap
-    // rewrite MOVES every pre-delete file into the archive. The declared query
-    // reads all three versions back — v1/v2 resolve entirely through
-    // archived files, v3 through the live tree — so manifest replay,
-    // archive resolution and delete semantics are all hash-verified
+    // a destructive deleteWhere(lang='en') (v3) whose rewrite commits
+    // new files in place of the pre-delete ones, which stay on disk for
+    // v1/v2. The declared query reads all three versions back, so
+    // manifest replay and delete semantics are hash-verified
     // against DuckDB recomputing each version's state from the source
     // table. Documents is the small table (~500 rows at sf0.01), so the
     // per-pass write cost stays benchable, like q75.
@@ -265,12 +264,12 @@ object LayoutQueries {
       ORDER BY delta, lang""")),
 
     // Row-level change diff + rollback under the oracle gate: append
-    // halves (v1, v2), deleteWhere(lang='en') (v3), then roll the live
-    // tree back to v2 (v4 — a NEW commit, history preserved). The
-    // declared query diffs v2->v3 (pure deletes of the 'en' rows,
-    // computed AFTER the rollback, so historical resolution through
-    // live-and-archive renames is what's being verified) and reads the
-    // post-rollback live state; the oracle recomputes both from the
+    // halves (v1, v2), deleteWhere(lang='en') (v3), then roll the
+    // table back to v2 (v4 — a NEW commit of v2's file list, history
+    // preserved, no file moved). The declared query diffs v2->v3 (pure
+    // deletes of the 'en' rows, computed AFTER the rollback, so reading
+    // rolled-past versions is what's being verified) and reads the
+    // post-rollback latest state; the oracle recomputes both from the
     // source table.
     QueryDef("q79_rollback_diff",
       (s, d) => {

@@ -77,11 +77,6 @@ object Demo {
     lake.query("SELECT implementation_id, count(*) AS n FROM observations " +
       "WHERE problem_id = 'p1' GROUP BY 1 ORDER BY 1").show(false)
 
-    println("-- SQL DDL + partition discovery --")
-    lake.createTable("obs_sql", "observations")
-    spark.sql("SELECT problem_id, count(*) AS n FROM obs_sql GROUP BY 1")
-      .show(false)
-
     println("-- streaming sessionization (batch input) --")
     val td = "/root/testdata/sf0.001"
     graft.streaming.EventsStreaming.sessionize(spark,

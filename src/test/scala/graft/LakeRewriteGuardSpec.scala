@@ -4,14 +4,16 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** Every Lakehouse mutation that replaces files stages its new files and
-  * then swaps them in (`Lakehouse.rewritePartitions`), stats views
-  * included. The mechanisms that path replaced must not come back
-  * beside it: Spark's dynamic partition overwrite and the stats views'
-  * own `state-v<N>` swap anywhere in the program, and in `graft/lake` a
-  * checkpoint to break the read/overwrite cycle and compaction's
-  * whole-table directory swap. Nor may a lake read infer its schema
-  * beside the one its snapshot manifest records. */
+/** Every Lakehouse mutation that replaces files writes its new files
+  * beside the old ones and commits one manifest
+  * (`Lakehouse.rewritePartitions`), stats views included. The
+  * mechanisms that path replaced must not come back beside it: Spark's
+  * dynamic partition overwrite and the stats views' own `state-v<N>`
+  * swap anywhere in the program; in `graft/lake` a checkpoint to break
+  * the read/overwrite cycle and compaction's whole-table directory
+  * swap; and in `Lakehouse` the staging and archive directories and any
+  * rename, since a committed file never moves. Nor may a lake read
+  * infer its schema beside the one its snapshot manifest records. */
 class LakeRewriteGuardSpec extends AnyFunSuite {
 
   /** `root-relative path: pattern` for each banned pattern a file under
@@ -38,6 +40,13 @@ class LakeRewriteGuardSpec extends AnyFunSuite {
   test("src/main has no dynamic partition overwrite or state-v swap") {
     val found = hits("src/main", Seq("partitionOverwriteMode", "state-v"))
     assert(found.isEmpty, "rewrite through Lakehouse.rewritePartitions")
+  }
+
+  test("Lakehouse moves no file: no staging, archive or rename") {
+    val lakehouse = Paths.get("src/main/scala/graft/lake/Lakehouse.scala")
+    val text = Files.readString(lakehouse)
+    val hits = Seq("_archive", "_staging", ".rename(").filter(text.contains)
+    assert(hits.isEmpty, s"$lakehouse: commit a manifest, move no file")
   }
 
   test("Lakehouse reads with its manifests' schema, never an inferred one") {

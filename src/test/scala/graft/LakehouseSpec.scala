@@ -375,7 +375,7 @@ class LakehouseSpec extends SparkSpec {
     assert(lake.changeDiffCounts("observations", 4, 5).count() == 0)
     // the append-only check is on the INTERVAL, not what came after:
     // v1->v2 stays incrementally readable after the compaction
-    // archived its files (delta resolves through _archive/)
+    // replaced its files (they stay on disk until expireSnapshots)
     assert(canon(lake.incrementalRead("observations", 1, 2)) ==
       canon(obs.filter(col("step_id") === 1)))
     // v6: roll back to the pre-delete snapshot; history is preserved
@@ -461,10 +461,9 @@ class LakehouseSpec extends SparkSpec {
   }
 
   test("upsert interleaved with a reader: old-or-new per partition, never partial") {
-    // pins the documented non-transactional semantics (Lakehouse.upsert
-    // doc): the rewrite swaps ONLY touched partition dirs, so a
-    // concurrent reader sees each partition either fully-old or
-    // fully-new — or fails cleanly on a vanished file — never a
+    // a handle opened before the upsert keeps reading its own snapshot:
+    // the upsert commits a new manifest and moves or deletes no file,
+    // so the old handle sees every partition fully old, never a
     // partial/mixed partition. Untouched partitions are never affected.
     val wh = tmpDir("wh-rd")
     val lake = new Lakehouse(spark, wh)
@@ -501,17 +500,10 @@ class LakehouseSpec extends SparkSpec {
     assert(lake.observations.filter(col("problem_id") === "p1" &&
       col("output").isin("UPD", "NEW")).count() == 2)
 
-    // stale handle on the REWRITTEN partition: consistent old or new
-    // snapshot, or a clean failure on vanished files — never a mix
-    try {
-      val seen = staleHandle.filter(col("problem_id") === "p1")
-        .drop("created_at").collect().map(_.toSeq).toSet
-      assert(seen == p1Old || seen == p1New,
-        "stale reader returned a partial/mixed partition")
-    } catch {
-      case e: org.apache.spark.SparkException
-        if e.getMessage != null => () // vanished-file failure is legal
-    }
+    // stale handle on the REWRITTEN partition: its own (old) snapshot
+    val seen = staleHandle.filter(col("problem_id") === "p1")
+      .drop("created_at").collect().map(_.toSeq).toSet
+    assert(seen == p1Old, "stale reader did not read its own snapshot")
   }
 
   test("clustered ingest append: identical contents, single exchange") {

@@ -179,17 +179,13 @@ class LayoutSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
     assert(after == before)
     // each rewritten file's row order follows the curve: recompute the
-    // encoded z per row and assert nondecreasing within the file
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(
-        s"$wh/observations")).iterator()
-    val parquets = Iterator.continually(files)
-      .takeWhile(_.hasNext).map(_.next()).map(_.toString)
-      .filter(p => p.endsWith(".parquet") &&
-        // live files only: _archive holds the PRE-rewrite files the
-        // snapshot layer preserved, in their pre-curve order
-        !p.split("/").exists(_.startsWith("_")))
-      .toList
-    assert(parquets.nonEmpty)
+    // encoded z per row and assert nondecreasing within the file. The
+    // latest snapshot's files only: the replaced files stay on disk,
+    // in their pre-curve order, for the earlier snapshot
+    val table = new java.io.File(wh, "observations")
+    val parquets = LakeFiles.latestFiles(table).toList
+      .map(new java.io.File(table, _).getPath)
+    assert(parquets.nonEmpty && parquets.forall(_.endsWith(".parquet")))
     // step_id and execution_time_ms both span [0, 63] by construction
     parquets.foreach { p =>
       val zs = spark.read.parquet(p)
@@ -261,7 +257,12 @@ class LayoutSpec extends SparkSpec {
       .select("problem_id", "implementation_id")
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(back == Set(("p0", "b"), ("p1", "c"), ("p1", "d")))
-    // the fully-deleted partition's directory is gone
+    // the fully-deleted partition has no file in the latest snapshot
+    assert(LakeFiles.latestFiles(new java.io.File(wh, "observations"))
+      .map(LakeFiles.partitionOf) ==
+      Set("data_set_id=ds/problem_id=p0", "data_set_id=ds/problem_id=p1"))
+    // ...and its directory goes once no kept snapshot names its files
+    lake.expireSnapshots("observations")
     assert(!new java.io.File(
       s"$wh/observations/data_set_id=ds/problem_id=p2").exists())
     // no-op delete leaves everything alone
@@ -290,12 +291,12 @@ class LayoutSpec extends SparkSpec {
     lake.compactZOrder("observations",
       Seq("step_id", "execution_time_ms", "memory_used_mb",
         "branch_coverage_percent"))
-    val pDir = new java.io.File(
-      s"$wh/observations/data_set_id=ds/problem_id=p0")
-    val files = pDir.listFiles().filter(f =>
-      f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
+    val table = new java.io.File(wh, "observations")
+    val files = LakeFiles.latestFiles(table).toSeq
     assert(files.length == 1, "compaction must leave one file")
-    val order = spark.read.parquet(files.head.getPath)
+    assert(LakeFiles.partitionOf(files.head) ==
+      "data_set_id=ds/problem_id=p0")
+    val order = spark.read.parquet(new java.io.File(table, files.head).getPath)
       .select("step_id").collect().map(_.getInt(0)).toSeq
     assert(order == order.sorted,
       s"z-order over 4 dims must be monotone in the only varying dim, " +
@@ -324,10 +325,16 @@ class LayoutSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(back == Set(("p0", "b")),
       "rows of the escaped partition must not reappear after DELETE")
-    val dirs = new java.io.File(s"$wh/observations/data_set_id=ds")
+    val dirs = LakeFiles.latestFiles(new java.io.File(wh, "observations"))
+      .map(LakeFiles.partitionOf)
+    assert(dirs == Set("data_set_id=ds/problem_id=p0"),
+      s"escaped partition must have no file in the latest snapshot, " +
+        s"found $dirs")
+    lake.expireSnapshots("observations")
+    val left = new java.io.File(s"$wh/observations/data_set_id=ds")
       .list().toSet
-    assert(dirs == Set("problem_id=p0"),
-      s"escaped partition dir must be removed, found $dirs")
+    assert(left == Set("problem_id=p0"),
+      s"escaped partition dir must be removed by expiry, found $left")
   }
 
   test("IncrementalAgg.merge: NULL-keyed group merges once (null-safe " +

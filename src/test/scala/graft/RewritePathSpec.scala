@@ -7,13 +7,16 @@ import org.apache.spark.sql.types.{StringType, StructField}
 import graft.lake.Lakehouse
 import graft.metrics.JobCounter
 import graft.schema.Schemas
+import LakeFiles.{manifest, onDisk, parquetOnDisk, partitionOf}
 
 /** Every Lakehouse mutation that replaces files (upsert, deleteWhere,
   * compact with and without a predicate, compactZOrder) runs through one
-  * stage-then-swap path. These pin its contract on the fixtures: the
-  * latest manifest is the live file set, replaced files are archived,
-  * every earlier version reads back unchanged, nothing is left staged,
-  * and a rewrite that fails leaves the table as it was. */
+  * write-then-commit path. These pin its contract on the fixtures: the
+  * latest manifest is the previous one minus the touched partitions'
+  * files plus the op's new files, replaced files stay on disk where
+  * they were, every earlier version reads back unchanged, nothing is
+  * staged or archived, and a rewrite that fails leaves the table as it
+  * was. */
 class RewritePathSpec extends SparkSpec {
   private val T = "observations"
   private val keys = Seq("data_set_id", "problem_id", "implementation_id",
@@ -22,37 +25,14 @@ class RewritePathSpec extends SparkSpec {
   private def obsIn(problem: String): DataFrame =
     Fixtures.observations.withColumn("problem_id", lit(problem))
 
-  /** Relative paths of every file under `dir`, `visibleOnly` skipping
-    * any whose path has an underscore- or dot-prefixed segment. */
-  private def files(dir: File, visibleOnly: Boolean): Set[String] = {
-    def walk(d: File, rel: String): Seq[String] =
-      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
-        val r = rel + f.getName
-        if (visibleOnly && (f.getName.startsWith("_") ||
-            f.getName.startsWith("."))) Nil
-        else if (f.isDirectory) walk(f, r + "/")
-        else Seq(r)
-      }
-    walk(dir, "").toSet
-  }
-
-  /** The data files a manifest lists, after its header, schema and
-    * partitions lines. */
-  private def manifest(table: File, v: Int): Set[String] = {
-    val src = scala.io.Source.fromFile(
-      new File(table, f"_manifests/v$v%08d.txt"), "UTF-8")
-    try src.getLines().drop(3).filter(_.nonEmpty).toSet
-    finally src.close()
-  }
-
   /** Rows as sorted strings over name-sorted columns: a read through a
     * snapshot may order its columns differently from a live read. */
   private def canon(df: DataFrame): Seq[String] =
     df.select(df.columns.sorted.toSeq.map(col): _*).collect()
       .map(_.toString).toSeq.sorted
 
-  test("every rewrite op: manifest = live files, replaced files " +
-      "archived, earlier versions unchanged, nothing staged") {
+  test("every rewrite op: manifest delta, files in place, versions " +
+      "unchanged") {
     val wh = tmpDir("wh-rewrite")
     val table = new File(wh, T)
     val lake = new Lakehouse(spark, wh)
@@ -62,23 +42,36 @@ class RewritePathSpec extends SparkSpec {
     lake.append(T, obsIn("p1"), Schemas.observations)
     val snaps = scala.collection.mutable.Map(
       1 -> canon(lake.load(T, 1)), 2 -> canon(lake.load(T, 2)))
-    def check(op: String): Unit = {
+    val p = Seq("p1", "p2", "p%3A3")
+      .map(q => q -> s"data_set_id=HumanEval/problem_id=$q").toMap
+    var disk = onDisk(table)
+    /** `op` just ran, rewriting the partition dirs `touched`. */
+    def check(op: String, touched: Set[String]): Unit = {
       val v = lake.currentVersion(T)
       assert(v == snaps.size + 1, s"$op committed no version")
       assert(lake.manifestOp(T, v) == op)
-      val now = manifest(table, v)
-      assert(now == files(table, visibleOnly = true),
-        s"$op: latest manifest differs from the live files")
-      val replaced = manifest(table, v - 1) -- now
+      val now = onDisk(table)
+      assert(disk.subsetOf(now), s"$op moved or deleted a file")
+      val added = (now -- disk).filter(_.endsWith(".parquet"))
+      assert(added.map(partitionOf).subsetOf(touched),
+        s"$op wrote outside the partitions it touched")
+      val prev = manifest(table, v - 1)
+      assert(manifest(table, v) ==
+        prev.filterNot(f => touched(partitionOf(f))) ++ added,
+        s"$op: latest manifest is not the previous one minus the " +
+          "touched partitions' files plus the op's new files")
+      val replaced = prev -- manifest(table, v)
       assert(replaced.nonEmpty, s"$op replaced no file")
-      replaced.foreach(r => assert(new File(table, s"_archive/$r").isFile,
-        s"$op: replaced file $r is not archived"))
+      replaced.foreach(r => assert(new File(table, r).isFile,
+        s"$op: replaced file $r is not on disk at its own path"))
       snaps(v) = canon(lake.load(T, v))
       assert(canon(lake.observations) == snaps(v))
       snaps.foreach { case (u, rows) =>
         assert(canon(lake.load(T, u)) == rows, s"after $op: v$u changed")
       }
-      assert(!new File(table, "_staging").exists(), s"$op left _staging")
+      Seq("_staging", "_archive").foreach(d =>
+        assert(!new File(table, d).exists(), s"$op made $d"))
+      disk = now
     }
     def count(c: Column) =
       lake.observations.filter(c).count()
@@ -87,38 +80,39 @@ class RewritePathSpec extends SparkSpec {
     lake.upsert(T, base.withColumn("output", lit("UPD"))
         .union(base.withColumn("step_id", lit(99))
           .withColumn("output", lit("NEW"))), keys)
-    check("upsert")
+    check("upsert", Set(p("p1")))
     assert(count(col("output") === "UPD") == 1)
     assert(count(col("output") === "NEW") == 1)
 
     lake.deleteWhere(T,
       col("problem_id") === "p2" && col("implementation_id") === "i1")
-    check("deleteWhere")
+    check("deleteWhere", Set(p("p2")))
     assert(count(col("problem_id") === "p2") == 8)
 
     lake.deleteWhere(T, col("problem_id") === "p:3")
-    check("deleteWhere")
+    check("deleteWhere", Set(p("p%3A3")))
     assert(count(col("problem_id") === "p:3") == 0)
-    assert(new File(table, "data_set_id=HumanEval").list().toSet ==
-      Set("problem_id=p1", "problem_id=p2"))
+    assert(manifest(table, lake.currentVersion(T)).map(partitionOf) ==
+      Set(p("p1"), p("p2")))
 
     lake.compact(T, col("problem_id") === "p1")
-    check("compactWhere")
+    check("compactWhere", Set(p("p1")))
     lake.compact(T)
-    check("compact")
+    check("compact", Set(p("p1"), p("p2")))
     assert(lake.tableStats(T).collect()
       .forall(_.getAs[Long]("files") == 1))
     lake.compactZOrder(T,
       Seq("step_id", "execution_time_ms"))
-    check("compactZOrder")
+    check("compactZOrder", Set(p("p1"), p("p2")))
     // compactions move no row
     assert(snaps(5) == snaps(6) && snaps(6) == snaps(7) &&
       snaps(7) == snaps(8))
 
-    // no-ops commit nothing
+    // no-ops commit nothing and write nothing
     lake.deleteWhere(T, col("problem_id") === "zz")
     lake.compact(T, col("problem_id") === "zz")
     assert(lake.currentVersion(T) == 8)
+    assert(parquetOnDisk(table) == disk.filter(_.endsWith(".parquet")))
     assert(!new File(table, "_staging").exists())
   }
 
@@ -128,15 +122,127 @@ class RewritePathSpec extends SparkSpec {
     val lake = new Lakehouse(spark, wh)
     lake.append(T, obsIn("p1").union(obsIn("p2")), Schemas.observations)
     val rows = canon(lake.observations)
-    val all = files(table, visibleOnly = false)
+    val all = onDisk(table)
     intercept[Exception] {
       lake.upsert(T, Fixtures.observations.limit(2)
           .withColumn("output", raise_error(lit("boom"))), keys)
     }
     assert(canon(lake.observations) == rows)
     assert(lake.currentVersion(T) == 1)
-    assert(files(table, visibleOnly = false) == all)
+    assert(onDisk(table) == all)
     assert(!new File(table, "_staging").exists())
+  }
+
+  test("a DataFrame planned before compact, deleteWhere and rollbackTo " +
+      "reads its snapshot") {
+    val wh = tmpDir("wh-planned")
+    val lake = new Lakehouse(spark, wh)
+    lake.append(T, obsIn("p1").union(obsIn("p2")), Schemas.observations)
+    lake.append(T, obsIn("p1"), Schemas.observations)
+    val planned = lake.observations
+    val rows = canon(lake.load(T, 2))
+    lake.compact(T)
+    assert(canon(planned) == rows, "after compact")
+    lake.deleteWhere(T, col("problem_id") === "p1")
+    val afterDelete = lake.observations
+    assert(canon(planned) == rows, "after deleteWhere")
+    lake.rollbackTo(T, 1)
+    assert(canon(planned) == rows, "after rollbackTo")
+    assert(canon(afterDelete) == canon(obsIn("p2")), "after rollbackTo")
+    assert(canon(lake.observations) == canon(lake.load(T, 1)))
+  }
+
+  test("a stray parquet file in a partition dir is in no manifest and " +
+      "no read") {
+    val wh = tmpDir("wh-stray")
+    val table = new File(wh, T)
+    val lake = new Lakehouse(spark, wh)
+    lake.append(T, obsIn("p1"), Schemas.observations)
+    // a readable file of the table's own rows, put there by hand
+    val stray = "data_set_id=HumanEval/problem_id=p1/part-stray.parquet"
+    java.nio.file.Files.copy(new File(table, manifest(table, 1).head).toPath,
+      new File(table, stray).toPath)
+    lake.append(T, obsIn("p2"), Schemas.observations)          // v2
+    lake.upsert(T, Fixtures.observations.limit(1)
+      .withColumn("output", lit("UPD")), keys)                 // v3
+    lake.compact(T)                                            // v4
+    lake.rollbackTo(T, 2)                                      // v5
+    LakeFiles.versions(table).foreach(v =>
+      assert(!manifest(table, v).contains(stray), s"v$v names $stray"))
+    assert(Seq(1, 2, 3, 4, 5).map(lake.load(T, _).count()) ==
+      Seq(12, 24, 24, 24, 24))
+    assert(lake.query("SELECT count(*) FROM observations WHERE " +
+      "problem_id = 'p1'").head().getLong(0) == 12)
+    assert(lake.tableStats(T).collect().map(_.getAs[Long]("files")).sum ==
+      manifest(table, 5).size)
+    assert(new File(table, stray).isFile)
+  }
+
+  test("rollbackTo leaves the files on disk unchanged") {
+    val wh = tmpDir("wh-rollback-files")
+    val table = new File(wh, T)
+    val lake = new Lakehouse(spark, wh)
+    lake.append(T, obsIn("p1").union(obsIn("p2")), Schemas.observations)
+    lake.deleteWhere(T, col("problem_id") === "p2")
+    lake.compact(T)
+    def data = onDisk(table).filterNot(_.startsWith("_manifests/"))
+    val before = data
+    Seq(1, 3, 2).foreach { v =>
+      val rows = canon(lake.load(T, v))
+      lake.rollbackTo(T, v)
+      assert(data == before, s"rollbackTo($v) changed the files on disk")
+      assert(canon(lake.observations) == rows)
+      assert(manifest(table, lake.currentVersion(T)) == manifest(table, v))
+    }
+  }
+
+  test("expireSnapshots: kept versions read unchanged, every parquet " +
+      "file on disk is named by a kept manifest") {
+    val wh = tmpDir("wh-expire")
+    val table = new File(wh, T)
+    val lake = new Lakehouse(spark, wh)
+    lake.append(T, obsIn("p1").union(obsIn("p2")), Schemas.observations)
+    lake.append(T, obsIn("p1"), Schemas.observations)
+    lake.upsert(T, Fixtures.observations.limit(1)
+      .withColumn("output", lit("UPD")), keys)
+    lake.deleteWhere(T, col("problem_id") === "p2")
+    lake.compact(T)
+    lake.rollbackTo(T, 3)                                      // v6
+    val snaps = (1 to 6).map(v => v -> canon(lake.load(T, v))).toMap
+    Seq(3, 1).foreach { keep =>
+      lake.expireSnapshots(T, keepLast = keep)
+      val kept = (7 - keep to 6)
+      assert(LakeFiles.versions(table) == kept)
+      kept.foreach(v => assert(canon(lake.load(T, v)) == snaps(v), s"v$v"))
+      assert(parquetOnDisk(table) == kept.flatMap(manifest(table, _)).toSet)
+    }
+  }
+
+  test("a commit whose version is taken overwrites nothing and leaves " +
+      "no file") {
+    val wh = tmpDir("wh-taken")
+    val table = new File(wh, T)
+    val lake = new Lakehouse(spark, wh)
+    lake.append(T, obsIn("p1"), Schemas.observations)
+    val files = parquetOnDisk(table)
+    val v1 = new File(table, "_manifests/v00000001.txt").toPath
+    val v2 = new File(table, "_manifests/v00000002.txt").toPath
+    // another writer commits v2 while this append's write runs
+    val (from, to) = (v1.toString, v2.toString)
+    val race = udf { (s: String) =>
+      try java.nio.file.Files.copy(java.nio.file.Paths.get(from),
+        java.nio.file.Paths.get(to))
+      catch { case _: java.nio.file.FileAlreadyExistsException => () }
+      s
+    }.asNondeterministic()
+    intercept[java.io.IOException] {
+      lake.append(T, obsIn("p2").withColumn("output", race(col("output"))),
+        Schemas.observations)
+    }
+    assert(java.nio.file.Files.readString(v2) ==
+      java.nio.file.Files.readString(v1), "v2 was overwritten")
+    assert(parquetOnDisk(table) == files, "the failed commit left its files")
+    assert(lake.load(T, 2).count() == 12)
   }
 
   test("upsert into an evolved table whose first file predates the " +

@@ -76,9 +76,9 @@ class ScaleOpsSpec extends SparkSpec {
       lake.append("observations", Fixtures.observations,
         graft.schema.Schemas.observations)
     }
-    def files = new java.io.File(
-      s"$wh/observations/data_set_id=HumanEval/problem_id=p1")
-      .listFiles().count(_.getName.endsWith(".parquet"))
+    // the latest snapshot's files: a replaced file stays on disk
+    def files = LakeFiles.latestFiles(new java.io.File(wh, "observations"))
+      .count(LakeFiles.partitionOf(_) == "data_set_id=HumanEval/problem_id=p1")
     assert(files >= 4)
     val before = lake.observations.orderBy("implementation_id", "test_id",
       "step_id", "run_id").collect().map(_.toSeq).toSeq
@@ -144,22 +144,22 @@ class ScaleOpsSpec extends SparkSpec {
     }
   }
 
-  test("lakehouse SQL DDL: create external table + partition discovery") {
-    val wh = tmpDir("whddl")
+  test("lakehouse SQL: query() sees a new partition, compact adds no row") {
+    val wh = tmpDir("whsql")
     val lake = new graft.lake.Lakehouse(spark, wh)
+    def count(where: String) = lake.query(
+      s"SELECT count(*) FROM observations WHERE $where").head().getLong(0)
     lake.append("observations", Fixtures.observations,
       graft.schema.Schemas.observations)
-    lake.createTable("obs_ddl", "observations")
-    assert(spark.sql("SELECT count(*) FROM obs_ddl").collect()
-      .head.getLong(0) == 12)
-    // out-of-band append to a NEW partition, then repair discovers it
+    assert(count("true") == 12)
+    // a second append's NEW partition is visible to the next query
     lake.append("observations",
       Fixtures.observations.withColumn("problem_id", lit("p2")),
       graft.schema.Schemas.observations)
-    lake.repairTable("obs_ddl")
-    assert(spark.sql(
-      "SELECT count(*) FROM obs_ddl WHERE problem_id = 'p2'").collect()
-      .head.getLong(0) == 12)
-    spark.sql("DROP TABLE obs_ddl")
+    assert(count("problem_id = 'p2'") == 12)
+    // the replaced files stay on disk; SQL reads the snapshot's only
+    lake.compact("observations")
+    assert(count("true") == 24)
+    assert(count("problem_id = 'p1'") == 12)
   }
 }

@@ -17,6 +17,7 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.execution.usePartitionEvaluator", "true")
       .config(GraftSession.FileSystemConf)
+      .config(GraftSession.CommitProtocolConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
