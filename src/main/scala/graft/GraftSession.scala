@@ -47,13 +47,15 @@ import org.apache.spark.sql.SparkSession
   * ([[FileSystemConf]]). Without the native Hadoop library, Hadoop's
   * local FileSystem changes permissions by running `chmod` as a child
   * process, once for every file and directory a write creates (data
-  * files, their `.crc` siblings, partition directories, committer
-  * markers, manifests), and `FileContext` renames (Structured Streaming
-  * checkpoints and sinks) run `readlink` twice each; `LocalFs` does both
+  * files, their `.crc` siblings, partition directories, manifests),
+  * and `FileContext` renames (Structured Streaming checkpoints and
+  * sinks) run `readlink` twice each; `LocalFs` does both
   * through `java.nio` with the same modes and checksums. Both also bind
   * Spark's file commit protocol to [[graft.lake.LakeCommitProtocol]]
-  * ([[CommitProtocolConf]]): Spark's default, plus the list of files
-  * each lake write committed, which is what a lake commit records
+  * ([[CommitProtocolConf]]) for every file write, lake or not: each
+  * task writes its files once, under their final names, with no
+  * `_temporary` staging, no rename and no `_SUCCESS` marker, and hands
+  * back the list of files it wrote, which is what a lake commit records
   * instead of listing the table. Both bindings are a fixed part of the
   * session, not an option.
   *

@@ -1,6 +1,7 @@
 package graft.lake
 
-import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus,
+  Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row,
   SparkSession}
 import org.apache.spark.sql.functions._
@@ -57,12 +58,30 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * changes shape (files-per-partition follows the caller's
     * clustering); table contents are identical. The table's partition
     * columns are the ones its manifest records; the first append to a
-    * new table records `Schemas.partitionCols`. */
+    * new table records `Schemas.partitionCols`.
+    *
+    * An append whose version another writer committed first rebases: it
+    * re-reads the latest snapshot, checks its schema against it again
+    * and commits that snapshot's files plus its own as the next
+    * version. */
   def append(table: String, df: DataFrame, schema: StructType,
+      sortCols: Seq[String] = Nil, clustered: Boolean = false): Unit =
+    appendBatch(table, df, schema, None, sortCols, clustered)
+
+  /** [[append]] as micro-batch `batch` = (writer, batch id): a batch at
+    * or below the last one the table's latest snapshot records for its
+    * writer commits nothing, so a batch that a stream replays lands
+    * once. Every commit carries the record forward; a rollback takes its
+    * target's. */
+  private[graft] def appendBatch(table: String, df: DataFrame,
+      schema: StructType, batch: Option[(String, Long)],
       sortCols: Seq[String] = Nil, clustered: Boolean = false): Unit = {
+    def landed(m: Option[Manifest]) = batch.exists { case (w, id) =>
+      m.exists(_.batches.get(w).exists(_ >= id))
+    }
     val base = latestOption(table)
-    val (committed, parts) =
-      withLatest(table, base, schema, Schemas.partitionCols)
+    if (landed(base)) return
+    val (_, parts) = withLatest(table, base, schema, Schemas.partitionCols)
     val aligned = align(df, schema)
     val sorted =
       if (sortCols.nonEmpty && clustered)
@@ -71,9 +90,22 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
         aligned.repartition(parts.map(col): _*)
           .sortWithinPartitions((parts ++ sortCols).map(col): _*)
       else aligned
-    writeAndCommit(table, sorted.write.partitionBy(parts: _*), "append",
-      base, committed, parts)(written =>
-      Some(base.fold(Seq.empty[String])(_.files) ++ written))
+    writeAndCommit(table, sorted.write.partitionBy(parts: _*), "append") {
+      written =>
+        def onto(base: Option[Manifest]): Boolean = !landed(base) && {
+          val committed =
+            withLatest(table, base, schema, Schemas.partitionCols)._1
+          try {
+            commit(table, "append", base, committed, parts,
+              base.fold(Seq.empty[String])(_.files) ++ written, None,
+              batchesOf(base) ++ batch)
+            true
+          } catch { case _: FileAlreadyExistsException =>
+            onto(latestOption(table))
+          }
+        }
+        onto(base)
+    }
   }
 
   /** Lazy partitioned-table load of the latest snapshot, i.e.
@@ -104,11 +136,13 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
   //       schema <the table schema as Spark's one-line JSON>
   //       partitions <the table's partition columns, comma-separated>
   //       view <watermark> <source|keys|value>     (stats views only)
+  //       batch <batch id> <writer>      (one per writer of batch appends)
   //       <one data file per line, relative to the table dir>
   //     The file list is COMPLETE (not a delta — replay reads ONE
   //     manifest). Each commit builds it from the previous manifest and
-  //     the files its own write committed ([[LakeCommitProtocol]]),
-  //     never from a listing: [[append]] adds them; the one rewrite
+  //     the files its own write committed ([[LakeCommitProtocol]],
+  //     which writes each file once, under its final name), never from
+  //     a listing: [[append]] adds them; the one rewrite
   //     path behind every other mutation, stats views included
   //     ([[rewritePartitions]]), drops the touched partitions' files
   //     and adds them; [[rollbackTo]] takes its target's list. A file
@@ -117,21 +151,25 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
   //     read — latest, at-version, incremental, diff and the rewrites'
   //     own — reads with its snapshot's recorded schema and exactly its
   //     files, so no read infers a schema or lists the table. A
-  //     manifest with no schema or partitions line fails loudly;
+  //     manifest with no schema or partitions line fails loudly. The
+  //     `batch` lines are carried forward like the schema; a rollback
+  //     takes its target's ([[appendBatch]]);
   //   - no append, rewrite or rollback renames or deletes a committed
   //     data file, so every committed version stays READABLE and a
   //     DataFrame planned before a later commit keeps reading its own
   //     snapshot (spec'd in LakehouseSpec, RewritePathSpec). A commit
-  //     creates its manifest exclusively and never overwrites one; if
-  //     it fails after its write committed, it deletes that write's
-  //     files first, so a failed rewrite leaves the table as it was;
+  //     creates its manifest exclusively ([[LocalFs]]) and never
+  //     overwrites one, so of racing commits of one version exactly one
+  //     wins. The loser, if an append, rebases onto the winner and
+  //     takes the next version; a rewrite fails. A commit that fails
+  //     after its write committed deletes that write's files first, so
+  //     a failed rewrite leaves the table as it was;
   //   - [[expireSnapshots]] is the vacuum: it drops old manifests and
   //     deletes the files only they name — the one delete of a data
   //     file.
-  // Version assignment is not a transaction log: RACING writers still
-  // need the external catalog (concurrent writes into one table also
-  // share Hadoop's `<table>/_temporary`, which each job's cleanup
-  // deletes).
+  // Open: a rewrite is not validated against the commits that raced it
+  // (it fails instead of rebasing), and the files of a JVM killed
+  // mid-write are named by no manifest and deleted by nothing.
   // -----------------------------------------------------------------
 
   private val ManifestName = "v(\\d+)\\.txt".r
@@ -159,17 +197,19 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
   private val SchemaLine = "schema "
   private val PartitionsLine = "partitions "
   private val ViewLine = "view "
+  private val BatchLine = "batch "
 
   private def manifest(table: String, v: Int): Manifest = {
     val p = manifestPath(table, v)
     val fs = hadoopFs(p)
-    require(fs.exists(p),
-      s"no snapshot v$v for table '$table' (have v${currentVersion(table)})" +
-        " - never committed, or removed by expireSnapshots")
-    val in = fs.open(p)
-    val lines =
+    val lines = ManifestLock.synchronized {
+      require(fs.exists(p), s"no snapshot v$v for table '$table' " +
+        s"(have v${currentVersion(table)}) - never committed, or removed " +
+        "by expireSnapshots")
+      val in = fs.open(p)
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
       finally in.close()
+    }
     def field(i: Int, key: String, what: String): String = {
       val line = lines.lift(i).filter(_.startsWith(key))
       require(line.isDefined, s"snapshot v$v of '$table' records no " +
@@ -180,13 +220,20 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
       .asInstanceOf[StructType]
     val parts = field(2, PartitionsLine, "partition columns")
       .split(",").filter(_.nonEmpty).toSeq
-    val (view, files) = lines.drop(3).span(_.startsWith(ViewLine))
+    val (view, rest) = lines.drop(3).span(_.startsWith(ViewLine))
+    val (batches, files) = rest.span(_.startsWith(BatchLine))
     Manifest(v, lines.head.split(" op=", 2).lift(1).getOrElse("unknown"),
       schema, parts, view.headOption.map { l =>
         val Array(w, sig) = l.stripPrefix(ViewLine).split(" ", 2)
         View(w.toLong, sig)
-      }, files.filter(_.nonEmpty))
+      }, batches.map { l =>
+        val Array(id, writer) = l.stripPrefix(BatchLine).split(" ", 2)
+        writer -> id.toLong
+      }.toMap, files.filter(_.nonEmpty))
   }
+
+  private def batchesOf(m: Option[Manifest]): Map[String, Long] =
+    m.fold(Map.empty[String, Long])(_.batches)
 
   /** The latest committed snapshot's manifest; None = never committed. */
   private def latestOption(table: String): Option[Manifest] =
@@ -223,48 +270,51 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
           m.partitionCols)
     }
 
-  /** Commit `files`, `schema`, partition columns `parts` and a stats
-    * view's `view` state as the version after `base`. The manifest is
-    * created exclusively: a version that exists fails the commit and is
+  /** Commit `files`, `schema`, partition columns `parts`, a stats
+    * view's `view` state and the writers' last `batches` as the version
+    * after `base`. The manifest is created exclusively: a version that
+    * exists fails the commit with a `FileAlreadyExistsException` and is
     * never overwritten. Returns the version. */
   private def commit(table: String, op: String, base: Option[Manifest],
       schema: StructType, parts: Seq[String], files: Seq[String],
-      view: Option[View] = None): Int = {
+      view: Option[View], batches: Map[String, Long]): Int = {
     val v = base.fold(0)(_.v) + 1
     val p = manifestPath(table, v)
     val fs = hadoopFs(p)
-    fs.mkdirs(p.getParent)
-    val out = fs.create(p, false)
     val text = s"graft-manifest v=$v op=$op\n$SchemaLine${schema.json}\n" +
       s"$PartitionsLine${parts.mkString(",")}\n" +
       view.fold("")(w => s"$ViewLine${w.watermark} ${w.sig}\n") +
+      batches.toSeq.sorted.map { case (w, id) => s"$BatchLine$id $w\n" }
+        .mkString +
       files.sorted.map(_ + "\n").mkString
-    try out.write(text.getBytes("UTF-8"))
-    finally out.close()
+    ManifestLock.synchronized {
+      fs.mkdirs(p.getParent)
+      val out = fs.create(p, false)
+      try out.write(text.getBytes("UTF-8"))
+      finally out.close()
+    }
     v
   }
 
   /** Write `w` into the table directory (an append: every file gets a
-    * fresh name), then [[commit]] the version after `base` with the
-    * file list `files` makes of the files this write committed; None
-    * commits nothing. If anything fails once the write has committed,
-    * its files are deleted before the failure propagates, so no file
-    * is left that no manifest names. */
+    * fresh name, written in place), then commit with `commitWritten`,
+    * given the files this write committed; `false` means it committed
+    * nothing. If the commit fails or commits nothing, the write's files
+    * are deleted, so no file is left that no manifest names. */
   private def writeAndCommit(table: String, w: DataFrameWriter[Row],
-      op: String, base: Option[Manifest], schema: StructType,
-      parts: Seq[String], view: Option[View] = None)(
-      files: Seq[String] => Option[Seq[String]]): Unit = {
+      op: String)(commitWritten: Seq[String] => Boolean): Unit = {
     val id = java.util.UUID.randomUUID.toString
     w.mode("append").option(LakeCommitProtocol.WriteId, id).parquet(dir(table))
     val written = LakeCommitProtocol.take(id).getOrElse(throw
       new IllegalStateException(s"$op into '$table': the session does not " +
         "bind graft.lake.LakeCommitProtocol; build it with GraftSession"))
-    try files(written).foreach(commit(table, op, base, schema, parts, _, view))
-    catch { case e: Throwable =>
+    def drop(): Unit = {
       val root = new HPath(dir(table))
       written.foreach(r => hadoopFs(root).delete(new HPath(root, r), false))
-      throw e
     }
+    val kept = try commitWritten(written)
+    catch { case e: Throwable => drop(); throw e }
+    if (!kept) drop()
   }
 
   /** Read the table AS OF snapshot `asOf` — the Iceberg
@@ -427,12 +477,13 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * rollback semantics: history is preserved and the rollback is
     * itself a new commit (readable, re-rollback-able), never a
     * manifest deletion. The new commit records v's file list, schema,
-    * partition columns and view state, so the table reads exactly as
-    * `load(table, v)`; no file moves. Returns the new version number. */
+    * partition columns, view state and writers' batches, so the table
+    * reads exactly as `load(table, v)`; no file moves. Returns the new
+    * version number. */
   def rollbackTo(table: String, v: Int): Int = {
     val m = manifest(table, v)
     commit(table, s"rollback-to-v$v", latestOption(table), m.schema,
-      m.partitionCols, m.files, m.view)
+      m.partitionCols, m.files, m.view, m.batches)
   }
 
   // -----------------------------------------------------------------
@@ -537,14 +588,15 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
   private def writeStats(name: String, stats: DataFrame, keys: Seq[String],
       at: View, op: String, full: Boolean): Unit = {
     val t = mvTable(name)
+    val base = latestOption(t)
     val scope =
       if (full) (0 until StatsBuckets).map(Row(_))
       else partitionsOf(bucketed(stats, keys), Seq(BucketCol))._1
     val state =
       if (full) stats
-      else IncrementalAgg.merge(load(t).filter(col(BucketCol)
+      else IncrementalAgg.merge(read(t, base.get).filter(col(BucketCol)
         .isin(scope.map(_.get(0)): _*)).drop(BucketCol), stats, keys)
-    rewritePartitions(t, bucketed(state, keys), op, Some(scope),
+    rewritePartitions(t, base, bucketed(state, keys), op, Some(scope),
       newParts = Seq(BucketCol), view = Some(at))
   }
 
@@ -625,37 +677,43 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * every stats-view change): write, then commit once.
     *
     * `rows` are the complete new contents of the partitions they fall
-    * in. They are written into the table directory, one new file per
-    * partition (`order` sorts within it), beside the files they
-    * replace. The touched partitions are those the write produced
-    * files in plus `scope` (the partitions a caller rewrites even if no
-    * row of them survives); `scope = None` means the written partitions
-    * alone. The commit is the previous manifest minus the touched
-    * partitions' files plus the written ones, with `rows`' schema
-    * evolved onto the latest committed one as [[append]] does, the
-    * table's partition columns (`newParts` if this rewrite creates the
-    * table) and a stats view's new `view` state: one atomic manifest
-    * commit, so a reader sees every touched partition old or every one
-    * new. No file is renamed or deleted; a write that fails leaves the
-    * table as it was. A rewrite that touches no partition commits
-    * nothing, unless it moves a view's watermark. */
-  private def rewritePartitions(table: String, rows: DataFrame, op: String,
-      scope: Option[Seq[Row]] = None, order: Seq[Column] = Nil,
-      newParts: Seq[String] = Nil, view: Option[View] = None): Unit = {
-    val base = latestOption(table)
+    * in, computed from snapshot `base` (None: the table is new). They
+    * are written into the table directory, one new file per partition
+    * (`order` sorts within it), beside the files they replace. The
+    * touched partitions are those the write produced files in plus
+    * `scope` (the partitions a caller rewrites even if no row of them
+    * survives); `scope = None` means the written partitions alone. The
+    * commit is `base`'s manifest minus the touched partitions' files
+    * plus the written ones, with `rows`' schema evolved onto `base`'s
+    * as [[append]] does, the table's partition columns (`newParts` if
+    * this rewrite creates the table) and a stats view's new `view`
+    * state: one atomic manifest commit, as the version after `base`, so
+    * a reader sees every touched partition old or every one new. No
+    * file is renamed or deleted; a write that fails, or whose version
+    * another writer committed first, leaves the table as it was. A
+    * rewrite that touches no partition commits nothing, unless it moves
+    * a view's watermark. */
+  private def rewritePartitions(table: String, base: Option[Manifest],
+      rows: DataFrame, op: String, scope: Option[Seq[Row]] = None,
+      order: Seq[Column] = Nil, newParts: Seq[String] = Nil,
+      view: Option[View] = None): Unit = {
     val (committed, partCols) = withLatest(table, base, rows.schema, newParts)
     val prev = base.fold(Seq.empty[String])(_.files)
     if (scope.exists(_.isEmpty)) // nothing to rewrite; a view's watermark moves
-      return view.foreach(_ =>
-        commit(table, op, base, committed, partCols, prev, view))
+      return view.foreach(_ => commit(table, op, base, committed, partCols,
+        prev, view, batchesOf(base)))
     val parts = partCols.map(col)
     val w = rows.repartition(parts: _*)
       .sortWithinPartitions(parts ++ order: _*).write.partitionBy(partCols: _*)
-    writeAndCommit(table, w, op, base, committed, partCols, view) { written =>
+    writeAndCommit(table, w, op) { written =>
       val touched = scope.fold(Set.empty[String])(
         partitionRelDirs(_, partCols).toSet) ++ written.map(parentDir)
-      Option.when(touched.nonEmpty)(
-        prev.filterNot(f => touched(parentDir(f))) ++ written)
+      touched.nonEmpty && {
+        commit(table, op, base, committed, partCols,
+          prev.filterNot(f => touched(parentDir(f))) ++ written, view,
+          batchesOf(base))
+        true
+      }
     }
   }
 
@@ -671,20 +729,6 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     StructType(schema.fields :+ field)
   }
 
-  /** Bucketed catalog table: co-locates rows by hash(bucketCols) at
-    * write time so joins/aggregations on those columns run WITHOUT a
-    * shuffle (plan-verified in LakehouseSpec). The 100 TB play: bucket
-    * `observations` and the dimensions by implementation_id/test_id and
-    * the three-way join never exchanges the fact table. */
-  def writeBucketed(table: String, df: DataFrame, schema: StructType,
-      bucketCols: Seq[String], numBuckets: Int): Unit =
-    align(df, schema)
-      .write.mode("overwrite")
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
-
   /** Keyed upsert — MERGE semantics without a table format's ACID log:
     * rows of `updates` replace existing rows with the same `keys`, new
     * keys are inserted. Only the partitions PRESENT IN `updates` are
@@ -693,8 +737,7 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * partitions' files are never opened. At 100 TB the cost is
     * proportional to the touched partitions, not the table. Committed
     * as one snapshot across every touched partition
-    * ([[rewritePartitions]]); pair with an external catalog
-    * (Iceberg/Delta per BASELINE.json) when writers race.
+    * ([[rewritePartitions]]); a commit that raced it fails the upsert.
     *
     * `updates` align to the table's schema by column name: a column
     * they lack reads as a typed NULL if it is optional and fails the
@@ -713,8 +756,9 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     val kept = read(table, m)
       .join(broadcast(touchedDf), m.partitionCols, "left_semi")
       .join(up.select(keys.map(col): _*).distinct(), keys, "left_anti")
-    rewritePartitions(table, kept.unionByName(up, allowMissingColumns = true),
-      "upsert", Some(touched))
+    rewritePartitions(table, Some(m),
+      kept.unionByName(up, allowMissingColumns = true), "upsert",
+      Some(touched))
   }
 
   /** Per-partition file/byte statistics — the observability half of
@@ -742,9 +786,11 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * `compact`); a predicate (e.g. the fragmented partitions per
     * [[tableStats]]) rewrites only those (op `compactWhere`), the
     * per-partition-batch mode SCALE.md prescribes for 100 TB tables. */
-  def compact(table: String, partitionPredicate: Column = lit(true)): Unit =
-    rewritePartitions(table, load(table).filter(partitionPredicate),
+  def compact(table: String, partitionPredicate: Column = lit(true)): Unit = {
+    val m = latest(table)
+    rewritePartitions(table, Some(m), read(table, m).filter(partitionPredicate),
       if (partitionPredicate == lit(true)) "compact" else "compactWhere")
+  }
 
   /** Row-level delete: rewrite ONLY the partitions containing matching
     * rows (touched set via broadcast semi-join, like [[upsert]]),
@@ -760,7 +806,7 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     val survivors = cur
       .join(broadcast(touchedDf), m.partitionCols, "left_semi")
       .filter(!coalesce(predicate, lit(false)))
-    rewritePartitions(table, survivors, "deleteWhere", Some(touched))
+    rewritePartitions(table, Some(m), survivors, "deleteWhere", Some(touched))
   }
 
   /** Z-order compaction — [[compact]] with a multi-dimensional
@@ -774,7 +820,8 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
     * inside each partition's files differs. */
   def compactZOrder(table: String, dims: Seq[String],
       partitionPredicate: Column = lit(true)): Unit = {
-    val base = load(table).filter(partitionPredicate)
+    val m = latest(table)
+    val base = read(table, m).filter(partitionPredicate)
     // Order-PRESERVING 20-bit encoding per numeric dimension (hashing
     // would scramble the value space and void min/max skipping): scale
     // by the observed [min, max] — one small agg job, the same
@@ -793,7 +840,7 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
       ((col(d).cast("double") - lo) / span * ((1L << bitsPerDim) - 1))
         .cast("long")
     }
-    rewritePartitions(table, base, "compactZOrder",
+    rewritePartitions(table, Some(m), base, "compactZOrder",
       order = Seq(graft.plans.ZOrderExpr.zorder(enc: _*)))
   }
 
@@ -820,10 +867,16 @@ final class Lakehouse(spark: SparkSession, warehouse: String) {
 private object Lakehouse {
 
   /** One committed snapshot: its version, the op that made it, the
-    * table schema, its partition columns, a stats view's state and the
-    * data files, relative to the table dir. */
+    * table schema, its partition columns, a stats view's state, the last
+    * batch id of each writer of [[Lakehouse.appendBatch]] and the data
+    * files, relative to the table dir. */
   final case class Manifest(v: Int, op: String, schema: StructType,
-      partitionCols: Seq[String], view: Option[View], files: Seq[String])
+      partitionCols: Seq[String], view: Option[View],
+      batches: Map[String, Long], files: Seq[String])
+
+  /** Held while a manifest is written or read, so no thread of this JVM
+    * reads a manifest whose commit is still writing it. */
+  val ManifestLock = new Object
 
   /** A stats view's state: its watermark (the source version, or the
     * last micro-batch id, that it reflects) and its

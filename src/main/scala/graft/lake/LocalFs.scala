@@ -1,26 +1,30 @@
 package graft.lake
 
-import java.io.FileNotFoundException
+import java.io.{FileNotFoundException, IOException}
 import java.net.URI
 import java.nio.file.{Files, NoSuchFileException}
 import java.nio.file.attribute.PosixFilePermission
 import java.nio.file.attribute.PosixFilePermission._
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
-  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem,
+  FSDataOutputStream, FileAlreadyExistsException, FileStatus, FsConstants,
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.{FsAction, FsPermission}
+import org.apache.hadoop.util.Progressable
 
 /** The engine's `file:` FileSystem: Hadoop's checksummed
   * `LocalFileSystem` over [[LocalFs.Raw]], which changes permissions
-  * through `java.nio` instead of a child process.
+  * through `java.nio` instead of a child process, and whose create
+  * without overwrite is exclusive, so of two racing commits of one lake
+  * version exactly one wins.
   *
   * Without the native Hadoop library, `RawLocalFileSystem.setPermission`
   * runs `chmod` through `org.apache.hadoop.util.Shell` — one child
-  * process for every file and directory that Spark, Parquet, the output
-  * committer or a manifest commit creates, each run in turn inside the
-  * write. The mode bits are the ones Hadoop computed (umask applied), so
-  * files and directories get the same modes as with the stock FS.
+  * process for every file and directory that Spark, Parquet or a
+  * manifest commit creates, each run in turn inside the write. The mode
+  * bits are the ones Hadoop computed (umask applied), so files and
+  * directories get the same modes as with the stock FS.
   * Checksums are unchanged: `.crc` siblings are written and verified on
   * read. Listing, reading and committing are Hadoop's own code.
   *
@@ -32,7 +36,8 @@ final class LocalFs extends LocalFileSystem(new LocalFs.Raw)
 
 object LocalFs {
 
-  /** `RawLocalFileSystem` without child processes on the write path. */
+  /** `RawLocalFileSystem` without child processes on the write path,
+    * and with exclusive no-overwrite creates. */
   final class Raw extends RawLocalFileSystem {
 
     /** `chmod` through NIO. NIO cannot set the sticky bit, so only a
@@ -57,6 +62,39 @@ object LocalFs {
       if (Files.isSymbolicLink(pathToFile(f).toPath))
         super.getFileLinkStatus(f)
       else getFileStatus(f)
+
+    /** A create that must not overwrite claims the name atomically
+      * (`O_CREAT | O_EXCL`) before Hadoop opens the file. Hadoop checks
+      * `exists` and then opens a truncating stream, so two racing
+      * creates of one name could both succeed, the later one emptying
+      * the earlier one's file. */
+    override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+        replication: Short, blockSize: Long,
+        progress: Progressable): FSDataOutputStream = {
+      if (!overwrite) claim(f)
+      super.create(f, true, bufferSize, replication, blockSize, progress)
+    }
+
+    override def create(f: Path, permission: FsPermission,
+        overwrite: Boolean, bufferSize: Int, replication: Short,
+        blockSize: Long, progress: Progressable): FSDataOutputStream = {
+      if (!overwrite) claim(f)
+      super.create(f, permission, true, bufferSize, replication, blockSize,
+        progress)
+    }
+
+    /** Create `f` empty, failing if it exists; its parents are made as
+      * Hadoop's create makes them. */
+    private def claim(f: Path): Unit = {
+      val parent = f.getParent
+      if (parent != null && !mkdirs(parent))
+        throw new IOException(s"Mkdirs failed to create $parent")
+      try Files.createFile(pathToFile(f).toPath)
+      catch {
+        case _: java.nio.file.FileAlreadyExistsException =>
+          throw new FileAlreadyExistsException(s"File already exists: $f")
+      }
+    }
   }
 
   private def posix(p: FsPermission): java.util.Set[PosixFilePermission] = {

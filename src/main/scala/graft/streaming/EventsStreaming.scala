@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming extension (SURVEY §2.9: the reference names CI
@@ -86,7 +87,11 @@ object EventsStreaming {
     * file stream of raw arena cell exports is regrouped into observation
     * rows per micro-batch (the same EP2 plan as batch ingest) and
     * appended to the partitioned lakehouse, checkpointed and
-    * restart-incremental.
+    * restart-incremental. Each micro-batch is appended once: the append
+    * records its batch id under the query id the checkpoint keeps
+    * ([[graft.lake.Lakehouse.appendBatch]]), so a batch that the
+    * restarted query re-runs because its checkpoint commit did not land
+    * commits nothing.
     *
     * Batch-boundary note: the regroup is per micro-batch, so one
     * sequence-sheet step's cells must arrive in one file — which is how
@@ -100,12 +105,16 @@ object EventsStreaming {
       .writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+        // the stream's own thread carries its query id
+        val queryId = spark.sparkContext.getLocalProperty(
+          StreamExecution.QUERY_ID_KEY)
+        require(queryId != null, "a micro-batch outside its query's thread")
         // single-shuffle ingest per micro-batch (see clusterByProblem)
-        lake.append("observations",
+        lake.appendBatch("observations",
           graft.ingest.ArenaIngest.observationsFromArena(
             graft.ingest.ArenaIngest.clusterByProblem(batch), dataSetId),
-          graft.schema.Schemas.observations,
+          graft.schema.Schemas.observations, Some(s"stream $queryId" -> id),
           sortCols = Seq("implementation_id", "test_id", "step_id"),
           clustered = true)
       }

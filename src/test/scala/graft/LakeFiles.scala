@@ -9,12 +9,12 @@ object LakeFiles {
 
   /** The data files snapshot `v` of the table at `table` names: its
     * lines after the header, schema and partitions lines, less a stats
-    * view's `view` line. */
+    * view's `view` line and the writers' `batch` lines. */
   def manifest(table: File, v: Int): Set[String] = {
     val src = scala.io.Source.fromFile(
       new File(table, f"_manifests/v$v%08d.txt"), "UTF-8")
-    try src.getLines().drop(3)
-      .filter(l => l.nonEmpty && !l.startsWith("view ")).toSet
+    try src.getLines().drop(3).filter(l => l.nonEmpty &&
+      !l.startsWith("view ") && !l.startsWith("batch ")).toSet
     finally src.close()
   }
 
@@ -36,6 +36,15 @@ object LakeFiles {
       }
     walk(dir, "").toSet
   }
+
+  /** The paths under `dir` that commit machinery other than the
+    * manifest leaves: Hadoop's `_temporary` staging, Spark's
+    * `.spark-staging*` dirs, the `_SUCCESS` job marker and its checksum. */
+  def staged(dir: File): Set[String] =
+    onDisk(dir).filter(_.split('/').exists(s => s == "_temporary" ||
+      s.startsWith(".spark-staging") || s == "_SUCCESS" ||
+      s == "._SUCCESS.crc")) ++
+      Seq("_temporary").filter(new File(dir, _).exists())
 
   /** Relative paths of every `.parquet` file under `dir`. */
   def parquetOnDisk(dir: File): Set[String] =

@@ -12,8 +12,10 @@ import scala.jdk.CollectionConverters._
   * swap anywhere in the program; in `graft/lake` a checkpoint to break
   * the read/overwrite cycle and compaction's whole-table directory
   * swap; and in `Lakehouse` the staging and archive directories and any
-  * rename, since a committed file never moves. Nor may a lake read
-  * infer its schema beside the one its snapshot manifest records. */
+  * rename, since a committed file never moves. The commit protocol
+  * writes each file under its final name, so it neither builds on
+  * Hadoop's committer nor renames. Nor may a lake read infer its schema
+  * beside the one its snapshot manifest records. */
 class LakeRewriteGuardSpec extends AnyFunSuite {
 
   /** `root-relative path: pattern` for each banned pattern a file under
@@ -47,6 +49,16 @@ class LakeRewriteGuardSpec extends AnyFunSuite {
     val text = Files.readString(lakehouse)
     val hits = Seq("_archive", "_staging", ".rename(").filter(text.contains)
     assert(hits.isEmpty, s"$lakehouse: commit a manifest, move no file")
+  }
+
+  test("LakeCommitProtocol writes in place: no Hadoop committer, no " +
+      "rename") {
+    val protocol =
+      Paths.get("src/main/scala/graft/lake/LakeCommitProtocol.scala")
+    val text = Files.readString(protocol)
+    val hits = Seq("HadoopMapReduceCommitProtocol", ".rename(")
+      .filter(text.contains)
+    assert(hits.isEmpty, s"$protocol: write each file under its final name")
   }
 
   test("Lakehouse reads with its manifests' schema, never an inferred one") {

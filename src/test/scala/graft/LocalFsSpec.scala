@@ -7,8 +7,8 @@ import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumException, FileContext, FileSystem,
-  LocalFileSystem, Path => HPath}
+import org.apache.hadoop.fs.{ChecksumException, FileAlreadyExistsException,
+  FileContext, FileSystem, LocalFileSystem, Path => HPath}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -155,6 +155,33 @@ class LocalFsSpec extends SparkSpec {
       spark.read.parquet(victim.getPath).collect())
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(_.isInstanceOf[ChecksumException]), e)
+  }
+
+  test("of racing no-overwrite creates of one file, exactly one wins") {
+    val fs = new LocalFs
+    fs.initialize(URI.create("file:///"), new Configuration())
+    val dir = new File(tmpDir("localfs-race"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val wins = (0 until 200).map { i =>
+        val p = new HPath(new File(dir, s"v$i").toURI)
+        val go = new java.util.concurrent.CountDownLatch(1)
+        val racers = (0 until 4).map(_ => pool.submit(
+          new java.util.concurrent.Callable[Boolean] {
+            def call(): Boolean = {
+              go.await()
+              try { fs.create(p, false).close(); true }
+              catch { case _: FileAlreadyExistsException => false }
+            }
+          }))
+        go.countDown()
+        racers.count(_.get())
+      }
+      assert(wins.forall(_ == 1), wins.mkString(","))
+    } finally {
+      pool.shutdownNow()
+      fs.close()
+    }
   }
 
   test("a sticky-bit permission falls back to Hadoop's chmod; others go " +

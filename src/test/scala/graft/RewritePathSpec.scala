@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{StringType, StructField}
 import graft.lake.Lakehouse
 import graft.metrics.JobCounter
 import graft.schema.Schemas
-import LakeFiles.{manifest, onDisk, parquetOnDisk, partitionOf}
+import LakeFiles.{manifest, onDisk, parquetOnDisk, partitionOf, staged}
 
 /** Every Lakehouse mutation that replaces files (upsert, deleteWhere,
   * compact with and without a predicate, compactZOrder) runs through one
@@ -16,7 +16,8 @@ import LakeFiles.{manifest, onDisk, parquetOnDisk, partitionOf}
   * files plus the op's new files, replaced files stay on disk where
   * they were, every earlier version reads back unchanged, nothing is
   * staged or archived, and a rewrite that fails leaves the table as it
-  * was. */
+  * was. Appends that race rebase onto each other; a rewrite that races
+  * fails. */
 class RewritePathSpec extends SparkSpec {
   private val T = "observations"
   private val keys = Seq("data_set_id", "problem_id", "implementation_id",
@@ -40,6 +41,7 @@ class RewritePathSpec extends SparkSpec {
     lake.append(T, obsIn("p1").union(obsIn("p2")).union(obsIn("p:3")),
       Schemas.observations)
     lake.append(T, obsIn("p1"), Schemas.observations)
+    assert(staged(table).isEmpty, "append left commit machinery")
     val snaps = scala.collection.mutable.Map(
       1 -> canon(lake.load(T, 1)), 2 -> canon(lake.load(T, 2)))
     val p = Seq("p1", "p2", "p%3A3")
@@ -71,6 +73,7 @@ class RewritePathSpec extends SparkSpec {
       }
       Seq("_staging", "_archive").foreach(d =>
         assert(!new File(table, d).exists(), s"$op made $d"))
+      assert(staged(table).isEmpty, s"$op left commit machinery")
       disk = now
     }
     def count(c: Column) =
@@ -114,6 +117,13 @@ class RewritePathSpec extends SparkSpec {
     assert(lake.currentVersion(T) == 8)
     assert(parquetOnDisk(table) == disk.filter(_.endsWith(".parquet")))
     assert(!new File(table, "_staging").exists())
+
+    // a stats view is a lake table, written through the same path
+    lake.refreshStats("by_problem", T, Seq("problem_id"),
+      "execution_time_ms")
+    val view = new File(wh, "_mv/by_problem")
+    assert(parquetOnDisk(view).nonEmpty)
+    assert(staged(view).isEmpty, "refreshStats left commit machinery")
   }
 
   test("a rewrite whose rows fail to evaluate leaves the table as it was") {
@@ -218,6 +228,19 @@ class RewritePathSpec extends SparkSpec {
     }
   }
 
+  /** A nondeterministic identity on `c` that, while the write runs,
+    * commits `from`'s manifest again as version `to`, as another writer
+    * would. */
+  private def racing(c: Column, from: File, to: File): Column = {
+    val (f, t) = (from.getPath, to.getPath)
+    udf { (s: String) =>
+      try java.nio.file.Files.copy(java.nio.file.Paths.get(f),
+        java.nio.file.Paths.get(t))
+      catch { case _: java.nio.file.FileAlreadyExistsException => () }
+      s
+    }.asNondeterministic()(c)
+  }
+
   test("a commit whose version is taken overwrites nothing and leaves " +
       "no file") {
     val wh = tmpDir("wh-taken")
@@ -225,24 +248,58 @@ class RewritePathSpec extends SparkSpec {
     val lake = new Lakehouse(spark, wh)
     lake.append(T, obsIn("p1"), Schemas.observations)
     val files = parquetOnDisk(table)
-    val v1 = new File(table, "_manifests/v00000001.txt").toPath
-    val v2 = new File(table, "_manifests/v00000002.txt").toPath
-    // another writer commits v2 while this append's write runs
-    val (from, to) = (v1.toString, v2.toString)
-    val race = udf { (s: String) =>
-      try java.nio.file.Files.copy(java.nio.file.Paths.get(from),
-        java.nio.file.Paths.get(to))
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      s
-    }.asNondeterministic()
+    val v1 = new File(table, "_manifests/v00000001.txt")
+    val v2 = new File(table, "_manifests/v00000002.txt")
+    // another writer commits v2 while this rewrite runs
     intercept[java.io.IOException] {
-      lake.append(T, obsIn("p2").withColumn("output", race(col("output"))),
-        Schemas.observations)
+      lake.upsert(T, Fixtures.observations.limit(1)
+        .withColumn("output", racing(col("output"), v1, v2)), keys)
     }
-    assert(java.nio.file.Files.readString(v2) ==
-      java.nio.file.Files.readString(v1), "v2 was overwritten")
+    assert(java.nio.file.Files.readString(v2.toPath) ==
+      java.nio.file.Files.readString(v1.toPath), "v2 was overwritten")
     assert(parquetOnDisk(table) == files, "the failed commit left its files")
     assert(lake.load(T, 2).count() == 12)
+  }
+
+  test("an append whose version is taken rebases onto the new latest") {
+    val wh = tmpDir("wh-rebase")
+    val table = new File(wh, T)
+    val lake = new Lakehouse(spark, wh)
+    lake.append(T, obsIn("p1"), Schemas.observations)
+    val v1 = new File(table, "_manifests/v00000001.txt")
+    val v2 = new File(table, "_manifests/v00000002.txt")
+    lake.append(T, obsIn("p2").withColumn("output",
+      racing(col("output"), v1, v2)), Schemas.observations)
+    assert(java.nio.file.Files.readString(v2.toPath) ==
+      java.nio.file.Files.readString(v1.toPath), "v2 was overwritten")
+    assert(LakeFiles.versions(table) == Seq(1, 2, 3))
+    assert(manifest(table, 3) -- manifest(table, 2) ==
+      parquetOnDisk(table) -- manifest(table, 1))
+    assert(lake.load(T, 3).count() == 24)
+    assert(lake.observations.filter(col("problem_id") === "p2").count() ==
+      12)
+  }
+
+  test("racing appends: every row lands and the versions run 1..N*k") {
+    val wh = tmpDir("wh-racing")
+    val table = new File(wh, T)
+    val lake = new Lakehouse(spark, wh)
+    val (n, k) = (4, 3)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    try {
+      val writers = (0 until n).map(w => pool.submit(new Runnable {
+        def run(): Unit = (0 until k).foreach(b =>
+          lake.append(T, obsIn(s"w$w-b$b"), Schemas.observations))
+      }))
+      writers.foreach(_.get(10, java.util.concurrent.TimeUnit.MINUTES))
+    } finally pool.shutdownNow()
+    assert(LakeFiles.versions(table) == (1 to n * k))
+    assert(staged(table).isEmpty)
+    val perProblem = lake.observations.groupBy("problem_id").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(perProblem == (for (w <- 0 until n; b <- 0 until k)
+      yield s"w$w-b$b" -> 12L).toMap)
+    assert(parquetOnDisk(table) == manifest(table, n * k))
   }
 
   test("upsert into an evolved table whose first file predates the " +

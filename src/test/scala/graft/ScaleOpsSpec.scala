@@ -118,32 +118,6 @@ class ScaleOpsSpec extends SparkSpec {
       Seq(1L, 2L))
   }
 
-  test("bucketed tables join without a shuffle") {
-    val wh = tmpDir("whbucket")
-    val lake = new graft.lake.Lakehouse(spark, wh)
-    lake.writeBucketed("obs_b", Fixtures.observations,
-      graft.schema.Schemas.observations, Seq("implementation_id"), 4)
-    lake.writeBucketed("code_b", Fixtures.code,
-      graft.schema.Schemas.codeImplementations,
-      Seq("implementation_id"), 4)
-    val spark2 = spark
-    // disable broadcast so the join strategy decision is about bucketing
-    spark2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val j = spark2.table("obs_b")
-        .join(spark2.table("code_b"), Seq("implementation_id"))
-        .groupBy("implementation_id").count()
-      val plan = j.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucketed join should not shuffle:\n$plan")
-      assert(j.count() == 3)
-    } finally {
-      spark2.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark2.sql("DROP TABLE obs_b")
-      spark2.sql("DROP TABLE code_b")
-    }
-  }
-
   test("lakehouse SQL: query() sees a new partition, compact adds no row") {
     val wh = tmpDir("whsql")
     val lake = new graft.lake.Lakehouse(spark, wh)

@@ -230,6 +230,26 @@ class StreamingSpec extends SparkSpec {
     assert(lake.observations.count() == 4)
   }
 
+  test("streaming arena ingestion: a replayed micro-batch appends once") {
+    val srcDir = tmpDir("arena-replay-src")
+    val ckDir = tmpDir("arena-replay-ck")
+    val lake = new graft.lake.Lakehouse(spark, tmpDir("arena-replay-wh"))
+    def run() = EventsStreaming.streamArenaIngest(spark, srcDir,
+      Fixtures.rawArena.schema, lake, "CI", ckDir).awaitTermination(120000)
+    Fixtures.rawArena.coalesce(1).write.mode("append").parquet(srcDir)
+    run()
+    assert(lake.observations.count() == 2)
+    // batch 0's rows landed but its checkpoint commit did not: the
+    // restarted query re-runs batch 0 with the same id
+    val commit0 = java.nio.file.Paths.get(ckDir, "commits", "0")
+    java.nio.file.Files.delete(commit0)
+    java.nio.file.Files.deleteIfExists(commit0.resolveSibling(".0.crc"))
+    run()
+    assert(new java.io.File(ckDir, "commits/0").isFile)
+    assert(lake.observations.count() == 2)
+    assert(lake.currentVersion("observations") == 1)
+  }
+
   test("sessionize without open-session emission holds back the tail") {
     val out = EventsStreaming.sessionize(spark, eventsDf, emitOpen = false)
       .collect().sortBy(_.session_start.getTime)
