@@ -28,10 +28,16 @@ import org.apache.spark.sql.SparkSession
   * `CanonicalQueries.interactive` on the pruned input for single-stage
   * execution. Each collect then runs through
   * [[graft.plans.ResultCollectExec]] (the extensions' physical rule, in
-  * both profiles): one job whose function the closure cleaner does not
-  * re-parse Spark's `RDD` and `SparkContext` classes for, which was the
-  * largest fixed per-query cost on this path (31% of the driver's CPU
-  * samples on a 4-core host). Each pruned scan reads through
+  * both profiles). On a local master a one-partition, narrow read of at
+  * most `spark.sql.autoBroadcastJoinThreshold` bytes of files, which is
+  * every per-problem collect and both join broadcasts, runs on the
+  * calling thread with no Spark job: no DAG scheduling, task binary
+  * broadcast or executor hand-off (`interactive` `pass_ms` 107.7 →
+  * 86.1 ms scaled, median of 10 alternating pairs on a 4-core host).
+  * Any other collect is one job whose function the closure cleaner does
+  * not re-parse Spark's `RDD` and `SparkContext` classes for, which was
+  * the largest fixed per-query cost on this path before (31% of the
+  * driver's CPU samples on a 4-core host). Each pruned scan reads through
   * [[graft.lake.ParquetFormat]], whose reader broadcast of the Hadoop
   * conf leaves out the per-key sources Hadoop gzips one by one (8–10 ms
   * per scan before, 2–3 ms after, on the same host). With AQE off, the

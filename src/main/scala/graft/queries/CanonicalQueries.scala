@@ -14,7 +14,10 @@ import graft.plans.{PreparedPlans, SigListAgg}
   *
   * Scale notes: per-problem queries operate on one pruned partition;
   * the dimension inputs to the three-way join are broadcast; clustering
-  * hashes fingerprints to fixed-width keys before its final shuffle.
+  * hashes fingerprints to fixed-width keys before its final shuffle. On
+  * a local master each per-problem collect, both broadcasts included, is
+  * a small local read that [[graft.plans.ResultCollectExec]] computes on
+  * the calling thread, so a per-problem query starts no Spark job.
   */
 object CanonicalQueries {
 
@@ -22,11 +25,14 @@ object CanonicalQueries {
     * input single-partition (`coalesce(1)` — no shuffle, and
     * `SinglePartition` output partitioning satisfies every downstream
     * `ClusteredDistribution`/`AllTuples` requirement), so an entire
-    * canonical query collapses to ONE stage with ZERO exchanges — one
-    * task over a few hundred rows instead of a multi-stage job whose
-    * scheduling dominates. Measured ~2× latency cut on every canonical
-    * query at reference problem sizes. Use ONLY on pruned inputs (one
-    * problem's partition); the batch path keeps full parallelism. */
+    * canonical query collapses to ONE stage with ZERO exchanges instead
+    * of a multi-stage job whose scheduling dominates (measured ~2×
+    * latency cut on every canonical query at reference problem sizes).
+    * That one partition over one pruned partition's files is what
+    * [[graft.plans.ResultCollectExec]] computes on the calling thread, so
+    * on a local master the query runs no job and no task at all. Use ONLY
+    * on pruned inputs (one problem's partition); the batch path keeps
+    * full parallelism. */
   def interactive(prunedPartition: DataFrame): DataFrame =
     prunedPartition.coalesce(1)
 

@@ -101,6 +101,14 @@ class ResultCollectSpec extends SparkSpec {
     ours
   }
 
+  private def chain(t: Throwable): Seq[String] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(_.getClass.getName).toSeq
+
+  private def rootMessage(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq.last
+      .getMessage
+
   private def interactiveTables = Seq(Fixtures.observations,
     Fixtures.code, Fixtures.tests).map(CanonicalQueries.interactive)
 
@@ -335,4 +343,57 @@ class ResultCollectSpec extends SparkSpec {
       assert(chain(viaDataset) == chain(theirs))
     }
   }
+
+  /** A file-backed read of ids 0-19 in one Parquet file, one partition. */
+  private def oneFileIds(): org.apache.spark.sql.DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("rc-ids").toString +
+      "/t"
+    spark.range(0, 20, 1, 1).write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private def failing(df: org.apache.spark.sql.DataFrame) = df.select(
+    when(col("id") === 13, raise_error(lit("boom 13")))
+      .otherwise(col("id")).as("id"))
+
+  test("parity: a failing task surfaces the same exception class and " +
+      "cause chain from a single-partition file read") {
+    withAqe(false) {
+      val df = failing(oneFileIds())
+      val rc = df.queryExecution.executedPlan.asInstanceOf[ResultCollectExec]
+      // the collect that fails is the driver run's; the job then runs
+      assert(rc.gateAdmits, rc)
+      val ours = intercept[Exception](rc.executeCollect())
+      assert(rc.driverRun.isEmpty, "the failed driver run kept its rows")
+      val theirs = intercept[Exception](rc.child.executeCollect())
+      assert(chain(ours) == chain(theirs))
+      assert(rootMessage(ours) == rootMessage(theirs))
+      assert(rootMessage(ours).contains("boom 13"))
+      val viaDataset = intercept[Exception](df.collect())
+      assert(chain(viaDataset) == chain(theirs))
+    }
+  }
+
+  test("parity: a failing join broadcast surfaces the same exception " +
+      "class and cause chain") {
+    withAqe(false) {
+      val ids = oneFileIds()
+      def join() = ids.join(broadcast(failing(ids)), "id")
+      val viaDriver = join()
+      val sides = viaDriver.queryExecution.executedPlan.collect {
+        case b: BroadcastExchangeExec => b.child
+      }
+      val Seq(side: ResultCollectExec) = sides
+      assert(side.gateAdmits, side)
+      val viaJob = join()
+      wrappers(viaJob.queryExecution.executedPlan)
+        .foreach(_.forcePath = Some(false))
+      val ours = intercept[Exception](viaDriver.collect())
+      val theirs = intercept[Exception](viaJob.collect())
+      assert(chain(ours) == chain(theirs))
+      assert(rootMessage(ours) == rootMessage(theirs))
+      assert(rootMessage(ours).contains("boom 13"))
+    }
+  }
 }
+
